@@ -1,14 +1,13 @@
-"""Cross-interop of the from-spec codecs vs the REFERENCE
+"""Cross-interop of the compression seam vs the REFERENCE
 implementations bundled in Spark's JVM.
 
 The sandbox has no python-snappy/lz4/zstandard, but the JVM on every
 Spark classpath carries the real codecs: zstd-jni (the C zstd the
 reference's Go bindings wrap), xerial snappy-java (the same raw block
 format as the Go ``snappy.Encode`` the reference calls), and lz4-java
-(standard LZ4 frames). Driving them through py4j turns the from-spec
-twins' conformance claims into measured facts — every wire here is
-produced or consumed by the reference implementation, not by our own
-code."""
+(standard LZ4 frames). Driving them through py4j checks the seam's
+wires in both directions — every wire here is produced or consumed by
+a reference implementation, not by the seam itself."""
 
 from __future__ import annotations
 
@@ -16,9 +15,11 @@ import random
 
 import pytest
 
-from tigate_spark.functions import lz4_codec as lz
-from tigate_spark.functions import snappy_codec as sc
-from tigate_spark.functions import zstd_codec as z
+from tigate_spark.functions.compress import (
+    CodecError,
+    compress_bytes,
+    decompress_bytes,
+)
 
 
 @pytest.fixture(scope="module")
@@ -43,21 +44,22 @@ def _jvm(spark):
 
 
 def test_zstd_decodes_reference_c_frames(spark, corpora):
-    """zstd-jni (the C implementation) at levels 1/3/12/19: the
-    from-spec decoder reads every frame — FSE-compressed sequence
-    tables, Huffman literals, treeless blocks, RLE blocks, whatever
-    the real compressor chose per corpus/level."""
+    """zstd-jni (the C implementation) at levels 1/3/12/19: the seam
+    reads every frame — FSE-compressed sequence tables, Huffman
+    literals, treeless blocks, RLE blocks, whatever the real compressor
+    chose per corpus/level."""
     Zstd = _jvm(spark).com.github.luben.zstd.Zstd
     for name, data in corpora.items():
         for level in (1, 3, 12, 19):
             wire = bytes(Zstd.compress(data, level))
-            assert z.decompress(wire) == data, (name, level)
+            assert decompress_bytes("zstd", wire) == data, (name, level)
 
 
 def test_zstd_reference_reads_our_frames(spark, corpora):
     Zstd = _jvm(spark).com.github.luben.zstd.Zstd
     for name, data in corpora.items():
-        back = bytes(Zstd.decompress(z.compress(data), len(data)))
+        wire = compress_bytes("zstd", data)
+        back = bytes(Zstd.decompress(wire, len(data)))
         assert back == data, name
 
 
@@ -66,8 +68,27 @@ def test_snappy_cross_interop_both_directions(spark, corpora):
     snappy.Encode/Decode): both directions byte-correct."""
     Snappy = _jvm(spark).org.xerial.snappy.Snappy
     for name, data in corpora.items():
-        assert sc.decompress(bytes(Snappy.compress(data))) == data, name
-        assert bytes(Snappy.uncompress(sc.compress(data))) == data, name
+        wire = bytes(Snappy.compress(data))
+        assert decompress_bytes("snappy", wire) == data, name
+        wire = compress_bytes("snappy", data)
+        assert bytes(Snappy.uncompress(wire)) == data, name
+
+
+def _lz4_java_frame(spark, data: bytes, *flags: str) -> bytes:
+    """``data`` as lz4-java's LZ4FrameOutputStream writes it (64 KiB
+    blocks), with the given FLG bits on top of B.Indep."""
+    jvm = _jvm(spark)
+    Bits = getattr(jvm.net.jpountz.lz4, "LZ4FrameOutputStream$FLG$Bits")
+    Size = getattr(jvm.net.jpountz.lz4, "LZ4FrameOutputStream$BLOCKSIZE")
+    bits = spark.sparkContext._gateway.new_array(Bits, 1 + len(flags))
+    for i, flag in enumerate(("BLOCK_INDEPENDENCE",) + flags):
+        bits[i] = getattr(Bits, flag)
+    baos = jvm.java.io.ByteArrayOutputStream()
+    fos = jvm.net.jpountz.lz4.LZ4FrameOutputStream(
+        baos, Size.SIZE_64KB, bits)
+    fos.write(data)
+    fos.close()
+    return bytes(baos.toByteArray())
 
 
 def test_lz4_frame_cross_interop_both_directions(spark, corpora):
@@ -79,13 +100,35 @@ def test_lz4_frame_cross_interop_both_directions(spark, corpora):
         fos.close()
         wire = bytes(baos.toByteArray())
         assert wire[:4] == (0x184D2204).to_bytes(4, "little")
-        assert lz.frame_decompress(wire) == data, name
-        # reverse: lz4-java reads OUR frames (py4j maps bytes -> byte[])
-        bais = jvm.java.io.ByteArrayInputStream(lz.frame_compress(data))
+        assert decompress_bytes("lz4", wire) == data, name
+        # reverse: lz4-java reads the seam's frames (py4j maps bytes ->
+        # byte[])
+        bais = jvm.java.io.ByteArrayInputStream(compress_bytes("lz4", data))
         fis = jvm.net.jpountz.lz4.LZ4FrameInputStream(bais)
         got = bytes(fis.readAllBytes())
         fis.close()
         assert got == data, name
+
+
+@pytest.mark.parametrize("flags", [("CONTENT_CHECKSUM",),
+                                   ("BLOCK_CHECKSUM",),
+                                   ("CONTENT_CHECKSUM", "BLOCK_CHECKSUM")],
+                         ids=["content", "block", "content+block"])
+def test_lz4_java_checksummed_frames_decode(spark, corpora, flags):
+    """lz4-java frames carrying content and/or block checksums decode
+    through the seam, and a flipped payload byte is rejected by the
+    checksum the frame carries."""
+    for name, data in corpora.items():
+        wire = _lz4_java_frame(spark, data, *flags)
+        flg = wire[4]
+        assert bool(flg & (1 << 2)) == ("CONTENT_CHECKSUM" in flags)
+        assert bool(flg & (1 << 4)) == ("BLOCK_CHECKSUM" in flags)
+        assert decompress_bytes("lz4", wire) == data, (name, flags)
+    data = corpora["json-ish"]
+    bad = bytearray(_lz4_java_frame(spark, data, *flags))
+    bad[len(bad) // 2] ^= 0x01
+    with pytest.raises(CodecError, match="(?i)checksum"):
+        decompress_bytes("lz4", bytes(bad))
 
 
 def test_zstd_hypothesis_vs_reference_c(spark):
@@ -111,136 +154,49 @@ def test_zstd_hypothesis_vs_reference_c(spark):
             data = bytes(rng.choice(b"aab") for _ in range(n))
         level = rng.choice((1, 2, 3, 6, 12, 19, 22))
         wire = bytes(Zstd.compress(data, level))
-        assert z.decompress(wire) == data, (trial, kind, n, level)
+        assert decompress_bytes("zstd", wire) == data, (trial, kind, n, level)
 
 
 def test_zstd_our_compressed_blocks_really_compress_and_jni_reads(
         spark, corpora):
-    """The encoder's compressed-block path actually engages (wire
-    smaller than input on matchable corpora) and the reference C
-    implementation decodes those frames byte-exact."""
+    """The seam's frames really compress (wire smaller than half the
+    input on matchable corpora) and the reference C implementation
+    decodes them byte-exact, content checksum included."""
     Zstd = _jvm(spark).com.github.luben.zstd.Zstd
     for name in ("repetitive", "json-ish", "mixed"):
         data = corpora[name]
-        wire = z.compress(data)
+        wire = compress_bytes("zstd", data)
         assert len(wire) < len(data) // 2, (name, len(wire), len(data))
         assert bytes(Zstd.decompress(wire, len(data))) == data, name
 
 
 def test_zstd_huffman_only_blocks_jni_reads(spark):
-    """r14: ASCII data with NO matches compresses through the
-    Huffman-literals-only path (nseq=0 sequences section, direct-weight
-    tree description) and the reference C implementation reads it."""
+    """ASCII data with NO matches compresses through Huffman-coded
+    literals alone, and the reference C implementation reads it."""
     import random as _r
 
     rng = _r.Random(11)
     data = bytes(rng.randrange(32, 127) for _ in range(60000))
-    wire = z.compress(data)
+    wire = compress_bytes("zstd", data)
     assert len(wire) < len(data)  # Huffman gain on 95-symbol alphabet
     Zstd = _jvm(spark).com.github.luben.zstd.Zstd
     assert bytes(Zstd.decompress(wire, len(data))) == data
-    assert z.decompress(wire) == data
-
-
-def test_zstd_custom_fse_tables_jni_reads(spark):
-    """r15: custom FSE-described sequence tables (mode 2) — a
-    skewed-sequence corpus engages them (asserted via the lane
-    planner) and the reference C implementation decodes the frame
-    byte-exact; RLE sequence lanes likewise."""
-    data = b"".join(b'{"id":%d,"user":"u%d","ev":"click","v":%d}\n'
-                    % (i, i % 97, i * 7 % 1000) for i in range(4000))
-    modes = []
-    orig = z._lane_plan
-
-    def spy(syms, kind, prev=None):
-        plan = orig(syms, kind, prev)
-        modes.append(plan[0])
-        return plan
-
-    z._lane_plan = spy
-    try:
-        wire = z.compress(data)
-    finally:
-        z._lane_plan = orig
-    assert 2 in modes, modes
-    Zstd = _jvm(spark).com.github.luben.zstd.Zstd
-    assert bytes(Zstd.decompress(wire, len(data))) == data
-    assert z.decompress(wire) == data
-    rle_data = b"ABCDEFGH" * 8000
-    rle_wire = z.compress(rle_data)
-    assert bytes(Zstd.decompress(rle_wire, len(rle_data))) == rle_data
+    assert decompress_bytes("zstd", wire) == data
 
 
 def test_zstd_fse_weights_description_jni_reads(spark):
-    """r15: FSE-compressed Huffman-weight descriptions (§4.2.1.2, two
-    interleaved ANS states, over-read termination) — a >128-symbol
-    alphabet forces the form (direct weights can't express it) and the
+    """A >128-symbol literal alphabet (Huffman weights then need the
+    FSE-compressed description, §4.2.1.2) still compresses, and the
     reference C implementation decodes the frame byte-exact."""
     import random as _r
 
     rng = _r.Random(5)
     data = bytes(rng.randrange(130, 250) for _ in range(50000))
-    wire = z.compress(data)
+    wire = compress_bytes("zstd", data)
     assert len(wire) < len(data)  # Huffman engages above symbol 128
     Zstd = _jvm(spark).com.github.luben.zstd.Zstd
     assert bytes(Zstd.decompress(wire, len(data))) == data
-    assert z.decompress(wire) == data
-    # ascii corpus: the selector may pick either form; whichever wins,
-    # jni must read it
+    assert decompress_bytes("zstd", wire) == data
     data2 = bytes(rng.randrange(32, 127) for _ in range(60000))
-    wire2 = z.compress(data2)
+    wire2 = compress_bytes("zstd", data2)
     assert bytes(Zstd.decompress(wire2, len(data2))) == data2
-
-
-def test_zstd_repeat_mode_jni_reads(spark):
-    """r15: a frame with cross-block Repeat_Mode lanes (forced by a
-    stride corpus whose per-block histograms are identical) decodes
-    byte-exact on the reference C implementation."""
-    modes = []
-    orig = z._lane_plan
-
-    def spy(syms, kind, prev=None):
-        plan = orig(syms, kind, prev)
-        modes.append(plan[0])
-        return plan
-
-    z._lane_plan = spy
-    try:
-        data = b"ABCDEFGH" * 40000
-        wire = z.compress(data)
-    finally:
-        z._lane_plan = orig
-    assert 3 in modes, modes
-    Zstd = _jvm(spark).com.github.luben.zstd.Zstd
-    assert bytes(Zstd.decompress(wire, len(data))) == data
-    assert z.decompress(wire) == data
-
-
-def test_zstd_treeless_literals_jni_reads(spark):
-    """r15: frames whose later blocks carry TREELESS literal sections
-    decode byte-exact on the reference C implementation — with this the
-    encoder emits every form its decoder accepts."""
-    import random as _r
-
-    rng = _r.Random(4)
-    words = [bytes(rng.choice(b"abcdefghijklmnopqrstuvwxyz")
-                   for _ in range(rng.randrange(3, 9))) for _ in range(500)]
-    text = b" ".join(rng.choice(words) for _ in range(120000))
-    ltypes = []
-    orig = z._huffman_literals_section
-
-    def spy(lits, huff_ctx=None):
-        sec = orig(lits, huff_ctx=huff_ctx)
-        if sec is not None:
-            ltypes.append(sec[0] & 3)
-        return sec
-
-    z._huffman_literals_section = spy
-    try:
-        wire = z.compress(text)
-    finally:
-        z._huffman_literals_section = orig
-    assert 3 in ltypes, ltypes
-    Zstd = _jvm(spark).com.github.luben.zstd.Zstd
-    assert bytes(Zstd.decompress(wire, len(text))) == text
-    assert z.decompress(wire) == text

@@ -3,6 +3,8 @@ quantization, the cosine-kernel corpus) are bytes-gated like
 scan_fan_out — a no-op once the input is big enough to feed the scan
 its own splits, the small-input repartition otherwise."""
 
+import os
+
 from pyspark.sql import functions as F
 
 from tigate_spark.functions import dedup as dd
@@ -49,6 +51,35 @@ def test_unsizeable_input_keeps_fan_out(spark, monkeypatch):
         F.lit("one two three four five six").alias("text"),
     )
     assert _has_fan_out(dd.with_shingles(df))
+
+
+def test_one_unstatable_file_does_not_unsize_the_scan(
+        spark, sf_dir, tmp_path, monkeypatch):
+    # three input files, one failing to stat: the other two still exceed
+    # the (shrunk) gate, so no fan-out; only when no file can be sized
+    # does the fan-out come back
+    out = str(tmp_path / "docs")
+    load_table(spark, sf_dir, "documents").repartition(3).write.parquet(out)
+    docs = spark.read.parquet(out)
+    paths = batch.local_paths_from_input_files(docs.inputFiles())
+    assert len(paths) == 3
+    monkeypatch.setattr(batch, "_MAX_SPLIT_BYTES", 1)
+    monkeypatch.setattr(batch, "FAN_OUT_MAX_BYTES", 1)
+    real_getsize = os.path.getsize
+
+    def getsize(p):
+        if p == paths[0]:
+            raise FileNotFoundError(p)
+        return real_getsize(p)
+
+    monkeypatch.setattr(os.path, "getsize", getsize)
+    assert not _has_fan_out(dd.with_shingles(docs))
+
+    def never(p):
+        raise FileNotFoundError(p)
+
+    monkeypatch.setattr(os.path, "getsize", never)
+    assert _has_fan_out(dd.with_shingles(docs))
 
 
 def test_gated_results_identical(spark, sf_dir, monkeypatch):

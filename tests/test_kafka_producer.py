@@ -169,7 +169,7 @@ def test_transport_compression_stored_compressed_read_plain(tmp_path):
     """compression=snappy on the producer: the broker's on-disk form is
     compressed (no plain value field), read_log hands back the plain
     value — transport compression is invisible to consumers."""
-    from tigate_spark.functions.snappy_codec import decompress as sdec
+    from tigate_spark.functions.compress import decompress_bytes
 
     p = FakeWireProducer(str(tmp_path), compression="snappy")
     p.ensure_topic("t", 1)
@@ -179,7 +179,8 @@ def test_transport_compression_stored_compressed_read_plain(tmp_path):
     with open(os.path.join(str(tmp_path), "t-0.jsonl")) as f:
         raw = [json.loads(ln) for ln in f if ln.strip()]
     assert "value" not in raw[0] and raw[0]["cc"] == "snappy"
-    assert sdec(bytes.fromhex(raw[0]["vz"])).decode() == val
+    assert decompress_bytes(
+        "snappy", bytes.fromhex(raw[0]["vz"])).decode() == val
     assert raw[1]["value"] is None  # tombstones stay plain
     back = p.read_log("t", 0)
     assert back[0]["value"] == val and back[1]["value"] is None

@@ -79,9 +79,9 @@ def test_compressed_claim_check_feed_offloads_at_threshold(
 # -- snappy import-gate + interop flagging ----------------------------------
 
 def test_snappy_known_and_gated():
-    # r13 superseded the import gate: snappy is ALWAYS supported via
-    # the from-spec raw-block twin (functions/snappy_codec.py, JVM
-    # cross-validated); the reference-interop set is unchanged
+    # r13 superseded the import gate: snappy is ALWAYS supported (the
+    # raw block format via pyarrow's native codec, JVM cross-validated);
+    # the reference-interop set is unchanged
     assert "snappy" in KNOWN
     assert REFERENCE_INTEROP == ("none", "lz4", "snappy")
     assert supported("snappy")

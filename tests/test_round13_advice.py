@@ -11,10 +11,11 @@ import warnings
 
 import pytest
 
-from tigate_spark.functions import zstd_codec as z
+from tigate_spark.functions.compress import CodecError, compress_bytes
 from tigate_spark.streaming.kafka_clients import parse_go_duration_ms
 
 from tests.test_zstd_codec import (
+    _dec,
     _frame_of_blocks,
     _literals_raw,
     _seq_section,
@@ -44,7 +45,7 @@ def test_repeat_mode_after_predefined_block():
     blk2 = bytearray(blk1)
     blk2[lit_len + 1] = 0xFC  # Repeat_Mode for LL/OF/ML
     content = b"abcdabcdXYZdXY"
-    out = z.decompress(_frame_of_blocks([blk1, bytes(blk2)], content * 2))
+    out = _dec(_frame_of_blocks([blk1, bytes(blk2)], content * 2))
     assert out == content * 2
 
 
@@ -62,20 +63,9 @@ def test_repeat_mode_after_rle_block():
     # each block decodes to: "ab" + copy(off 2, len 4) -> "ababab",
     # then "cd" + copy(off 2, len 4) -> "cdcd"
     one = b"abababcdcdcd"
-    assert z.decompress(_frame_of_blocks([blk1], one)) == one
-    out = z.decompress(_frame_of_blocks([blk1, blk2], one * 2))
+    assert _dec(_frame_of_blocks([blk1], one)) == one
+    out = _dec(_frame_of_blocks([blk1, blk2], one * 2))
     assert out == one * 2
-
-
-def test_sequences_table_persists_every_non_repeat_mode():
-    ctx = z._FrameCtx()
-    z._sequences_table(0, "ll", b"", 0, ctx, 35, z._LL_MAX_ACC)
-    assert ctx.fse_ll is not None and ctx.fse_ll[1] == z._LL_ACC
-    z._sequences_table(1, "ml", bytes([7]), 0, ctx, 52, z._ML_MAX_ACC)
-    assert ctx.fse_ml is not None and ctx.fse_ml[1] == 0
-    # repeat now resolves for both
-    t, acc, _ = z._sequences_table(3, "ll", b"", 0, ctx, 35, z._LL_MAX_ACC)
-    assert (t, acc) == ctx.fse_ll
 
 
 # -- Dictionary_ID == 0 is "no dictionary" -----------------------------------
@@ -83,23 +73,23 @@ def test_sequences_table_persists_every_non_repeat_mode():
 def _with_did(frame: bytes, did: bytes) -> bytes:
     """Rewrite a single-segment frame to carry a Dictionary_ID field."""
     fhd = frame[4]
-    assert fhd & 0x20, "encoder emits single-segment frames"
+    assert fhd & 0x20, "small payloads encode as single-segment frames"
     flag = {1: 1, 2: 2, 4: 3}[len(did)]
     return frame[:4] + bytes([fhd | flag]) + did + frame[5:]
 
 
 def test_dictionary_id_zero_is_accepted():
     data = b"dictionary-id zero means no dictionary " * 20
-    frame = z.compress(data, checksum=False)
-    assert z.decompress(_with_did(frame, b"\x00")) == data
-    assert z.decompress(_with_did(frame, b"\x00\x00")) == data
-    assert z.decompress(_with_did(frame, b"\x00" * 4)) == data
+    frame = compress_bytes("zstd", data)
+    assert _dec(_with_did(frame, b"\x00")) == data
+    assert _dec(_with_did(frame, b"\x00\x00")) == data
+    assert _dec(_with_did(frame, b"\x00" * 4)) == data
 
 
 def test_dictionary_id_nonzero_still_rejected():
-    frame = z.compress(b"payload", checksum=False)
-    with pytest.raises(z.ZstdError, match="dictionary"):
-        z.decompress(_with_did(frame, b"\x07"))
+    frame = compress_bytes("zstd", b"payload")
+    with pytest.raises(CodecError, match="Dictionary mismatch"):
+        _dec(_with_did(frame, b"\x07"))
 
 
 # -- Go duration parse edges --------------------------------------------------

@@ -359,6 +359,26 @@ def test_syncpoint_ticks_aligned(spark, sf_dir, chunked_source, tmp_path):
     assert secs == sorted(secs)
 
 
+def test_syncpoint_batch_inside_one_interval_records_no_ticks(spark,
+                                                               tmp_path):
+    """A micro-batch whose commit range crosses no syncpoint boundary
+    records zero ticks instead of failing the feed; a batch crossing k
+    boundaries records exactly those k aligned ticks."""
+    from tigate_spark.streaming.sinks import Bookkeeping
+
+    bk = Bookkeeping(str(tmp_path), sync_point_us=1000)
+    schema = "table_id BIGINT, commit_ts BIGINT"
+    inside = spark.createDataFrame([(1, 1100), (2, 1500), (1, 1900)], schema)
+    bk.record(inside, 0)
+    crossing = spark.createDataFrame(
+        [(1, 1950), (2, 3300), (1, 5100)], schema)
+    bk.record(crossing, 1)
+    ticks = spark.read.parquet(bk.syncpoint_dir)
+    got = sorted((r["batch_id"], r["primary_ts"], r["secondary_ts"])
+                 for r in ticks.collect())
+    assert got == [(1, ts, 5100) for ts in (2000, 3000, 4000, 5000)]
+
+
 def test_ddl_barrier_split(spark, sf_dir, tmp_path):
     """Two DDLs inside one batch: apply order is DML<ts1, DDL1, DML<ts2,
     DDL2, rest; single-table DDL only blocks its own table."""

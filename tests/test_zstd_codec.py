@@ -1,13 +1,13 @@
-"""From-spec zstd codec tests (RFC 8878).
+"""zstd wire tests through the compression seam (RFC 8878).
 
 The decoder's compressed-block paths are exercised by a minimal
 test-side block WRITER built independently from the spec's encoding
 direction (ANS: states chosen in reverse symbol order; canonical
 Huffman codes from weights; the backward bit layout) — so Huffman
 literals (direct + FSE-compressed weights, 1 and 4 streams, treeless
-repeat), FSE sequence tables (predefined / RLE / FSE_Compressed /
-Repeat modes) and the repeat-offset rules are all decoded from wires
-the decoder never produced. xxHash64 is pinned against published
+repeat), FSE sequence tables (predefined / RLE / Repeat modes) and the
+repeat-offset rules are all decoded by ``decompress_bytes`` from wires
+its encoder never produced. xxHash64 is pinned against published
 vectors; cross-interop with the native zstandard lib runs when
 installed (absent in this container)."""
 
@@ -17,64 +17,140 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from tigate_spark.functions import zstd_codec as z
+from tigate_spark.functions.compress import (
+    CodecError,
+    compress_bytes,
+    decompress_bytes,
+    xxh64,
+)
+
+
+def _enc(data: bytes) -> bytes:
+    return compress_bytes("zstd", data)
+
+
+def _dec(wire: bytes) -> bytes:
+    return decompress_bytes("zstd", wire)
 
 
 # ------------------------------------------------------------------ xxHash64
 
 def test_xxh64_published_vectors():
-    assert z.xxh64(b"") == 0xEF46DB3751D8E999
-    assert z.xxh64(b"a") == 0xD24EC4F1A98C6E5B
-    assert z.xxh64(b"abc") == 0x44BC2CF5AD770999
+    assert xxh64(b"") == 0xEF46DB3751D8E999
+    assert xxh64(b"a") == 0xD24EC4F1A98C6E5B
+    assert xxh64(b"abc") == 0x44BC2CF5AD770999
     # >=32-byte lane + seed path
     data = bytes(range(64))
-    assert z.xxh64(data) == z.xxh64(data)  # deterministic
-    assert z.xxh64(data, seed=1) != z.xxh64(data)
+    assert xxh64(data) == xxh64(data)  # deterministic
+    assert xxh64(data, seed=1) != xxh64(data)
 
 
-# ----------------------------------------------------- raw/RLE frame encoder
+# --------------------------------------------------------------- frame encode
 
 def test_raw_rle_frame_roundtrip_and_rle_collapse():
     cases = [b"", b"x", b"hello world" * 100, b"\x00" * 200000,
              bytes(range(256)) * 700]
     for c in cases:
-        assert z.decompress(z.compress(c)) == c
-        assert z.decompress(z.compress(c, checksum=False)) == c
-    assert len(z.compress(b"\x00" * 200000)) < 32  # RLE blocks collapse
+        assert _dec(_enc(c)) == c
+    assert len(_enc(b"\x00" * 200000)) < 32  # RLE blocks collapse
 
 
 def test_corrupt_checksum_and_magic_rejected():
-    wire = bytearray(z.compress(b"payload"))
+    wire = bytearray(_enc(b"payload"))
     wire[-1] ^= 0xFF
-    with pytest.raises(z.ZstdError, match="checksum"):
-        z.decompress(bytes(wire))
-    with pytest.raises(z.ZstdError, match="magic"):
-        z.decompress(b"\x00\x00\x00\x00rest")
+    with pytest.raises(CodecError, match="checksum"):
+        _dec(bytes(wire))
+    with pytest.raises(CodecError, match="Unknown frame descriptor"):
+        _dec(b"\x00\x00\x00\x00rest")
 
 
 def test_multi_frame_and_skippable_frames():
-    wire = (z.compress(b"first|") +
+    wire = (_enc(b"first|") +
             (0x184D2A50).to_bytes(4, "little") + (5).to_bytes(4, "little")
             + b"skipme"[:5] +
-            z.compress(b"second"))
-    assert z.decompress(wire) == b"first|second"
+            _enc(b"second"))
+    assert _dec(wire) == b"first|second"
 
 
 @settings(max_examples=80, deadline=None)
 @given(st.binary(max_size=2048))
 def test_raw_frame_roundtrip_property(data):
-    assert z.decompress(z.compress(data)) == data
+    assert _dec(_enc(data)) == data
 
 
 @settings(max_examples=60, deadline=None)
 @given(st.text(alphabet=st.characters(min_codepoint=32, max_codepoint=126),
                min_size=128, max_size=4096))
 def test_huffman_literals_roundtrip_property(text):
-    """ASCII corpora ≥128 bytes take the Huffman-literals path (direct
-    weights, package-merge lengths) whenever entropy beats raw — the
-    r14 encode surface under hypothesis."""
+    """ASCII corpora ≥128 bytes: the shape where a zstd encoder codes
+    literals with Huffman trees."""
     data = text.encode()
-    assert z.decompress(z.compress(data)) == data
+    assert _dec(_enc(data)) == data
+
+
+# ====================================================== spec tables (RFC 8878)
+
+#: literals-length codes (§3.1.1.3.2.1.1): code -> (baseline, extra bits)
+_LL_TABLE = [(i, 0) for i in range(16)] + [
+    (16, 1), (18, 1), (20, 1), (22, 1), (24, 2), (28, 2), (32, 3),
+    (40, 3), (48, 4), (64, 6), (128, 7), (256, 8), (512, 9), (1024, 10),
+    (2048, 11), (4096, 12), (8192, 13), (16384, 14), (32768, 15),
+    (65536, 16)]
+
+#: match-length codes: code -> (baseline, extra bits)
+_ML_TABLE = [(i + 3, 0) for i in range(32)] + [
+    (35, 1), (37, 1), (39, 1), (41, 1), (43, 2), (47, 2), (51, 3),
+    (59, 3), (67, 4), (83, 4), (99, 5), (131, 7), (259, 8), (515, 9),
+    (1027, 10), (2051, 11), (4099, 12), (8195, 13), (16387, 14),
+    (32771, 15), (65539, 16)]
+
+#: predefined distributions (§3.1.1.3.2.2)
+_LL_DEFAULT = [4, 3, 2, 2, 2, 2, 2, 2, 2, 2, 2, 2, 2, 1, 1, 1,
+               2, 2, 2, 2, 2, 2, 2, 2, 2, 3, 2, 1, 1, 1, 1, 1,
+               -1, -1, -1, -1]
+_ML_DEFAULT = [1, 4, 3, 2, 2, 2, 2, 2, 2, 1, 1, 1, 1, 1, 1, 1,
+               1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1,
+               1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1,
+               -1, -1, -1, -1, -1, -1, -1]
+_OF_DEFAULT = [1, 1, 1, 1, 1, 1, 2, 2, 2, 1, 1, 1, 1, 1, 1, 1,
+               1, 1, 1, 1, 1, 1, 1, 1, -1, -1, -1, -1, -1]
+
+_LL_ACC, _ML_ACC, _OF_ACC = 6, 6, 5
+
+
+def _build_fse_table(probs, accuracy):
+    """FSE decode table: cell -> (symbol, nb_bits, baseline) (§4.1.1)."""
+    size = 1 << accuracy
+    cells = [-1] * size
+    high = size - 1
+    # "less than 1" symbols take single cells from the table's end
+    for s, p in enumerate(probs):
+        if p == -1:
+            cells[high] = s
+            high -= 1
+    step = (size >> 1) + (size >> 3) + 3
+    pos = 0
+    for s, p in enumerate(probs):
+        for _ in range(max(p, 0)):
+            cells[pos] = s
+            pos = (pos + step) & (size - 1)
+            while pos > high:
+                pos = (pos + step) & (size - 1)
+    nxt = [p if p > 0 else 1 for p in probs]
+    table = []
+    for s in cells:
+        x = nxt[s]
+        nxt[s] += 1
+        nb = accuracy - (x.bit_length() - 1)
+        table.append((s, nb, (x << nb) - size))
+    return table
+
+
+_PREDEF = {
+    "ll": _build_fse_table(_LL_DEFAULT, _LL_ACC),
+    "ml": _build_fse_table(_ML_DEFAULT, _ML_ACC),
+    "of": _build_fse_table(_OF_DEFAULT, _OF_ACC),
+}
 
 
 # ===================================================================== writer
@@ -219,14 +295,14 @@ def _seq_section(seqs, ctx_tables, modes):
 
     def code_of_ll(v):
         for code in range(35, -1, -1):
-            base, bits = z._LL_TABLE[code]
+            base, bits = _LL_TABLE[code]
             if base <= v < base + (1 << bits):
                 return code, v - base, bits
         raise AssertionError(v)
 
     def code_of_ml(v):
         for code in range(52, -1, -1):
-            base, bits = z._ML_TABLE[code]
+            base, bits = _ML_TABLE[code]
             if base <= v < base + (1 << bits):
                 return code, v - base, bits
         raise AssertionError(v)
@@ -255,10 +331,10 @@ def _seq_section(seqs, ctx_tables, modes):
         if mode == "rle":
             assert len(set(syms)) == 1
             out.append(syms[0])
-            lanes[kind] = (z._rle_table(syms[0]), 0, [None] * n)
+            lanes[kind] = ([(syms[0], 0, 0)], 0, [None] * n)
         else:
-            acc = {"ll": z._LL_ACC, "of": z._OF_ACC, "ml": z._ML_ACC}[kind]
-            table = z._PREDEF[kind]
+            acc = {"ll": _LL_ACC, "of": _OF_ACC, "ml": _ML_ACC}[kind]
+            table = _PREDEF[kind]
             init, trans = _fse_encode_chain(syms, table, acc)
             lanes[kind] = (table, acc, [init] + trans)
     w = _BackWriter()
@@ -310,7 +386,7 @@ def test_raw_literals_rle_sequences_and_repeat_offsets():
     # ll!=0 -> repeat1 = 4, copy 3 of "dXYZ" -> "dXY"
     blk = _literals_raw(lits) + _seq_section(
         seqs, None, ("predef", "predef", "predef"))
-    out = z.decompress(_frame_of_blocks([blk], b"abcdabcdXYZdXY"))
+    out = _dec(_frame_of_blocks([blk], b"abcdabcdXYZdXY"))
     assert out == b"abcdabcdXYZdXY"
 
 
@@ -322,7 +398,7 @@ def test_rle_mode_sequences_and_rle_literals():
     blk = lits + _seq_section(seqs, None, ("rle", "rle", "rle"))
     # per seq: 2 lits, then copy 4 from offset 2
     # s1: "aa" + copy(2,4): "aaaa" -> "aaaaaa"; s2 same; + remaining lits
-    out = z.decompress(_frame_of_blocks([blk], b"a" * 16))
+    out = _dec(_frame_of_blocks([blk], b"a" * 16))
     assert out == b"a" * 16
 
 
@@ -338,7 +414,7 @@ def test_repeat_offset_ll_zero_shift_and_minus_one():
     # seq1: lits "wxyz", match off 4 len 4 -> "wxyzwxyz"; history [4,1,8]
     # seq2: ll=0 & of_value=1 -> idx 1 -> offset = rep[1] = 1:
     #   copy len 4 off 1 -> "zzzz"
-    out = z.decompress(_frame_of_blocks([blk], b"wxyzwxyzzzzz"))
+    out = _dec(_frame_of_blocks([blk], b"wxyzwxyzzzzz"))
     assert out == b"wxyzwxyzzzzz"
 
 
@@ -352,7 +428,7 @@ def test_huffman_direct_weights_one_stream():
     full = [0] * 97 + [1, 1, 1, 1]  # 'a'=97..'d'=100
     sect = _literals_compressed(lits, full, four_streams=False)
     blk = sect + b"\x00"  # zero sequences -> literals only
-    out = z.decompress(_frame_of_blocks([blk], lits))
+    out = _dec(_frame_of_blocks([blk], lits))
     assert out == lits
 
 
@@ -366,7 +442,7 @@ def test_huffman_four_streams_and_treeless_repeat():
     sect2 = _literals_compressed(lits2, full, four_streams=True,
                                  treeless=True)
     blk2 = sect2 + b"\x00"
-    out = z.decompress(_frame_of_blocks([blk1, blk2], lits + lits2))
+    out = _dec(_frame_of_blocks([blk1, blk2], lits + lits2))
     assert out == lits + lits2
 
 
@@ -375,8 +451,8 @@ def test_treeless_without_previous_table_rejected():
     full = [0] * 97 + [1, 1, 1, 1]
     sect = _literals_compressed(lits2, full, four_streams=True,
                                 treeless=True)
-    with pytest.raises(z.ZstdError, match="treeless"):
-        z.decompress(_frame_of_blocks([sect + b"\x00"], lits2))
+    with pytest.raises(CodecError, match="corrupt zstd wire"):
+        _dec(_frame_of_blocks([sect + b"\x00"], lits2))
 
 
 def test_fse_compressed_weights_header():
@@ -391,7 +467,7 @@ def test_fse_compressed_weights_header():
     # weight0: 28, weight1: 4 (sums 32)
     probs = [28, 4]
     acc = 5
-    table = z._build_fse_table(probs, acc)
+    table = _build_fse_table(probs, acc)
     init1, trans = _fse_encode_chain([1, 1, 1], table, acc)
     # interleaved two-state layout: even state emits w[0], w[2]; odd
     # emits w[1]; termination: emitting the final symbol from the
@@ -452,116 +528,92 @@ def test_fse_compressed_weights_header():
     x = 2 | (0 << 2) | (regen << 4) | (comp << 14)
     sect = x.to_bytes(3, "little") + payload
     blk = sect + b"\x00"
-    out = z.decompress(_frame_of_blocks([blk], lits))
+    out = _dec(_frame_of_blocks([blk], lits))
     assert out == lits
 
 
-def test_fse_distribution_parse_roundtrip():
-    """The FSE table description writer/reader pair: hand-assembled
-    descriptions parse to the intended distributions (incl. zero
-    repeats and -1 probabilities via the predefined tables)."""
-    # predefined distributions all build; spot-check table invariants
-    for probs, acc in ((z._LL_DEFAULT, z._LL_ACC),
-                       (z._ML_DEFAULT, z._ML_ACC),
-                       (z._OF_DEFAULT, z._OF_ACC)):
-        assert sum(abs(p) for p in probs) == (1 << acc)
-        table = z._build_fse_table(probs, acc)
-        assert len(table) == (1 << acc)
-        # every -1 symbol sits in exactly one cell with full-accuracy
-        # bits and baseline 0
-        for s, p in enumerate(probs):
-            cells = [(nb, bl) for (sym, nb, bl) in table if sym == s]
-            if p == -1:
-                assert cells == [(acc, 0)]
-            else:
-                assert len(cells) == p
-
-
 def test_fse_chain_roundtrip_property():
-    """ANS encode (test-side) -> module decode over the predefined LL
-    table reproduces arbitrary symbol chains."""
+    """ANS encode (test-side) of arbitrary literals-length / offset /
+    match-length symbol chains over the predefined tables: the seam
+    decodes every hand-built block to what executing the sequences by
+    hand produces."""
     import random
 
     rng = random.Random(11)
-    table, acc = z._PREDEF["ll"], z._LL_ACC
-    live = sorted({s for (s, _, _) in table})
     for trial in range(25):
-        syms = [rng.choice(live) for _ in range(rng.randint(1, 40))]
-        init, trans = _fse_encode_chain(syms, table, acc)
-        w = _BackWriter()
-        w.push(init, acc)
-        for b, nb in trans:
-            w.push(b, nb)
-        bb = z._BackwardBits(w.bytes())
-        st_ = z._FseState(table, acc, bb)
-        got = []
-        for i in range(len(syms)):
-            got.append(st_.symbol)
-            if i + 1 < len(syms):
-                st_.update(bb)
-        assert got == syms
+        lits = bytes(rng.randrange(256) for _ in range(rng.randint(1, 3000)))
+        seqs, out, used = [], bytearray(), 0
+        for _ in range(rng.randint(1, 40)):
+            ll = rng.randint(0 if out else 1, min(300, len(lits) - used))
+            if not out and ll == 0:
+                break
+            out += lits[used:used + ll]
+            used += ll
+            off = rng.randint(1, len(out))
+            ml = rng.randint(3, 400)
+            for _ in range(ml):
+                out.append(out[-off])
+            seqs.append((ll, off + 3, ml))  # of_value > 3: no repeat code
+        out += lits[used:]
+        blk = _literals_raw(lits) + _seq_section(
+            seqs, None, ("predef", "predef", "predef"))
+        assert _dec(_frame_of_blocks([blk], bytes(out))) == out, trial
 
 
 # ------------------------------------------------------------- seam plumbing
 
 def test_seam_zstd_always_supported():
-    from tigate_spark.functions.compress import (
-        compress_bytes,
-        decompress_bytes,
-        supported,
-    )
+    from tigate_spark.functions.compress import supported
 
     assert supported("zstd")
     data = b"zstd seam payload " * 400
-    wire = compress_bytes("zstd", data)
-    assert decompress_bytes("zstd", wire) == data
+    assert _dec(_enc(data)) == data
 
 
 def test_native_zstd_cross_interop():
     zstandard = pytest.importorskip("zstandard")
     data = b"cross interop " * 500
-    # native reads our raw-block frames
-    assert zstandard.ZstdDecompressor().decompress(z.compress(data)) == data
-    # we read native's REAL compressed frames (FSE+Huffman paths live)
+    # native reads the seam's frames, content checksum included
+    assert zstandard.ZstdDecompressor().decompress(_enc(data)) == data
+    # the seam reads native's frames
     wire = zstandard.ZstdCompressor(level=19).compress(data)
-    assert z.decompress(wire) == data
+    assert _dec(wire) == data
 
 
 def test_decoder_fuzz_raises_typed_errors_only():
-    """Dead-letter lanes depend on decoders raising their typed error,
-    never IndexError/KeyError/etc — random garbage and bit-flipped
-    valid wires must both be safe."""
+    """Dead-letter lanes depend on the seam's decoders raising their one
+    typed error — never OSError/MemoryError/OverflowError/IndexError —
+    on random garbage, on bit-flipped valid wires, and on a snappy
+    preamble that declares far more bytes than the block can hold."""
     import random
 
-    from tigate_spark.functions import lz4_codec as lz
-    from tigate_spark.functions import snappy_codec as sc
-
     rng = random.Random(99)
-    decoders = ((sc.decompress, sc.SnappyError),
-                (lz.block_decompress, lz.LZ4Error),
-                (lz.frame_decompress, lz.LZ4Error),
-                (z.decompress, z.ZstdError))
+    codecs = ("snappy", "lz4", "zstd")
+
+    def decode(cc, data):
+        try:
+            decompress_bytes(cc, data)
+        except CodecError:
+            pass  # typed rejection is the contract
+
     for _ in range(400):
         data = bytes(rng.randrange(256)
                      for _ in range(rng.randint(0, 150)))
-        for fn, err in decoders:
-            try:
-                fn(data)
-            except err:
-                pass  # typed rejection is the contract
+        for cc in codecs:
+            decode(cc, data)
     for _ in range(200):
         base = bytes(rng.randrange(256)
                      for _ in range(rng.randint(1, 80)))
-        for mk, fn, err in ((sc.compress, sc.decompress, sc.SnappyError),
-                            (lz.frame_compress, lz.frame_decompress,
-                             lz.LZ4Error),
-                            (z.compress, z.decompress, z.ZstdError)):
-            w = bytearray(mk(base))
+        for cc in codecs:
+            w = bytearray(compress_bytes(cc, base))
             w[rng.randrange(len(w))] ^= 1 << rng.randrange(8)
-            try:
-                fn(bytes(w))
-            except err:
-                pass
+            decode(cc, bytes(w))
+    huge = b"\xff\xff\xff\xff\x0f"  # varint 2**32 - 1
+    with pytest.raises(CodecError, match="preamble"):
+        decompress_bytes("snappy", huge + b"\x00" * 64)
+    for cc in codecs:
+        with pytest.raises(CodecError, match="empty"):
+            decompress_bytes(cc, b"")
 
 
 @settings(max_examples=120, deadline=None)
@@ -575,248 +627,28 @@ def test_decoder_fuzz_raises_typed_errors_only():
               st.binary(max_size=100)),
 ))
 def test_compressed_block_roundtrip_property(data):
-    """Shapes that engage the matcher (so the COMPRESSED block path,
-    not the raw fallback, is what round-trips)."""
-    assert z.decompress(z.compress(data)) == data
-
-
-# -- r15: custom FSE-described sequence tables (mode 2) + RLE lanes ----------
-
-def test_fse_description_writer_roundtrips_through_parser():
-    """_fse_description is the exact inverse of _parse_fse_distribution
-    for every small-value form (short / in-range / offset) and the
-    2-bit zero-repeat chains."""
-    cases = [
-        ([2, 2, 2, 2, 8, 16], 5),
-        ([1] * 32, 5),
-        ([30, 1, 1], 5),
-        ([10, 0, 0, 0, 0, 0, 0, 0, 0, 6, 16], 5),   # long zero run
-        ([1, 0, 0, 0, 1, 62], 6),
-        ([100, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 28], 7),
-    ]
-    for probs, acc in cases:
-        assert sum(probs) == 1 << acc
-        desc = z._fse_description(probs, acc)
-        got, got_acc = z._parse_fse_distribution(
-            z._ForwardBits(desc), max_symbol=63, max_accuracy=9)
-        assert got_acc == acc
-        # parser may stop before trailing zeros; normalize both
-        while got and got[-1] == 0:
-            got.pop()
-        want = list(probs)
-        while want and want[-1] == 0:
-            want.pop()
-        assert got == want, (probs, acc, got)
-
-
-def test_normalize_probs_invariants():
-    import random as _r
-
-    rng = _r.Random(7)
-    for _ in range(200):
-        nsym = rng.randrange(2, 40)
-        freqs = {s: rng.randrange(1, 10000)
-                 for s in rng.sample(range(53), nsym)}
-        for acc in (5, 6, 8, 9):
-            probs = z._normalize_probs(freqs, acc)
-            if probs is None:
-                assert (1 << acc) < len(freqs)
-                continue
-            assert sum(probs) == 1 << acc
-            for s, f in freqs.items():
-                assert probs[s] >= 1  # every present symbol encodable
-            for s, p in enumerate(probs):
-                if p:
-                    assert s in freqs
-
-
-def test_custom_fse_mode_engages_and_roundtrips():
-    """A skewed-sequence corpus must take the mode-2 path (cheaper than
-    predefined by the entropy estimate) and round-trip through our own
-    decoder; the frame's modes byte is checked directly."""
-    data = b"".join(b'{"id":%d,"user":"u%d","ev":"click","v":%d}\n'
-                    % (i, i % 97, i * 7 % 1000) for i in range(4000))
-    wire = z.compress(data)
-    assert z.decompress(wire) == data
-    # locate the first block's sequences section modes byte: parse far
-    # enough to know the lane plan engaged — cheaper: plan directly
-    seqs_modes = []
-    orig = z._lane_plan
-
-    def spy(syms, kind, prev=None):
-        plan = orig(syms, kind, prev)
-        seqs_modes.append((kind, plan[0]))
-        return plan
-
-    z._lane_plan = spy
-    try:
-        z.compress(data)
-    finally:
-        z._lane_plan = orig
-    assert any(m == 2 for _, m in seqs_modes), seqs_modes
-    # ratio must beat the predefined-only encoding meaningfully
-    old_gate = z._CUSTOM_FSE_MIN_SEQS
-    z._CUSTOM_FSE_MIN_SEQS = 10 ** 9
-    try:
-        predef_wire = z.compress(data)
-    finally:
-        z._CUSTOM_FSE_MIN_SEQS = old_gate
-    assert len(wire) < 0.8 * len(predef_wire)
-
-
-def test_rle_sequence_lane_mode():
-    """A corpus whose offset lane collapses to one symbol emits RLE
-    mode (one desc byte, zero stream bits) and round-trips."""
-    data = b"ABCDEFGH" * 8000  # single recurring offset
-    wire = z.compress(data)
-    assert z.decompress(wire) == data
-    modes = []
-    orig = z._lane_plan
-
-    def spy(syms, kind, prev=None):
-        plan = orig(syms, kind, prev)
-        modes.append((kind, plan[0]))
-        return plan
-
-    z._lane_plan = spy
-    try:
-        z.compress(data)
-    finally:
-        z._lane_plan = orig
-    assert ("of", 1) in modes or ("ml", 1) in modes, modes
-
-
-def test_fse_weights_blob_interleaved_decode_roundtrip():
-    """The §4.2.1.2 weights writer against the decoder's own
-    interleaved walk: every (listed-weights) shape round-trips,
-    including the over-read termination on both parities."""
-    import random as _r
-
-    rng = _r.Random(3)
-    for _ in range(150):
-        n = rng.randrange(2, 100)
-        listed = [rng.randrange(0, 9) for _ in range(n)]
-        if len(set(listed)) < 2:
-            continue
-        blob = z._fse_weights_blob(listed)
-        if blob is None:
-            continue
-        fb = z._ForwardBits(blob)
-        probs, acc = z._parse_fse_distribution(fb, 255, 6)
-        table = z._build_fse_table(probs, acc)
-        bb = z._BackwardBits(blob[fb.bytes_consumed():])
-        even = z._FseState(table, acc, bb)
-        odd = z._FseState(table, acc, bb)
-        got = []
-        while True:
-            got.append(even.symbol)
-            even.update(bb)
-            if bb.avail < 0:
-                got.append(odd.symbol)
-                break
-            got.append(odd.symbol)
-            odd.update(bb)
-            if bb.avail < 0:
-                got.append(even.symbol)
-                break
-        assert got == listed
+    """Shapes that engage the matcher (so a COMPRESSED block, not the
+    raw fallback, is what round-trips)."""
+    assert _dec(_enc(data)) == data
 
 
 def test_high_alphabet_literals_compress_via_fse_weights():
-    """Symbols above 128 can't use direct weights — r15's FSE-weights
-    form is the only legal tree description, and the encoder now emits
-    it instead of falling back to raw literals."""
+    """Symbols above 128 can't use direct Huffman weights — the literals
+    still compress, through the FSE-weights tree description."""
     import random as _r
 
     rng = _r.Random(5)
     data = bytes(rng.randrange(130, 250) for _ in range(50000))
-    wire = z.compress(data)
+    wire = _enc(data)
     assert len(wire) < 0.93 * len(data)
-    assert z.decompress(wire) == data
-
-
-def test_sequence_repeat_mode_emits_and_roundtrips():
-    """Cross-block Repeat_Mode (§3.1.1.3.2.1.1): with a prev lane table
-    whose estimate beats a fresh description, mode 3 is emitted with
-    ZERO desc bytes; an RLE-stable lane repeats for free. Forced here
-    via a two-block corpus with identical per-block statistics."""
-    modes = []
-    orig = z._lane_plan
-
-    def spy(syms, kind, prev=None):
-        plan = orig(syms, kind, prev)
-        modes.append((kind, plan[0]))
-        return plan
-
-    z._lane_plan = spy
-    try:
-        # ABCDEFGH stride: every lane's histogram is IDENTICAL per
-        # block, so block 2+ must repeat (0 desc bytes ≤ any fresh desc)
-        data = b"ABCDEFGH" * 40000  # 320 KB → 3 blocks
-        wire = z.compress(data)
-    finally:
-        z._lane_plan = orig
-    assert z.decompress(wire) == data
-    assert any(m == 3 for _, m in modes), modes
-
-
-def test_repeat_mode_never_without_previous_table():
-    """The first compressed block of a frame can never emit mode 3 —
-    the planner only considers Repeat when a prev ctx exists."""
-    data = b"".join(b'{"k%d":%d}' % (i % 9, i * 31 % 1000)
-                    for i in range(8000))[:100_000]
-    plans = []
-    orig = z._lane_plan
-
-    def spy(syms, kind, prev=None):
-        plan = orig(syms, kind, prev)
-        plans.append((prev, plan[0]))
-        return plan
-
-    z._lane_plan = spy
-    try:
-        z.compress(data)
-    finally:
-        z._lane_plan = orig
-    for prev, mode in plans[:3]:  # the first block's three lanes
-        assert prev is None and mode != 3
-
-
-def test_treeless_literals_emit_and_roundtrip():
-    """Cross-block treeless literals (§3.1.1.3.1.4 type 3): a stable
-    literal alphabet makes block 2+ reuse block 1's tree with zero
-    description bytes; a fresh description only when it measures
-    smaller. Forced via multi-block word text."""
-    import random as _r
-
-    rng = _r.Random(4)
-    words = [bytes(rng.choice(b"abcdefghijklmnopqrstuvwxyz")
-                   for _ in range(rng.randrange(3, 9))) for _ in range(500)]
-    text = b" ".join(rng.choice(words) for _ in range(80000))
-    ltypes = []
-    orig = z._huffman_literals_section
-
-    def spy(lits, huff_ctx=None):
-        sec = orig(lits, huff_ctx=huff_ctx)
-        if sec is not None:
-            ltypes.append(sec[0] & 3)
-        return sec
-
-    z._huffman_literals_section = spy
-    try:
-        wire = z.compress(text)
-    finally:
-        z._huffman_literals_section = orig
-    assert z.decompress(wire) == text
-    assert ltypes[0] == 2 and 3 in ltypes[1:], ltypes
+    assert _dec(wire) == data
 
 
 def test_treeless_never_without_previous_tree():
-    """The first compressed-literals section of a frame is always a
-    fresh description (the decoder would reject type 3 with no ctx)."""
+    """Multi-block match-poor text round-trips (a decoder rejects a
+    treeless literals section that has no previous tree)."""
     import random as _r
 
     rng = _r.Random(8)
     data = bytes(rng.randrange(32, 127) for _ in range(60000))
-    wire = z.compress(data)
-    assert z.decompress(wire) == data  # decoder enforces the ctx rule
+    assert _dec(_enc(data)) == data

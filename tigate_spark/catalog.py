@@ -2773,8 +2773,9 @@ FROM changes
 """,
     doc="E6 on the REFERENCE codec set: per-value snappy raw-block "
         "compression (pkg/compression none/lz4/snappy — the Go side is "
-        "snappy.Encode/Decode, the raw block format) via the from-spec "
-        "pure-Python twin (functions/snappy_codec.py), round-tripped and "
+        "snappy.Encode/Decode, the raw block format) via the compression "
+        "seam (functions/compress.py, pyarrow's native snappy), "
+        "round-tripped and "
         "hash-matched against the independent PLAIN oracle; unlike the "
         "gzip/zlib engine-extension wires this one is readable by "
         "reference consumers",
@@ -2802,16 +2803,14 @@ SELECT seq,
        ELSE printf('{"d":%s}', before) END AS value
 FROM changes
 """,
-    doc="E6 completing the sarama codec matrix: per-value zstd via the "
-        "from-spec RFC 8878 twin (functions/zstd_codec.py — the kafka "
-        "producer's remaining codec, sarama.go:89-90, and the reference "
-        "event store's value codec, eventstore/event_store.go:32): "
-        "encode emits REAL compressed blocks (greedy matcher + "
-        "predefined-mode FSE sequences; RLE/raw fallbacks) with the "
-        "xxHash64 content checksum, decode is the FULL decoder (FSE + "
-        "Huffman + sequences + repeat offsets); both directions "
-        "cross-validated byte-exact against zstd-jni (the C "
-        "implementation) and round-trip hash-matched against the "
+    doc="E6 completing the sarama codec matrix: per-value zstd (the "
+        "kafka producer's remaining codec, sarama.go:89-90, and the "
+        "reference event store's value codec, "
+        "eventstore/event_store.go:32) via the compression seam "
+        "(functions/compress.py): pyarrow's native zstd frames plus the "
+        "xxHash64 content checksum on encode, checksum-verifying native "
+        "decode; both directions cross-validated against zstd-jni (the "
+        "C implementation) and round-trip hash-matched against the "
         "independent PLAIN oracle",
 )
 def encoder_open_compressed_zstd(
@@ -2851,8 +2850,9 @@ FROM lanes
 """,
     doc="E6/E7 on the reference's lz4 lane: per-value LZ4 FRAME "
         "compression (pkg/compression lz4 = lz4.NewWriter frame format) "
-        "via the from-spec twin (functions/lz4_codec.py: block matcher + "
-        "frame layout + xxHash32) BEFORE framing — the 8B length prefix "
+        "via the compression seam (functions/compress.py: pyarrow's "
+        "native lz4 blocks in an independent-block frame with an "
+        "xxHash32 content checksum) BEFORE framing — the 8B length prefix "
         "counts COMPRESSED bytes (open/codec.go:85) — then the framed "
         "batches parsed back, values frame-decompressed (content "
         "checksum verified per value) and decoded to the apply shape; "

@@ -2205,7 +2205,7 @@ def consumer_kafka_wire_apply_e2e(spark: SparkSession,
         "compression= is the codec-level alias): the changefeed produces "
         "open-protocol messages through the fake broker with "
         "kafka-compression=snappy, so every on-disk broker record is the "
-        "from-spec snappy raw-block wire (snappy_codec.py) — and the "
+        "snappy raw-block wire (functions/compress.py) — and the "
         "consumer client decompresses transparently on read_log, exactly "
         "a real client+broker pair. The replayed log goes through "
         "decode_open_for_apply + LWW materialize and must hash-match the "

@@ -39,6 +39,9 @@ MINHASH_K = 8
 #: LSH bands use r=2 rows — a collision needs two agreeing minhashes,
 #: which kills the common-feature buckets a single shared shingle creates
 MINHASH_BANDS = 4
+# the other half of the pack-width invariant: band ids must fit the 2
+# bits above the 62-bit band value in `band << 62 | v`
+assert MINHASH_BANDS <= 4, "band-key packing requires at most 4 bands"
 #: drop LSH buckets bigger than this — an oversized bucket signals a
 #: corpus-common feature, not near-duplication, and would go quadratic
 LSH_BUCKET_CAP = 100

@@ -115,9 +115,11 @@ def fan_out_if_small(df: DataFrame) -> DataFrame:
       the scan has its own splits; an unconditional shuffle of a remote
       multi-TB corpus is exactly what this gate exists to remove);
     - local files whose size read fails (deleted between listing and
-      stat, odd URI) → indeterminate local-scan case → KEEP the fan-out
-      (only the local bench/test layout produces it, and there the
-      fan-out is the measured win).
+      stat, odd URI) are left out of the sum: the files that do stat
+      still decide, so one missing file cannot turn a multi-GB scan into
+      a full repartition. Only when NO file can be sized is the case
+      indeterminate → KEEP the fan-out (only the local bench/test layout
+      produces it, and there the fan-out is the measured win).
     """
     try:
         files = df.inputFiles()
@@ -129,10 +131,15 @@ def fan_out_if_small(df: DataFrame) -> DataFrame:
             return df
         sc = df.sparkSession.sparkContext
         par = sc.defaultParallelism
-        try:
-            total = sum(os.path.getsize(p) for p in paths)
-        except OSError:
-            total = 0  # indeterminate local case: keep the fan-out
+        sizes = []
+        for p in paths:
+            try:
+                sizes.append(os.path.getsize(p))
+            except OSError:
+                pass
+        if not sizes:  # indeterminate local case: keep the fan-out
+            return df.repartition(par)
+        total = sum(sizes)
         if total >= par * _MAX_SPLIT_BYTES or total > FAN_OUT_MAX_BYTES:
             return df
         return df.repartition(par)

@@ -185,15 +185,14 @@ class Bookkeeping:
             # secondary_ts = downstream current ts when the tick is written);
             # here the downstream position at tick time is the replica's max
             # applied commit_ts for the batch that crossed the boundary.
+            # A batch inside one interval has first > last: no ticks.
+            first = (F.floor(F.col("lo") / iv) + 1) * iv
+            last = F.floor(F.col("hi") / iv) * iv
             ticks = batch_df.agg(
                 F.min("commit_ts").alias("lo"), F.max("commit_ts").alias("hi")
             ).select(
                 F.explode(
-                    F.sequence(
-                        (F.floor(F.col("lo") / iv) + 1) * iv,
-                        F.floor(F.col("hi") / iv) * iv,
-                        F.lit(iv),
-                    )
+                    F.when(first <= last, F.sequence(first, last, F.lit(iv)))
                 ).alias("primary_ts"),
                 F.col("hi").alias("secondary_ts"),
             ).withColumn("batch_id", F.lit(batch_id))
