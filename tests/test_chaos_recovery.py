@@ -81,23 +81,23 @@ def _mk_feed(spark, source, work, sink_uri):
 def _arm_crash(cf: Changefeed, window: str, crash_batch: int = 1):
     """Inject a one-shot hard failure inside ``crash_batch``:
     W1 fires between the redo WAL and the sink (replacing
-    _foreach_batch_inner), W2 after the whole batch committed to the
+    cf.sink.process_batch), W2 after the whole batch committed to the
     sink but before foreachBatch returns (so Spark never commits the
     offset and replays the batch on resume). The error text must stay
     clear of the engine's unretryable fragments — this is exactly the
     transient class the resume path exists for."""
     fired = {"done": False}
     if window == "W1":
-        orig = cf._foreach_batch_inner
+        orig = cf.sink.process_batch
 
-        def w1(batch_df, batch_id):
+        def w1(batch_df, batch_id, **kw):
             if batch_id == crash_batch and not fired["done"]:
                 fired["done"] = True
                 raise RuntimeError(
                     "chaos kill: after redo WAL, before sink commit")
-            return orig(batch_df, batch_id)
+            return orig(batch_df, batch_id, **kw)
 
-        cf._foreach_batch_inner = w1
+        cf.sink.process_batch = w1
     else:
         orig = cf._foreach_batch
 

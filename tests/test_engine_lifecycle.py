@@ -352,3 +352,22 @@ def test_synced_status_with_redo(spark, sf_dir, tmp_path):
     eng.changefeed(cid).redo._update_meta(
         resolved_ts=st["redo"]["resolved_ts"] + 1)
     assert eng.synced(cid)["synced"] is False
+
+
+@pytest.mark.parametrize("sink_uri", ["replica://", "sqlite://"])
+def test_remove_drop_state_lets_the_id_start_clean(spark, sf_dir, tmp_path,
+                                                   sink_uri):
+    """remove(drop_state=True) deletes every per-feed dir, so a feed
+    re-created under the same id reports no stale checkpoint_ts and a
+    sqlite:// feed does not apply onto the old lane DBs."""
+    eng = Engine(spark, os.path.join(sf_dir, "events.parquet"), str(tmp_path))
+    cfg = ChangefeedConfig(changefeed_id="cf-again", sink_uri=sink_uri)
+    cid = eng.create(cfg)
+    eng.run_to_completion(cid)
+    assert eng.get(cid)["checkpoint_ts"] is not None
+    state = eng.state_dir(cid)
+    assert os.path.isdir(state)
+    eng.remove(cid, drop_state=True)
+    assert not os.path.exists(state)
+    eng.create(cfg)
+    assert eng.get(cid)["checkpoint_ts"] is None

@@ -1,7 +1,9 @@
-"""r18: the CPU-bound kernel fan-outs (dedup shingles, embedding
-quantization, the cosine-kernel corpus) are bytes-gated like
-scan_fan_out — a no-op once the input is big enough to feed the scan
-its own splits, the small-input repartition otherwise."""
+"""The scan fan-outs (the change stream's image/encode entries, the
+documents scoring entries) and the CPU-bound kernel fan-outs (dedup
+shingles, embedding quantization, the cosine-kernel corpus) share one
+bytes gate, ``sources.batch.fan_out_if_small`` — a no-op once the input
+is big enough to feed the scan its own splits, the small-input
+repartition otherwise."""
 
 import os
 
@@ -89,3 +91,24 @@ def test_gated_results_identical(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(batch, "FAN_OUT_MAX_BYTES", 1)
     after = dd.minhash_lsh_pairs(docs).collect()
     assert sorted(map(tuple, before)) == sorted(map(tuple, after))
+
+
+def test_directory_table_is_sized_by_its_files(spark, sf_dir, tmp_path,
+                                               monkeypatch):
+    # a Spark-written table is a directory: getsize(<table path>) is the
+    # directory inode's few bytes, not the data. With the gate between
+    # the two, the change stream's image fan-out must see the real bytes
+    # and plan no round-robin exchange
+    from tigate_spark.sources.changes import changes_stream
+
+    sf = tmp_path / "sf"
+    table = str(sf / "events.parquet")
+    load_table(spark, sf_dir, "events").repartition(2).write.parquet(table)
+    files = batch.local_paths_from_input_files(
+        spark.read.parquet(table).inputFiles())
+    real = sum(os.path.getsize(p) for p in files)
+    par = spark.sparkContext.defaultParallelism
+    split = real // par
+    assert par * split > os.path.getsize(table)
+    monkeypatch.setattr(batch, "_MAX_SPLIT_BYTES", split)
+    assert not _has_fan_out(changes_stream(spark, str(sf), with_images=True))

@@ -369,10 +369,11 @@ def test_syncpoint_batch_inside_one_interval_records_no_ticks(spark,
     bk = Bookkeeping(str(tmp_path), sync_point_us=1000)
     schema = "table_id BIGINT, commit_ts BIGINT"
     inside = spark.createDataFrame([(1, 1100), (2, 1500), (1, 1900)], schema)
-    bk.record(inside, 0)
+    assert bk.record(inside, 0, lo=1100, hi=1900) == []
     crossing = spark.createDataFrame(
         [(1, 1950), (2, 3300), (1, 5100)], schema)
-    bk.record(crossing, 1)
+    assert bk.record(crossing, 1, lo=1950, hi=5100) == [
+        2000, 3000, 4000, 5000]
     ticks = spark.read.parquet(bk.syncpoint_dir)
     got = sorted((r["batch_id"], r["primary_ts"], r["secondary_ts"])
                  for r in ticks.collect())
@@ -801,6 +802,93 @@ def test_ddl_barrier_bookkeeping_once_per_batch(spark, sf_dir,
     ticks = spark.read.parquet(cf.bookkeeping.syncpoint_dir)
     assert ticks.count() > 0
     assert ticks.count() == ticks.select("primary_ts").distinct().count()
+
+
+def test_sqlite_redo_syncpoint_barrier_feed_persists_once_per_batch(
+        spark, sf_dir, chunked_source, tmp_path, monkeypatch):
+    """One micro-batch, one cache: a sqlite:// feed with the redo log,
+    syncpoint and a DDL barrier all on persists exactly one frame per
+    micro-batch (the WAL, the barrier split, the sink and the bookkeeping
+    all read it). The downstream tidb_cdc__syncpoint_v1 mirrors the
+    parquet ts-map pair for pair."""
+    from tigate_spark.config import ConsistentConfig
+
+    ev = changes_stream(spark, sf_dir)
+    mid = ev.selectExpr("percentile_approx(commit_ts, 0.5) p").first()[0]
+    ddl = DDLEvent(
+        commit_ts=int(mid), table_id=1,
+        query="ALTER TABLE `app`.`t1` ADD COLUMN `extra_cents` INTEGER "
+              "DEFAULT 7",
+        schema_tag="v1", schema_name="app", table_name="t1",
+    )
+    cfg = ChangefeedConfig(
+        changefeed_id="cf-one-cache", sink_uri="sqlite://",
+        enable_sync_point=True, sync_point_interval_s=3600,
+        consistent=ConsistentConfig(
+            level="eventual", storage=str(tmp_path / "redo")),
+    )
+    cf = Changefeed(spark, cfg, chunked_source, str(tmp_path / "work"),
+                    ddl_events=[ddl])
+    persists: list[int] = []
+    frame_cls = type(ev)  # the session's concrete DataFrame class
+    real_persist = frame_cls.persist
+
+    def counting_persist(self, *a, **kw):
+        persists.append(1)
+        return real_persist(self, *a, **kw)
+
+    monkeypatch.setattr(frame_cls, "persist", counting_persist)
+    per_batch: list[int] = []
+    inner = cf._foreach_batch
+
+    def counted(batch_df, batch_id):
+        n0 = len(persists)
+        inner(batch_df, batch_id)
+        per_batch.append(len(persists) - n0)
+
+    cf._foreach_batch = counted
+    cf.run_to_completion()
+    monkeypatch.undo()
+    assert per_batch == [1, 1, 1, 1]
+    assert cf.registry.versions(spark).count() == 1  # the barrier fired
+    meta = cf.redo.meta()
+    assert meta["checkpoint_ts"] == meta["resolved_ts"] > 0
+
+    ts_map = [(r["primary_ts"], r["secondary_ts"]) for r in
+              spark.read.parquet(cf.bookkeeping.syncpoint_dir).collect()]
+    assert ts_map and len({p for p, _ in ts_map}) == len(ts_map)
+    down = [(int(r["primary_ts"]), int(r["secondary_ts"])) for r in
+            cf.sink.read_cdc(spark, "syncpoint_v1").collect()]
+    assert sorted(down) == sorted(ts_map)
+
+
+def test_changelog_redo_logs_the_change_columns(spark, sf_dir,
+                                                chunked_source, tmp_path):
+    """With redo on, a changelog:// feed WALs the transformed change
+    rows — not the routed/encoded frame the sink writes — so the WAL
+    schema is the stream's and redo_apply rebuilds the last-writer-wins
+    state."""
+    from tigate_spark.config import ConsistentConfig
+    from tigate_spark.streaming.redo import redo_apply
+
+    cfg = ChangefeedConfig(
+        changefeed_id="cf-cl-redo", sink_uri="changelog://",
+        consistent=ConsistentConfig(
+            level="eventual", storage=str(tmp_path / "redo")),
+    )
+    cf = Changefeed(spark, cfg, chunked_source, str(tmp_path / "work"))
+    cf.run_to_completion()
+    stream_cols = cf.transform(cf.read_stream()).columns
+    wal = spark.read.parquet(
+        os.path.join(cf.redo.row_dir, "epoch=0", "batch=0"))
+    assert wal.columns == stream_cols
+    assert not {"topic", "partition", "message"} & set(wal.columns)
+    out = ["table_id", "pk", "event_type", "value_cents", "user_id"]
+    exp = materialize(changes_stream(spark, sf_dir), PAYLOAD_COLS).select(*out)
+    got = redo_apply(spark, cfg.consistent.storage, PAYLOAD_COLS).select(*out)
+    assert got.count() == exp.count() > 0
+    assert got.exceptAll(exp).count() == 0
+    assert exp.exceptAll(got).count() == 0
 
 
 def test_sink_uri_option_overlay(spark, tmp_path):

@@ -13,20 +13,15 @@ from tigate_spark.functions import dedup as dd
 from tigate_spark.functions import similarity as sim
 from tigate_spark.functions import text as tx
 from tigate_spark.functions.phash import h32_sql
-from tigate_spark.sources.batch import load_table, scan_fan_out
+from tigate_spark.sources.batch import fan_out_if_small, load_table
 
 
 def _docs_fanned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents scan fanned to core width (scan_fan_out — no-op at lake
-    scale) for the row-local scoring entries, whose whole pipeline would
-    otherwise fuse into the single scan task a one-file input produces
-    (r17: quality_score wall 0.18 s -> 0.10 s at sf0.1)."""
-    import os
-
-    return scan_fan_out(
-        load_table(spark, sf_dir, "documents"),
-        os.path.join(sf_dir, "documents.parquet"),
-    )
+    """documents scan fanned to core width (fan_out_if_small — no-op at
+    lake scale) for the row-local scoring entries, whose whole pipeline
+    would otherwise fuse into the single scan task a one-file input
+    produces (r17: quality_score wall 0.18 s -> 0.10 s at sf0.1)."""
+    return fan_out_if_small(load_table(spark, sf_dir, "documents"))
 
 # ---------------------------------------------------------------------------
 # shared DuckDB snippets (twins of functions/text.py + dedup.py + similarity.py)

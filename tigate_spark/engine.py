@@ -250,12 +250,10 @@ class Engine:
             feed.query.stop()
         feed.state = "removed"
         if drop_state:
-            shutil.rmtree(feed.changefeed.checkpoint_dir, ignore_errors=True)
-            sink = feed.changefeed.sink
-            for attr in ("state_dir", "out_dir"):
-                d = getattr(sink, attr, None)
-                if d and os.path.exists(d):
-                    shutil.rmtree(d, ignore_errors=True)
+            # every per-feed dir, so a feed re-created under the same id
+            # starts clean (no stale checkpoint_ts, no stale lane DBs)
+            for d in feed.changefeed.feed_dirs():
+                shutil.rmtree(d, ignore_errors=True)
 
     def list(self) -> list[dict]:
         return [
@@ -325,11 +323,12 @@ class Engine:
 
     def state_dir(self, changefeed_id: str) -> str:
         """Filesystem location of the changefeed's materialized sink state
-        (the replica table for ``replica://``, the output tree otherwise)
-        — the public 'where is my downstream' accessor, so callers never
-        reach into internals for the read-back path."""
+        (the replica table for ``replica://``, the lane DBs for
+        ``sqlite://``, the output tree otherwise) — the public 'where is
+        my downstream' accessor, so callers never reach into internals for
+        the read-back path."""
         sink = self._get(changefeed_id).changefeed.sink
-        for attr in ("state_dir", "out_dir"):
+        for attr in ("state_dir", "out_dir", "db_dir"):
             d = getattr(sink, attr, None)
             if d:
                 return d

@@ -141,7 +141,7 @@ def _corpus_input_rows(df: DataFrame) -> int | None:
     Spark job), or None when the inputs cannot be sized that way
     (non-file source, remote FS, non-parquet, or more than
     ``_FOOTER_READ_CAP`` files). Same plan-time trigger pattern as
-    ``sources.batch.scan_fan_out``.
+    ``sources.batch.fan_out_if_small``.
 
     Files, not rows-after-filters: a filtered view of a large file — or
     a frame whose lineage spans other parquet tables — is counted at
@@ -195,7 +195,7 @@ def brute_force_topk(df: DataFrame, n_queries: int = 20, k: int = 10,
     ``use_kernel=None`` picks by corpus row count from the parquet
     footers (:data:`KERNEL_MIN_ROWS`, measured crossover; unknown size →
     kernel, the at-scale-correct default) — scale-adaptive like
-    ``scan_fan_out``, not a local-mode constant: a lake-sized corpus
+    ``fan_out_if_small``, not a local-mode constant: a lake-sized corpus
     always takes the kernel. The numpy math is bit-identical to the JVM
     expression chain (exact int64 dots; the float steps are the same
     correctly-rounded IEEE ops in the same order). The 20-row query

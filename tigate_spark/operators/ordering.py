@@ -25,17 +25,6 @@ def op_rank_col(op_col: str = "op") -> Column:
     )
 
 
-def sorted_within_table(df: DataFrame, n_partitions: int | None = None) -> DataFrame:
-    """T1: cluster by table, order by (commit_ts, start_ts, op_rank, pk).
-
-    At 100 TB this is one shuffle; the sort is spillable and per-partition
-    (no global sort / single-reducer bottleneck).
-    """
-    out = df.withColumn("op_rank", op_rank_col())
-    out = out.repartition(*( [n_partitions] if n_partitions else [] ), "table_id")
-    return out.sortWithinPartitions("commit_ts", "start_ts", "op_rank", "pk")
-
-
 def apply_order(df: DataFrame) -> DataFrame:
     """T1/T2: explicit apply sequence per (table_id, pk) — the order a
     same-key consumer must observe (``format.go:50-85``), made testable as
@@ -50,12 +39,6 @@ def range_scan(df: DataFrame, lo: int, hi: int, ts_col: str = "commit_ts") -> Da
     """T2: ``(lo, hi]`` commit-ts range scan (``event_store.go:602,740-767``).
     Pushed to the parquet scan by Catalyst."""
     return df.filter((F.col(ts_col) > lo) & (F.col(ts_col) <= hi))
-
-
-def stale_drop(df: DataFrame, resolved_ts: int | Column, ts_col: str = "commit_ts") -> DataFrame:
-    """T9: drop events at/below the already-handled resolved ts
-    (``downstreamadapter/dispatcher/dispatcher.go:271-279``)."""
-    return df.filter(F.col(ts_col) > resolved_ts)
 
 
 def table_progress(df: DataFrame) -> DataFrame:

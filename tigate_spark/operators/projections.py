@@ -426,15 +426,6 @@ def tidb_row_checksum(lanes: list[tuple["F.Column", str]]) -> "F.Column":
     return F.crc32(F.concat(*[build_checksum_bytes(c, t) for c, t in lanes]))
 
 
-def tidb_row_checksum_bytes(lanes: list[tuple["F.Column", str]]) -> "F.Column":
-    """string: the concatenated checksum input bytes as lowercase hex —
-    the byte-exactness witness next to the folded CRC."""
-    return F.lower(F.hex(
-        F.concat(*[build_checksum_bytes(c, t) for c, t in lanes])))
-
-
-
-
 def updated_columns_projection(df: DataFrame) -> DataFrame:
     """P2: only-updated-columns — for update rows, emit just the column
     names whose value changed between the before and after images

@@ -126,7 +126,7 @@ def count_data_exchanges(df: DataFrame) -> int:
     """Like :func:`count_exchanges`, but additionally ignoring explicit
     round-robin ``repartition(n)`` fan-outs (``REPARTITION_BY_NUM``).
 
-    The r17 adaptive scan fan-out (``sources.batch.scan_fan_out``) inserts
+    The r17 adaptive scan fan-out (``sources.batch.fan_out_if_small``) inserts
     one of these on provably-small inputs so a one-file scan does not
     serialize the whole pipeline into a single task; it is a no-op at lake
     scale. Zero-exchange design gates ("encode/decode is row-local, no

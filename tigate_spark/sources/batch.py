@@ -37,36 +37,6 @@ FAN_OUT_MAX_BYTES = 8 << 30
 _MAX_SPLIT_BYTES = 128 << 20
 
 
-def scan_fan_out(df: DataFrame, *paths: str) -> DataFrame:
-    """Repartition a freshly-scanned DataFrame to ``defaultParallelism``
-    when the file layout cannot feed that many scan tasks.
-
-    The bench/test tables are single-file single-row-group parquet, so
-    every scan — and everything Catalyst fuses into it (projection-heavy
-    encode stages, partial aggregation) — runs in ONE task regardless of
-    core count (guide §2/§6: input splits bound stage parallelism). For
-    expression-heavy pipelines the cheap fix is one small round-robin
-    exchange of the raw rows before the heavy projections.
-
-    Scale-adaptive, not a local[32] constant: the exchange is inserted
-    only when the input is provably too small to parallelize the scan
-    (total bytes < cores × 128 MB split size, capped at 8 GiB). At lake
-    scale the condition is false and this is a no-op — the scan already
-    fans out and an extra exchange of the payload would be pure waste.
-    ``defaultParallelism`` scales with the executor fleet, so the target
-    partition count is right on a real cluster too.
-    """
-    try:
-        total = sum(os.path.getsize(p) for p in paths)
-    except OSError:
-        return df
-    sc = df.sparkSession.sparkContext
-    par = sc.defaultParallelism
-    if total >= par * _MAX_SPLIT_BYTES or total > FAN_OUT_MAX_BYTES:
-        return df
-    return df.repartition(par)
-
-
 def local_paths_from_input_files(files: list[str]) -> list[str] | None:
     """``df.inputFiles()`` URIs → local filesystem paths, or None when any
     input is not a local ``file:`` URI (remote FS — the caller must treat
@@ -85,19 +55,24 @@ def local_paths_from_input_files(files: list[str]) -> list[str] | None:
 
 
 def fan_out_if_small(df: DataFrame) -> DataFrame:
-    """:func:`scan_fan_out` keyed off the frame's OWN input files, for
-    CPU-bound operators that receive an arbitrary frame rather than a
-    fresh scan (shingle/minhash pipelines, embedding quantization).
+    """Repartition ``df`` to ``defaultParallelism`` when its input files
+    are too small to feed that many scan tasks — the one fan-out gate,
+    keyed off the frame's OWN input files.
 
-    r18 (guide §2.4, VERDICT #3): these call sites used to repartition
-    unconditionally — correct for the single-split local testdata and for
-    streaming micro-batches, but a full shuffle of raw documents/vectors
-    that is pure movement at lake scale, where the scan already has
-    splits. The gate is the same bytes condition as :func:`scan_fan_out`
-    (total input bytes < defaultParallelism × 128 MB split size, capped
-    at 8 GiB — generous, per the CPU-bound rationale: widening these
-    kernels beyond split count pays until the scan itself feeds full
-    core width).
+    The bench/test tables are single-file single-row-group parquet, so
+    every scan — and everything Catalyst fuses into it (projection-heavy
+    encode stages, shingle/minhash pipelines, embedding quantization) —
+    runs in ONE task regardless of core count (guide §2/§6: input splits
+    bound stage parallelism). One small round-robin exchange of the raw
+    rows before the heavy projections fixes that. Scale-adaptive, not a
+    local-mode constant: the exchange is inserted only when the input is
+    provably too small to parallelize the scan (total input bytes <
+    defaultParallelism × 128 MB split size, capped at 8 GiB). At lake
+    scale the condition is false and this is a no-op — the scan already
+    fans out and an extra exchange of the payload would be pure waste.
+    Sizing the input FILES, not the table path, keeps a directory-layout
+    table (any Spark-written or lake table) from reading as its
+    directory inode's few bytes.
 
     ``df.inputFiles()`` is an upper bound over the plan's input files
     (filters don't shrink it), so a small filtered view of a big input

@@ -28,13 +28,11 @@ oracle can reproduce it bit-for-bit:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tigate_spark.functions.rounding import round_half_away_bigint
-from tigate_spark.sources.batch import load_table, scan_fan_out
+from tigate_spark.sources.batch import fan_out_if_small, load_table
 
 #: number of logical tables the stream fans out to
 N_TABLES = 4
@@ -69,13 +67,14 @@ def changes_stream(spark: SparkSession, sf_dir: str, with_images: bool = False,
     (+ before/after JSON images when ``with_images``).
 
     ``fan_out`` (default: ``with_images``) round-robins the RAW event rows
-    through :func:`scan_fan_out` before normalization, so the expensive
+    through :func:`~tigate_spark.sources.batch.fan_out_if_small` before
+    normalization, so the expensive
     image/encode projections run at full core width instead of inside the
     single scan task a one-file input produces. The raw rows must be
     exchanged — repartitioning *after* normalization leaves the to_json
     image rendering on the scan side of the exchange (measured r17:
     encode wall 0.41 s → 0.48 s when placed late vs 0.27 s raw-first).
-    No-op at lake scale (see scan_fan_out). Callers aggregating the
+    No-op at lake scale (see fan_out_if_small). Callers aggregating the
     stream (apply/agg entries) keep the default off: their partial
     aggregation belongs fused with the scan, and their single data
     exchange is the plan-gated design point.
@@ -84,7 +83,7 @@ def changes_stream(spark: SparkSession, sf_dir: str, with_images: bool = False,
     if fan_out is None:
         fan_out = with_images
     if fan_out:
-        ev = scan_fan_out(ev, os.path.join(sf_dir, "events.parquet"))
+        ev = fan_out_if_small(ev)
     return normalize_events(ev, with_images)
 
 

@@ -12,7 +12,10 @@ last committed batch.
 Pipeline per micro-batch (the hot loop, §3.2):
   raw events → :func:`normalize_events` (S3) → table/event/expr/start-ts
   filters (F1-F4) → column selector (P1) → start_ts/target_ts range (T2)
-  → sink (K1/K2/K3) with progress + syncpoint bookkeeping (T5/T7/T11).
+  → sink (K1/K2/K3); then the changefeed, not the sink, appends the
+  progress + syncpoint bookkeeping (T5/T7/T11) — the reference's
+  dispatcher tracks table progress (``table_progress.go:24-44``) and its
+  sinks only write. :meth:`Changefeed._foreach_batch` owns all of it.
 
 Everything before the sink is one declarative DataFrame plan, so Catalyst
 pushes the filters into the parquet scan of every micro-batch.
@@ -31,12 +34,15 @@ from tigate_spark.operators import filters as f_ops
 from tigate_spark.operators.projections import column_selectors
 from tigate_spark.session import ensure_confs
 from tigate_spark.sources.changes import normalize_events
+from tigate_spark.streaming.ddl import SchemaRegistry, split_batch_at_ddl
 from tigate_spark.streaming.sinks import (
     Bookkeeping,
     ChangelogSink,
     NoopSink,
     ReplicaSink,
+    StorageSink,
 )
+from tigate_spark.streaming.sqlite_apply import SqliteApplySink
 
 #: payload columns the canonical change rows carry into sinks
 PAYLOAD_COLS = ["event_type", "value_cents", "user_id"]
@@ -333,8 +339,6 @@ class Changefeed:
             if not cfg.bdr_mode or getattr(d, "bdr_role", "") == "primary"
         ]
         self._ddl_applied: set[int] = set()
-        from tigate_spark.streaming.ddl import SchemaRegistry
-
         self.registry = SchemaRegistry(
             os.path.join(work_dir, "registry", cfg.changefeed_id))
         #: redo log (consistent replication, pkg/config/consistent.go):
@@ -351,6 +355,19 @@ class Changefeed:
                                 epoch=cfg.start_ts)
         else:
             self.redo = None
+
+    def feed_dirs(self) -> list[str]:
+        """Every per-feed directory under ``work_dir``. The redo storage
+        and a ``broker-dir`` given in the sink URI are the operator's."""
+        dirs = [self.checkpoint_dir, self.bookkeeping.base_dir,
+                self.registry.path]
+        dirs += [getattr(self.sink, a)
+                 for a in ("state_dir", "out_dir", "checkpoint_dir", "db_dir")
+                 if hasattr(self.sink, a)]
+        if "broker-dir" not in self._sink_query:
+            dirs.append(os.path.join(self.work_dir, "broker",
+                                     self.cfg.changefeed_id))
+        return dirs
 
     # -- source ------------------------------------------------------------
     def _source(self) -> tuple[str, str | None]:
@@ -461,7 +478,6 @@ class Changefeed:
             return ReplicaSink(
                 os.path.join(self.work_dir, "replica", self.cfg.changefeed_id),
                 PAYLOAD_COLS + [n for n, _, _ in (self.cfg.wide_payload or ())],
-                self.bookkeeping,
             )
         if scheme in ("kafka", "changelog"):
             # transport selection on the sink URI (r12) — the production
@@ -543,15 +559,12 @@ class Changefeed:
                     f"(expected wire or confluent)")
             return ChangelogSink(
                 os.path.join(self.work_dir, "changelog", self.cfg.changefeed_id),
-                self.bookkeeping,
                 producer=producer,
                 num_partitions=self.cfg.sink.num_partitions,
             )
         if scheme in ("file", "s3", "storage"):
             # K7 cloud-storage sink (csv_storage_basic/run.sh:23 —
             # file:// URI; s3:// in the broader product)
-            from tigate_spark.streaming.sinks import StorageSink
-
             # unsupported protocols raise (StorageSink validates), like every
             # other sink scheme — a silent csv fallback would mask misconfig
             return StorageSink(
@@ -559,7 +572,6 @@ class Changefeed:
                 protocol=self.cfg.sink.protocol,
                 date_separator=self.cfg.sink.date_separator,
                 timezone=self.cfg.timezone,
-                bookkeeping=self.bookkeeping,
                 file_expiration_days=self.cfg.sink.file_expiration_days,
                 csv_config=self.cfg.sink.csv,
                 only_updated_old=self.cfg.sink.only_output_updated_columns,
@@ -584,8 +596,6 @@ class Changefeed:
             # effective parallelism is min(worker-count, distinct
             # tables) — measured flat 4->16 lanes on the 4-table
             # testdata stream, exactly as that dispatch predicts.
-            from tigate_spark.streaming.sqlite_apply import SqliteApplySink
-
             q = self._sink_query
 
             def _opt(name: str, default: int, cap: int) -> int:
@@ -605,13 +615,10 @@ class Changefeed:
                 n_lanes=_opt("worker-count", 4, 1024),
                 txn_rows=_opt("max-txn-row", 256, 2048),
                 max_packet=_opt("max-packet", 64 * 1024, 1 << 30),
-                bookkeeping=self.bookkeeping,
                 write_source=self.cfg.source_id,
                 driver=get_driver(scheme, self.cfg.sink_uri),
                 split_txn=self.cfg.sink.txn_atomicity != "table",
                 changefeed=self.cfg.changefeed_id,
-                sync_point_us=self.cfg.sync_point_interval_s * 1_000_000
-                if self.cfg.enable_sync_point else None,
                 # batch-dml-enable (mysql/config.go:70, default true)
                 batch_dml=(q.get("batch-dml-enable", ["true"])[0]
                            .lower() in ("true", "1")),
@@ -628,10 +635,17 @@ class Changefeed:
                     for n, _, decl in (self.cfg.wide_payload or ())),
             )
         if scheme in ("noop", "blackhole"):
-            return NoopSink(self.bookkeeping)
+            return NoopSink()
         raise ValueError(f"unsupported sink scheme: {scheme}")  # sink.go:41-56
 
     def _prepare_for_sink(self, batch: DataFrame) -> DataFrame:
+        if isinstance(self.sink, ReplicaSink):
+            # the replica merge keys on (table_id, pk): pre-clustering the
+            # cached batch on the same key gives the cache full-width
+            # parallelism (a 1-file micro-batch otherwise materializes on
+            # one task) and lets the merge agg reuse the partitioning
+            # instead of re-exchanging the incoming side
+            return batch.repartition(F.col("table_id"), F.col("pk"))
         if isinstance(self.sink, ChangelogSink):
             from tigate_spark.functions.encoders import (
                 encode_canal_json,
@@ -798,143 +812,92 @@ class Changefeed:
         return batch
 
     def _foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if self.redo is None:
-            self._foreach_batch_inner(batch_df, batch_id)
-            return
-        # consistent replication: WAL the batch BEFORE any sink action
-        # (log-flush-then-apply — 'nothing is resolved that is not
-        # durably logged'); the per-batch log dir is overwrite-mode, so
-        # a replayed micro-batch rewrites its own logs idempotently.
-        # Due DDL barriers are logged BEFORE resolved_ts advances past
-        # them — a crash in between must leave a redo log whose DDL pass
-        # covers everything below resolved_ts (consistent_replicate_ddl).
-        # checkpoint_ts advances only after the sink committed.
-        batch_df.persist()
-        try:
-            lo, hi = batch_df.agg(
-                F.min("commit_ts"), F.max("commit_ts")).first()
-            if hi is not None:
-                for d in self.ddl_events:
-                    if (d.commit_ts <= hi
-                            and d.commit_ts not in self._ddl_applied):
-                        self.redo.log_ddl(d)
-            self.redo.log_batch(batch_df, batch_id, hi=hi, lo=lo)
-            self._foreach_batch_inner(batch_df, batch_id)
-            if hi is not None:
-                self.redo.mark_applied(batch_id, int(hi))
-        finally:
-            batch_df.unpersist()
+        """The one per-micro-batch path. It owns every side effect of the
+        batch, in this order: redo WAL, sink write (split at due DDL
+        barriers), bookkeeping, redo checkpoint. The sinks only write.
 
-    def _foreach_batch_inner(self, batch_df: DataFrame,
-                             batch_id: int) -> None:
-        # once every configured DDL has been applied, the feed pays zero
-        # barrier overhead — no extra max(commit_ts) job per batch
+        One cache serves every action: the commit-range agg, the WAL, the
+        barrier sub-batch filters, the sink's own actions and the
+        bookkeeping aggregates. The range is computed only when something
+        reads it (redo, a pending DDL, syncpoint), so a plain feed runs no
+        extra job."""
         pending = [d for d in self.ddl_events
                    if d.commit_ts not in self._ddl_applied]
-        if not pending:
-            self._apply_batch(batch_df, batch_id)
-            return
-        # first-class DDL barrier (T8): a configured DDL is due in the
-        # first micro-batch whose commit range reaches its ts; the batch
-        # splits at each due barrier (split_batch_at_ddl), the schema
-        # registry records the version between sub-batches, and a sink
-        # that can EXECUTE DDL (the SQLite writer loop) runs it on the
-        # owning lane. Exactly-once across restart: the in-memory
-        # applied-set is lost, but a replayed barrier converges — the
-        # registry append is idempotent and the executing sink treats
-        # the duplicate-DDL error class as already-applied
-        # (pkg/apperror/util.go:36-55), the reference's own replay story.
-        from tigate_spark.streaming.ddl import split_batch_at_ddl
-
-        # one cache serves the due-check agg, every sub-batch filter,
-        # and the once-per-batch bookkeeping below — split_batch_at_ddl
-        # sees the batch already persisted and leaves the cache alone
-        batch_df.persist()
-        try:
-            mx = batch_df.agg(F.max("commit_ts")).collect()[0][0]
-            due = sorted(
-                (d for d in pending
-                 if mx is not None and mx >= d.commit_ts),
-                key=lambda d: d.commit_ts,
-            )
-            if not due:
-                self._apply_batch(batch_df, batch_id)
-                return
-
-            def apply_dml(part_df: DataFrame, sub: int) -> None:
-                self._apply_batch(part_df, batch_id, fence_sub=sub)
-
-            def apply_ddl(d) -> None:
-                # (redo feeds already WAL'd this DDL in _foreach_batch,
-                # before resolved_ts advanced past it)
-                self.registry.append(self.spark, d, idempotent=True)
-                from tigate_spark.streaming.sqlite_apply import (
-                    SqliteApplySink,
-                )
-
-                if (isinstance(self.sink, SqliteApplySink)
-                        and d.schema_name and d.table_name
-                        and d.table_id is not None):
-                    self.sink.exec_ddl(
-                        d.query, d.schema_name, d.table_name, d.table_id)
-                    # downstream ddl_ts_v1 watermark (mysql_writer.go:
-                    # 280-340): dropped tables lose their row, every
-                    # other DDL upserts it
-                    if d.query.strip().upper().startswith("DROP TABLE"):
-                        self.sink.record_ddl_ts(
-                            d.commit_ts, [], drop_table_ids=[d.table_id])
-                    else:
-                        self.sink.record_ddl_ts(d.commit_ts, [d.table_id])
-                self._ddl_applied.add(d.commit_ts)
-
-            # bookkeeping (K4 progress + K5 syncpoint ticks) is a per-
-            # MICRO-BATCH contract — one progress row per touched table
-            # and one aligned tick range per batch, same as the barrier-
-            # less path. Sub-batches each run the sink's process_batch,
-            # so detach the sink's bookkeeping for the split and record
-            # ONCE over the full batch; otherwise the affected table gets
-            # a progress row per sub-batch and overlapping sub-ranges
-            # emit duplicate primary_ts ticks into the ts-map (whose
-            # syncpoint_v1 contract has unique primary_ts rows).
-            bk = getattr(self.sink, "bookkeeping", None)
-            self.sink.bookkeeping = None
-            try:
-                split_batch_at_ddl(batch_df, due, apply_dml, apply_ddl)
-            finally:
-                self.sink.bookkeeping = bk
-            if bk is not None:
-                bk.record(batch_df, batch_id)
-                if hasattr(self.sink, "mirror_syncpoint"):
-                    # sub-batches skipped their mirror (bookkeeping was
-                    # detached); record the downstream ticks ONCE over
-                    # the full micro-batch, same as bk.record above
-                    self.sink.mirror_syncpoint(batch_df)
-        finally:
-            batch_df.unpersist()
-
-    def _apply_batch(self, batch_df: DataFrame, batch_id: int,
-                     fence_sub: int | None = None) -> None:
-        # every sink runs several actions per batch (data write,
-        # bookkeeping, checkpoint) — cache the batch once so the source is
-        # scanned once, not once per action. The replica merge keys on
-        # (table_id, pk): pre-clustering the cache on the same key gives
-        # the cache full-width parallelism (a 1-file micro-batch otherwise
-        # materializes on one task) and lets the merge agg reuse the
-        # partitioning instead of re-exchanging the incoming side.
-        if isinstance(self.sink, ReplicaSink):
-            batch_df = batch_df.repartition(F.col("table_id"), F.col("pk"))
         prepared = self._prepare_for_sink(batch_df).persist()
         try:
-            if fence_sub is not None:
-                from tigate_spark.streaming.sqlite_apply import SqliteApplySink
+            lo = hi = None
+            if (self.redo is not None or pending
+                    or self.bookkeeping.sync_point_us):
+                lo, hi = prepared.agg(
+                    F.min("commit_ts"), F.max("commit_ts")).first()
+            # a configured DDL is due in the first micro-batch whose
+            # commit range reaches its ts
+            due = sorted((d for d in pending
+                          if hi is not None and d.commit_ts <= hi),
+                         key=lambda d: d.commit_ts)
+            if self.redo is not None:
+                # consistent replication: WAL the batch BEFORE any sink
+                # action (log-flush-then-apply — 'nothing is resolved that
+                # is not durably logged'); the per-batch log dir is
+                # overwrite-mode, so a replayed micro-batch rewrites its
+                # own logs idempotently. Due DDL barriers are logged
+                # BEFORE resolved_ts advances past them — a crash in
+                # between must leave a redo log whose DDL pass covers
+                # everything below resolved_ts (consistent_replicate_ddl).
+                for d in due:
+                    self.redo.log_ddl(d)
+                self.redo.log_batch(prepared.select(*batch_df.columns),
+                                    batch_id, hi=hi, lo=lo)
+            if not due:
+                self.sink.process_batch(prepared, batch_id)
+            else:
+                # first-class DDL barrier (T8): the batch splits at each
+                # due barrier, the schema registry records the version
+                # between sub-batches, and a sink that can EXECUTE DDL
+                # (the SQLite writer loop) runs it on the owning lane.
+                # Exactly-once across restart: the in-memory applied-set
+                # is lost, but a replayed barrier converges — the
+                # registry append is idempotent and the executing sink
+                # treats the duplicate-DDL error class as
+                # already-applied (pkg/apperror/util.go:36-55), the
+                # reference's own replay story.
+                executes_sql = isinstance(self.sink, SqliteApplySink)
 
-                if isinstance(self.sink, SqliteApplySink):
-                    # barrier sub-batches fence per (batch, sub) so a
-                    # replayed barrier converges per sub-batch
-                    self.sink.process_batch(
-                        prepared, batch_id, fence=f"b{batch_id}.s{fence_sub}")
-                    return
-            self.sink.process_batch(prepared, batch_id)
+                def apply_dml(part: DataFrame, sub: int) -> None:
+                    # an executing sink fences each sub-batch on its own,
+                    # so a replayed barrier converges per sub-batch
+                    kw = {"fence": f"b{batch_id}.s{sub}"} if executes_sql \
+                        else {}
+                    self.sink.process_batch(part, batch_id, **kw)
+
+                def apply_ddl(d) -> None:
+                    self.registry.append(self.spark, d, idempotent=True)
+                    if (executes_sql and d.schema_name and d.table_name
+                            and d.table_id is not None):
+                        self.sink.exec_ddl(
+                            d.query, d.schema_name, d.table_name, d.table_id)
+                        # downstream ddl_ts_v1 watermark (mysql_writer.go:
+                        # 280-340): dropped tables lose their row, every
+                        # other DDL upserts it
+                        if d.query.strip().upper().startswith("DROP TABLE"):
+                            self.sink.record_ddl_ts(
+                                d.commit_ts, [], drop_table_ids=[d.table_id])
+                        else:
+                            self.sink.record_ddl_ts(d.commit_ts, [d.table_id])
+                    self._ddl_applied.add(d.commit_ts)
+
+                # prepared is persisted here, so the split owns no cache
+                split_batch_at_ddl(prepared, due, apply_dml, apply_ddl)
+            # K4 progress + K5 syncpoint ticks: once per micro-batch,
+            # after the sink committed, however the barriers split it
+            ticks = self.bookkeeping.record(prepared, batch_id, lo=lo, hi=hi)
+            if ticks and isinstance(self.sink, SqliteApplySink):
+                # the downstream tidb_cdc syncpoint_v1 rows a real
+                # MySQL-sink consumer reads (K5 on the executable sink)
+                self.sink.mirror_syncpoint(ticks, hi)
+            if self.redo is not None and hi is not None:
+                # checkpoint_ts advances only after the sink committed
+                self.redo.mark_applied(batch_id, int(hi))
         finally:
             prepared.unpersist()
 

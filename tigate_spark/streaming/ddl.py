@@ -17,7 +17,6 @@ with the version in effect at ``commit_ts - 1``
 
 from __future__ import annotations
 
-import json
 import os
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -156,9 +155,3 @@ def split_batch_at_ddl(
         if own_cache:
             batch_df.unpersist()
     return audit
-
-
-def write_audit(path: str, batch_id: int, audit: list[dict]) -> None:
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, f"batch-{batch_id}.json"), "w") as f:
-        json.dump(audit, f)

@@ -15,11 +15,15 @@ Reference parity:
   at-least-once contract as the reference MQ sink.
 - K3 blackhole (``downstreamadapter/sink/blackhole.go``): :class:`NoopSink`.
 - K4 ddl-ts bookkeeping (``mysql_writer.go:280-330``) and
-  T5/T11 progress: every sink appends per-batch checkpoint rows
-  (batch_id, table_id, resolved_ts, n_events) to a bookkeeping table.
+  T5/T11 progress: the changefeed appends per-batch checkpoint rows
+  (batch_id, table_id, resolved_ts, n_events) to a bookkeeping table
+  through :class:`Bookkeeping`, once per micro-batch after the sink
+  wrote it — the sinks only write, as the reference's sinks do while
+  its dispatcher tracks table progress (``table_progress.go:24-44``).
 - K5 syncpoint ts-map (``mysql_writer.go:154-200,525-545``): aligned ticks
   appended per batch when sync point is enabled (T7,
-  ``downstreamadapter/syncpoint/syncpoint.go:15-22``).
+  ``downstreamadapter/syncpoint/syncpoint.go:15-22``), derived on the
+  driver from the batch's commit range.
 
 Deletes are kept as tombstones in the replica state so a late/replayed
 older change cannot resurrect a deleted key (the stale-drop guarantee T9,
@@ -40,10 +44,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tigate_spark.operators.ordering import op_rank_col
-
-#: syncpoint alignment interval (µs) when enabled — 1h like the reference default
-DEFAULT_SYNC_POINT_US = 3600 * 1_000_000
-
 
 #: replica state layout (manifest-versioned, Delta-log-style)
 _MANIFEST = "_manifest"
@@ -144,6 +144,7 @@ class Bookkeeping:
 
     def __init__(self, base_dir: str, sync_point_us: int | None = None,
                  sync_point_retention_us: int | None = None):
+        self.base_dir = base_dir
         self.progress_dir = os.path.join(base_dir, "table_progress")
         self.syncpoint_dir = os.path.join(base_dir, "syncpoint")
         self.sync_point_us = sync_point_us
@@ -170,42 +171,44 @@ class Bookkeeping:
                     ignore_errors=True,
                 )
 
-    def record(self, batch_df: DataFrame, batch_id: int) -> None:
+    def record(self, batch_df: DataFrame, batch_id: int,
+               lo: int | None = None, hi: int | None = None) -> list[int]:
+        """Append the batch's per-table progress rows and, with sync point
+        on, its syncpoint ticks; return the ticks. ``lo``/``hi`` is the
+        batch's commit range, which the changefeed has already computed
+        whenever sync point is on (None for an empty batch)."""
         progress = batch_df.groupBy("table_id").agg(
             F.max("commit_ts").alias("resolved_ts"),
             F.count(F.lit(1)).alias("n_events"),
         ).withColumn("batch_id", F.lit(batch_id))
         progress.write.mode("append").parquet(self.progress_dir)
-        if self.sync_point_us:
-            iv = self.sync_point_us
-            # aligned ticks covered by this batch: CalculateStartSyncPointTs
-            # rounds up to the next interval boundary (syncpoint.go:15-22).
-            # K5 ts-map rows are (primary_ts, secondary_ts) pairs like the
-            # reference syncpoint_v1 table (mysql_writer.go:528-542, :154-185:
-            # secondary_ts = downstream current ts when the tick is written);
-            # here the downstream position at tick time is the replica's max
-            # applied commit_ts for the batch that crossed the boundary.
-            # A batch inside one interval has first > last: no ticks.
-            first = (F.floor(F.col("lo") / iv) + 1) * iv
-            last = F.floor(F.col("hi") / iv) * iv
-            ticks = batch_df.agg(
-                F.min("commit_ts").alias("lo"), F.max("commit_ts").alias("hi")
-            ).select(
-                F.explode(
-                    F.when(first <= last, F.sequence(first, last, F.lit(iv)))
-                ).alias("primary_ts"),
-                F.col("hi").alias("secondary_ts"),
-            ).withColumn("batch_id", F.lit(batch_id))
-            if self.sync_point_retention_us:
-                bucket = max(self.sync_point_retention_us // 4, 1)
-                ticks = ticks.withColumn(
-                    "sp_epoch",
-                    F.expr(f"primary_ts div {bucket}"))
-                (ticks.write.partitionBy("sp_epoch")
-                 .mode("append").parquet(self.syncpoint_dir))
-                self._prune_syncpoint()
-            else:
-                ticks.write.mode("append").parquet(self.syncpoint_dir)
+        if not self.sync_point_us:
+            return []
+        iv = self.sync_point_us
+        # aligned ticks covered by this batch: CalculateStartSyncPointTs
+        # rounds up to the next interval boundary (syncpoint.go:15-22); a
+        # batch inside one interval crosses none. K5 ts-map rows are
+        # (primary_ts, secondary_ts) pairs like the reference syncpoint_v1
+        # table (mysql_writer.go:528-542, :154-185: secondary_ts =
+        # downstream current ts when the tick is written); here the
+        # downstream position at tick time is the batch's max applied
+        # commit_ts.
+        ticks = [] if hi is None else list(
+            range((lo // iv + 1) * iv, (hi // iv) * iv + 1, iv))
+        rows = [(t, hi, batch_id) for t in ticks]
+        schema = "primary_ts bigint, secondary_ts bigint, batch_id int"
+        spark = batch_df.sparkSession
+        if self.sync_point_retention_us:
+            bucket = max(self.sync_point_retention_us // 4, 1)
+            (spark.createDataFrame([r + (r[0] // bucket,) for r in rows],
+                                   schema + ", sp_epoch bigint")
+             .write.partitionBy("sp_epoch")
+             .mode("append").parquet(self.syncpoint_dir))
+            self._prune_syncpoint()
+        else:
+            (spark.createDataFrame(rows, schema)
+             .write.mode("append").parquet(self.syncpoint_dir))
+        return ticks
 
 
 class ReplicaSink:
@@ -238,11 +241,9 @@ class ReplicaSink:
     """
 
     def __init__(self, state_dir: str, payload_cols: list[str],
-                 bookkeeping: Bookkeeping | None = None,
                  compact_every: int = 16):
         self.state_dir = state_dir
         self.payload_cols = payload_cols
-        self.bookkeeping = bookkeeping
         self.compact_every = max(2, compact_every)
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -305,8 +306,6 @@ class ReplicaSink:
         (touched.withColumn("version", F.lit(next_ver).cast("bigint"))
          .coalesce(1)
          .write.mode("append").parquet(_manifest_dir(self.state_dir)))
-        if self.bookkeeping:
-            self.bookkeeping.record(batch_df, batch_id)
         if n_versions + 1 > self.compact_every:
             self.compact(spark)
 
@@ -384,14 +383,13 @@ class ChangelogSink:
     the resend duplicate-free — the idempotent-producer contract,
     sarama_factory.go/admin.go)."""
 
-    def __init__(self, out_dir: str, bookkeeping: Bookkeeping | None = None,
-                 producer=None, num_partitions: int = 16):
+    def __init__(self, out_dir: str, producer=None,
+                 num_partitions: int = 16):
         self.out_dir = out_dir
         #: K6: resolved-ts broadcast — one checkpoint message per topic per
         #: batch so consumers can advance without waiting for data
         #: (kafka_ddl_worker.go checkpoint loop; event_broker.go:579-606)
         self.checkpoint_dir = out_dir.rstrip("/") + "_checkpoint"
-        self.bookkeeping = bookkeeping
         self.producer = producer
         self.num_partitions = num_partitions
 
@@ -432,8 +430,8 @@ class ChangelogSink:
         # the micro-batch's few source-read tasks — with the shuffle here,
         # a 1-file micro-batch encoded single-threaded. File count per
         # batch stays bounded by the shuffle's (topic, partition) grouping.
-        # The checkpoint/bookkeeping aggs only touch (topic, table_id,
-        # commit_ts) — Catalyst prunes the encode out of those scans.
+        # The checkpoint agg only touches (topic, commit_ts) — Catalyst
+        # prunes the encode out of that scan.
         out_cols = [c for c in ("topic", "partition", "key", "value",
                                 "message", "seq", "commit_ts",
                                 "table_id", "pk")
@@ -461,8 +459,6 @@ class ChangelogSink:
             ).alias("message"),
         )
         ckpt.write.mode("append").parquet(self.checkpoint_dir)
-        if self.bookkeeping:
-            self.bookkeeping.record(batch_df, batch_id)
 
 
 #: TiCDC storage-sink date-separator → directory date format
@@ -500,7 +496,6 @@ class StorageSink:
 
     def __init__(self, out_dir: str, protocol: str = "csv",
                  date_separator: str = "day",
-                 bookkeeping: Bookkeeping | None = None,
                  files_per_leaf: int = 4,
                  timezone: str | None = None,
                  file_expiration_days: int | None = None,
@@ -521,7 +516,6 @@ class StorageSink:
         #: `time-zone`): the reference renders dated paths in the
         #: configured zone; None keeps the engine's UTC time base
         self.timezone = timezone
-        self.bookkeeping = bookkeeping
         #: writer fan-out per leaf dir — a hot table's daily partition is
         #: written by up to this many tasks instead of funneling through one
         self.files_per_leaf = max(1, files_per_leaf)
@@ -621,8 +615,6 @@ class StorageSink:
             os.replace(tmp, meta_path)
         if self.file_expiration_days is not None and row["ts"] is not None:
             self._prune_expired(batch_max_ts=int(row["ts"]))
-        if self.bookkeeping:
-            self.bookkeeping.record(batch_df, batch_id)
 
     def _prune_expired(self, batch_max_ts: int) -> None:
         """Drop dt= partitions older than file_expiration_days behind
@@ -673,13 +665,8 @@ def read_storage(spark: SparkSession, out_dir: str) -> DataFrame:
 class NoopSink:
     """K3: blackhole (throughput measurement)."""
 
-    def __init__(self, bookkeeping: Bookkeeping | None = None):
-        self.bookkeeping = bookkeeping
-
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.format("noop").mode("overwrite").save()
-        if self.bookkeeping:
-            self.bookkeeping.record(batch_df, batch_id)
 
 
 __all__ = [

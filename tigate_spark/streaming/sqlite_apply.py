@@ -1014,10 +1014,9 @@ class SqliteApplySink:
 
     def __init__(self, db_dir: str, n_lanes: int = DEFAULT_LANES,
                  txn_rows: int = 256, max_packet: int = 64 * 1024,
-                 bookkeeping=None, write_source: int | None = None,
+                 write_source: int | None = None,
                  driver=None, split_txn: bool = True,
                  changefeed: str = "", cluster_id: str = "default",
-                 sync_point_us: int | None = None,
                  batch_dml: bool = True,
                  multirow_dml: bool = False,
                  wide_cols: tuple[tuple[str, str], ...] = ()):
@@ -1025,7 +1024,6 @@ class SqliteApplySink:
         self.n_lanes = n_lanes
         self.txn_rows = txn_rows
         self.max_packet = max_packet
-        self.bookkeeping = bookkeeping
         #: this writer's tidb_cdc_write_source twin (helper.go:334-343)
         self.write_source = write_source
         #: identity columns of the downstream tidb_cdc bookkeeping tables
@@ -1033,9 +1031,6 @@ class SqliteApplySink:
         #: .ClusterID, default "default"; changefeed = the feed id)
         self.changefeed = changefeed
         self.cluster_id = cluster_id
-        #: when set, syncpoint ticks are ALSO written to the downstream
-        #: tidb_cdc__syncpoint_v1 table (K5 on the executable sink)
-        self.sync_point_us = sync_point_us
         #: DBAPI seam (streaming/dbapi.py): connect factory + error
         #: classifier; shipped to executors inside the foreachPartition
         #: closure, so it must be picklable
@@ -1179,16 +1174,6 @@ class SqliteApplySink:
 
         (stmts.repartition(self.n_lanes, "lane")
               .foreachPartition(run_partition))
-        if self.bookkeeping:
-            # table-progress + syncpoint recording (T5/T7/T11), same as
-            # every other sink scheme
-            self.bookkeeping.record(changes, batch_id)
-            # ...plus the DOWNSTREAM tidb_cdc.syncpoint_v1 rows a real
-            # MySQL-sink consumer reads (K5 on the executable sink).
-            # Gated on the attached bookkeeping so DDL-barrier sub-
-            # batches (which detach it) record once per micro-batch,
-            # via the caller's full-batch mirror_syncpoint call.
-            self.mirror_syncpoint(changes)
 
     # -- tidb_cdc downstream bookkeeping tables ------------------------
     # The reference's MySQL writer maintains `tidb_cdc`.`ddl_ts_v1`
@@ -1253,37 +1238,15 @@ class SqliteApplySink:
         """SendSyncPointEvent twin: insert-ignore one ts-map row
         (mysql_writer.go:154-200; secondary_ts = the downstream applied
         position when the tick was written)."""
-        con, cur = self._cdc_connect()
-        try:
-            cur.execute(
-                "INSERT OR IGNORE INTO tidb_cdc__syncpoint_v1 "
-                "(ticdc_cluster_id, changefeed, primary_ts, secondary_ts) "
-                "VALUES (?, ?, ?, ?)",
-                (self.cluster_id, self.changefeed, str(int(primary_ts)),
-                 str(int(secondary_ts))))
-            con.commit()
-        finally:
-            con.close()
+        self.mirror_syncpoint([primary_ts], secondary_ts)
 
-    def mirror_syncpoint(self, batch_df: DataFrame) -> None:
-        """Write the aligned ticks this batch crossed into the downstream
-        syncpoint_v1 (same tick arithmetic as Bookkeeping.record; two
-        O(1) scalar aggregates on the already-persisted batch). All of a
-        batch's ticks land in ONE connection/transaction — a per-tick
-        connection costs an fsync each and bends the per-batch flatness
-        curve when the tick interval is small relative to a batch's
-        event-time span (measured r12)."""
-        if not self.sync_point_us:
-            return
-        row = batch_df.agg(F.min("commit_ts").alias("lo"),
-                           F.max("commit_ts").alias("hi")).first()
-        if row is None or row["lo"] is None:
-            return
-        iv = self.sync_point_us
-        ticks = list(range((row["lo"] // iv + 1) * iv,
-                           (row["hi"] // iv) * iv + 1, iv))
-        if not ticks:
-            return
+    def mirror_syncpoint(self, ticks: list[int], secondary_ts: int) -> None:
+        """Write a micro-batch's syncpoint ticks (the ones
+        Bookkeeping.record derived and returned) into the downstream
+        syncpoint_v1, first writer wins. All of a batch's ticks land in
+        ONE connection/transaction — a per-tick connection costs an fsync
+        each and bends the per-batch flatness curve when the tick interval
+        is small relative to a batch's event-time span (measured r12)."""
         con, cur = self._cdc_connect()
         try:
             cur.executemany(
@@ -1291,7 +1254,7 @@ class SqliteApplySink:
                 "(ticdc_cluster_id, changefeed, primary_ts, secondary_ts) "
                 "VALUES (?, ?, ?, ?)",
                 [(self.cluster_id, self.changefeed, str(int(t)),
-                  str(int(row["hi"]))) for t in ticks])
+                  str(int(secondary_ts))) for t in ticks])
             con.commit()
         finally:
             con.close()
