@@ -2,11 +2,21 @@
 end-to-end inside a `queries()` builder, oracle-checked like every batch
 operator.
 
-The builder executes a real ``readStream → foreachBatch`` query
-(availableNow) into a temp replica dir, then returns the replica as a
-DataFrame — so the driver's hash-match proves the *streaming* engine
-produces the same final state as the DuckDB last-writer-wins oracle
-(`sync_diff_inspector` equivalence, SURVEY §5).
+The builder executes a real ``readStream → writeStream`` query into a
+temp work dir, then returns the downstream state as a DataFrame — so the
+driver's hash-match proves the *streaming* engine produces the same
+final state as the DuckDB last-writer-wins oracle (`sync_diff_inspector`
+equivalence, SURVEY §5).
+
+Every query runs to completion through one lifecycle: a
+:class:`Changefeed`/``Engine`` run, or
+:func:`~tigate_spark.streaming.changefeed.run_available_now` for the
+bespoke ``foreachBatch``/stateful queries. Either way a timed-out query
+is stopped and raises before its work dir is removed, and a multi-batch
+entry states its floor as ``min_batches`` over the COMMITTED batch count.
+Entries that need several micro-batches split their source with
+:func:`split_df_in_order` (one file per part, pinned mtimes, so the file
+source's batch order is the split order).
 """
 
 from __future__ import annotations
@@ -23,6 +33,7 @@ from pyspark.sql import functions as F
 from tigate_spark.catalog import register
 from tigate_spark.config import ChangefeedConfig
 from tigate_spark.sources.changes import ORACLE_CHANGES_CTE
+from tigate_spark.streaming.changefeed import Changefeed, run_available_now
 
 #: session-scoped parquet dir for entry results that outlive the entry's
 #: temp workdir; removed at interpreter exit
@@ -65,11 +76,10 @@ FROM ordered WHERE rn = 1 AND op <> 'D'
         "(SURVEY §3.2; mysql sink K1 + T5/T11 bookkeeping)",
 )
 def streaming_replica_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tigate_spark.streaming.changefeed import Changefeed
     from tigate_spark.streaming.sinks import read_replica
 
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         cfg = ChangefeedConfig(changefeed_id="e2e", sink_uri="replica://")
         cf = Changefeed(
             spark, cfg, os.path.join(sf_dir, "events.parquet"), work
@@ -80,8 +90,6 @@ def streaming_replica_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type", "value_cents",
         )
         return _materialize(replica)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 _CHANGELOG_ORACLE = ORACLE_CHANGES_CTE + """
@@ -107,10 +115,8 @@ FROM changes
         "message-for-message against the oracle (K2, SURVEY §3.2)",
 )
 def streaming_changelog_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tigate_spark.streaming.changefeed import Changefeed
-
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         cfg = ChangefeedConfig(changefeed_id="log-e2e", sink_uri="changelog://")
         cf = Changefeed(
             spark, cfg, os.path.join(sf_dir, "events.parquet"), work
@@ -120,8 +126,6 @@ def streaming_changelog_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             "seq", "topic", "partition", "message"
         )
         return _materialize(log)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -137,13 +141,11 @@ GROUP BY table_id, pk
         "per key across micro-batches (GroupState = one boolean per key)",
 )
 def streaming_first_seen_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     from tigate_spark.sources.changes import normalize_events
     from tigate_spark.streaming.stateful import first_seen
 
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         src = os.path.join(sf_dir, "events.parquet")
         schema = spark.read.parquet(src).schema
         raw = (
@@ -154,19 +156,13 @@ def streaming_first_seen_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ch = normalize_events(raw).withColumn(
             "k", F.concat_ws(":", F.col("table_id"), F.col("pk"))
         )
-        out_dir, ckpt = os.path.join(work, "out"), os.path.join(work, "ckpt")
-        q = (
+        out_dir = os.path.join(work, "out")
+        run_available_now(
             first_seen(ch, "k", "pk", "seq")
-            .writeStream.format("parquet")
-            .option("path", out_dir).option("checkpointLocation", ckpt)
-            .trigger(availableNow=True).start()
+            .writeStream.format("parquet").option("path", out_dir),
+            os.path.join(work, "ckpt"),
         )
-        q.awaitTermination(300)
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
         return _materialize(spark.read.parquet(out_dir))
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -188,8 +184,8 @@ def streaming_window_counts_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tigate_spark.sources.changes import normalize_events
     from tigate_spark.streaming.stateful import windowed_counts
 
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         src = os.path.join(sf_dir, "events.parquet")
         schema = spark.read.parquet(src).schema
         raw = (
@@ -203,24 +199,16 @@ def streaming_window_counts_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             "table_id",
             "n_events",
         )
-        out_dir, ckpt = os.path.join(work, "out"), os.path.join(work, "ckpt")
+        out_dir = os.path.join(work, "out")
 
         def write_windows(batch_df: DataFrame, batch_id: int) -> None:
             batch_df.write.mode("overwrite").parquet(out_dir)
 
-        q = (
-            out.writeStream.outputMode("complete")
-            .foreachBatch(write_windows)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        run_available_now(
+            out.writeStream.outputMode("complete").foreachBatch(write_windows),
+            os.path.join(work, "ckpt"),
         )
-        q.awaitTermination(300)
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
         return _materialize(spark.read.parquet(out_dir))
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 _STORAGE_ORACLE = ORACLE_CHANGES_CTE + """
@@ -247,11 +235,10 @@ FROM changes
         "read back via partition discovery and hash-matched line-for-line",
 )
 def streaming_storage_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tigate_spark.streaming.changefeed import Changefeed
     from tigate_spark.streaming.sinks import read_storage
 
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         cfg = ChangefeedConfig(changefeed_id="store-e2e", sink_uri="file://out")
         cfg.sink.protocol = "csv"
         cf = Changefeed(
@@ -262,8 +249,6 @@ def streaming_storage_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             "schema_name", "table_name", "dt", F.col("value").alias("line")
         )
         return _materialize(tree)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 _TXN_MATCH_ORACLE = ORACLE_CHANGES_CTE + """
@@ -313,27 +298,17 @@ def streaming_txn_match_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.timestamp_micros("commit_ts").alias("c_time"),
     )
     matched = match_prewrite_commit_streams(pre, com)
-    work = tempfile.mkdtemp(prefix="tigate-txn-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-txn-",
+                                     ignore_cleanup_errors=True) as work:
         out_dir = os.path.join(work, "out")
-        q = (
-            matched.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        run_available_now(
+            matched.writeStream.format("parquet").option("path", out_dir),
+            os.path.join(work, "ckpt"),
         )
-        q.awaitTermination(300)
-        if q.isActive:
-            q.stop()
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
         res = spark.read.parquet(out_dir).select(
             "start_ts", "pk", "commit_ts", "value_cents", "event_type", "seq"
         )
         return _materialize(res)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -366,8 +341,8 @@ FROM g GROUP BY user_id, sess
 def streaming_sessions_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tigate_spark.sources.changes import normalize_events
 
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         src = os.path.join(sf_dir, "events.parquet")
         schema = spark.read.parquet(src).schema
         raw = (
@@ -390,24 +365,17 @@ def streaming_sessions_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("user_id", "first_ts", "last_ts", "n_events")
         )
-        out_dir, ckpt = os.path.join(work, "out"), os.path.join(work, "ckpt")
+        out_dir = os.path.join(work, "out")
 
         def write_sessions(batch_df: DataFrame, batch_id: int) -> None:
             batch_df.write.mode("overwrite").parquet(out_dir)
 
-        q = (
+        run_available_now(
             agg.writeStream.outputMode("complete")
-            .foreachBatch(write_sessions)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .foreachBatch(write_sessions),
+            os.path.join(work, "ckpt"),
         )
-        q.awaitTermination(300)
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
         return _materialize(spark.read.parquet(out_dir))
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -425,10 +393,8 @@ GROUP BY topic
         "first oracle-checked entry for the broadcast table itself",
 )
 def sink_checkpoint_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tigate_spark.streaming.changefeed import Changefeed
-
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         cfg = ChangefeedConfig(changefeed_id="k6-e2e", sink_uri="changelog://")
         cf = Changefeed(
             spark, cfg, os.path.join(sf_dir, "events.parquet"), work
@@ -438,8 +404,6 @@ def sink_checkpoint_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
             "topic", "message"
         )
         return _materialize(ckpt)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -458,10 +422,8 @@ GROUP BY table_id
         "first oracle-checked entry for the bookkeeping table itself",
 )
 def sink_batch_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tigate_spark.streaming.changefeed import Changefeed
-
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         cfg = ChangefeedConfig(changefeed_id="k4-e2e", sink_uri="replica://")
         cf = Changefeed(
             spark, cfg, os.path.join(sf_dir, "events.parquet"), work
@@ -472,8 +434,6 @@ def sink_batch_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("batch_id").cast("bigint").alias("batch_id"),
         )
         return _materialize(progress)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -493,10 +453,8 @@ GROUP BY table_id
         "first oracle-checked entry for K3",
 )
 def streaming_blackhole_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tigate_spark.streaming.changefeed import Changefeed
-
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         cfg = ChangefeedConfig(changefeed_id="k3-e2e", sink_uri="noop://")
         cf = Changefeed(
             spark, cfg, os.path.join(sf_dir, "events.parquet"), work
@@ -507,8 +465,6 @@ def streaming_blackhole_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("batch_id").cast("bigint").alias("batch_id"),
         )
         return _materialize(progress)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -535,35 +491,21 @@ GROUP BY 1, 2
 def streaming_incr_agg_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tigate_spark.sources.changes import normalize_events
 
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         src = os.path.join(sf_dir, "events.parquet")
-        base = spark.read.parquet(src)
         # deterministic 4-way commit-range split so the availableNow run
         # really is multi-batch (one file per trigger)
-        src_dir = os.path.join(work, "src")
-        n = base.count()
-        per = max(n // 4, 1)
-        ranked = base.withColumn(
-            "part",
-            F.expr(
-                "least(cast((row_number() over (order by ts, event_id) - 1) "
-                f"div {per} as int), 3)"
-            ),
-        )
-        # one partitioned write: the global row_number window leaves a
-        # single partition, so each part= dir gets exactly one file
-        ranked.write.partitionBy("part").parquet(src_dir)
-        schema = base.schema
+        flat, land = split_commit_order(spark, src, work, 4)
+        n = sum(land(k) for k in range(4))
         raw = (
-            spark.readStream.schema(schema)
+            spark.readStream.schema(spark.read.parquet(src).schema)
             .option("maxFilesPerTrigger", "1")
             .option("pathGlobFilter", "*.parquet")
-            .parquet(os.path.join(src_dir, "part=*"))
+            .parquet(flat)
         )
         ch = normalize_events(raw)
         delta_dir = os.path.join(work, "deltas")
-        ckpt = os.path.join(work, "ckpt")
 
         def append_delta(batch_df: DataFrame, batch_id: int) -> None:
             delta = batch_df.groupBy("table_id", "event_type").agg(
@@ -573,24 +515,9 @@ def streaming_incr_agg_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             delta.write.mode("append").parquet(delta_dir)
 
-        q = (
-            ch.writeStream.foreachBatch(append_delta)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
-        n_batches = (
-            spark.read.json(os.path.join(ckpt, "offsets")).count()
-            if os.path.isdir(os.path.join(ckpt, "offsets"))
-            else 0
-        )
-        if n > 4 and n_batches < 2:
-            raise RuntimeError(
-                f"expected a multi-batch run, got {n_batches} micro-batches"
-            )
+        run_available_now(ch.writeStream.foreachBatch(append_delta),
+                          os.path.join(work, "ckpt"),
+                          min_batches=2 if n > 4 else 0)
         # compaction: the maintained view = fold of the appended deltas
         view = (
             spark.read.parquet(delta_dir)
@@ -602,8 +529,6 @@ def streaming_incr_agg_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return _materialize(view)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -652,21 +577,12 @@ def streaming_ddl_barrier_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         split_batch_at_ddl,
     )
 
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         src = os.path.join(sf_dir, "events.parquet")
         base = spark.read.parquet(src)
-        n = base.count()
-        per = max(n // 4, 1)
-        ranked = base.withColumn(
-            "part",
-            F.expr(
-                "least(cast((row_number() over (order by ts, event_id) - 1) "
-                f"div {per} as int), 3)"
-            ),
-        )
-        src_dir = os.path.join(work, "src")
-        ranked.write.partitionBy("part").parquet(src_dir)
+        flat, land = split_commit_order(spark, src, work, 4)
+        per = max(sum(land(k) for k in range(4)) // 4, 1)
         # DDL anchors: the first row of parts 1..3 in (commit_ts, seq) order
         anchor_rows = (
             normalize_events(base)
@@ -696,13 +612,11 @@ def streaming_ddl_barrier_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         registry = SchemaRegistry(os.path.join(work, "registry"))
         delta_dir = os.path.join(work, "deltas")
-        ckpt = os.path.join(work, "ckpt")
-        schema = base.schema
         raw = (
-            spark.readStream.schema(schema)
+            spark.readStream.schema(base.schema)
             .option("maxFilesPerTrigger", "1")
             .option("pathGlobFilter", "*.parquet")
-            .parquet(os.path.join(src_dir, "part=*"))
+            .parquet(flat)
         )
         ch = normalize_events(raw)
 
@@ -725,23 +639,14 @@ def streaming_ddl_barrier_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
             split_batch_at_ddl(batch_df, ddls, apply_dml, apply_ddl)
 
-        q = (
-            ch.writeStream.foreachBatch(run_barriers)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
+        run_available_now(ch.writeStream.foreachBatch(run_barriers),
+                          os.path.join(work, "ckpt"))
         # the registry must hold all three versions (barrier ran exactly once
         # per DDL — idempotence is the checkpoint's job, asserted in tests)
         n_versions = registry.versions(spark).select("schema_tag").distinct().count()
         if n_versions != 3:
             raise RuntimeError(f"expected 3 registry versions, got {n_versions}")
         return _materialize(spark.read.parquet(delta_dir))
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -775,39 +680,14 @@ FROM ordered WHERE rn = 1 AND op <> 'D'
         "(compact = VACUUM) documented at read_state_as_of",
 )
 def streaming_time_travel_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob as _glob
-    import time as _time
-
-    from tigate_spark.streaming.changefeed import Changefeed
     from tigate_spark.streaming.sinks import read_state_as_of
 
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
-        src = os.path.join(sf_dir, "events.parquet")
-        base = spark.read.parquet(src)
-        n = base.count()
-        per = max(n // 4, 1)
-        ranked = base.withColumn(
-            "part",
-            F.expr(
-                "least(cast((row_number() over (order by ts, event_id) - 1) "
-                f"div {per} as int), 3)"
-            ),
-        )
-        parts_dir = os.path.join(work, "parts")
-        ranked.write.partitionBy("part").parquet(parts_dir)
-        flat = os.path.join(work, "flat")
-        os.makedirs(flat)
-        now = _time.time()
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
+        flat, land = split_commit_order(
+            spark, os.path.join(sf_dir, "events.parquet"), work, 4)
         for k in range(4):
-            files = sorted(
-                _glob.glob(os.path.join(parts_dir, f"part={k}", "*.parquet"))
-            )
-            for j, f in enumerate(files):
-                dst = os.path.join(flat, f"{k:02d}-{j}.parquet")
-                os.link(f, dst)
-                # pin the file source's processing order
-                os.utime(dst, (now + k, now + k))
+            land(k)
         cfg = ChangefeedConfig(changefeed_id="tt-e2e", sink_uri="replica://")
         cf = Changefeed(spark, cfg, flat, work)
         cf.run_to_completion()
@@ -817,8 +697,6 @@ def streaming_time_travel_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type", "value_cents",
         )
         return _materialize(out)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def _lsh_stream_oracle() -> str:
@@ -861,75 +739,34 @@ GROUP BY 1, 2
         "arrival order is the doc_id order (pinned source mtimes)",
 )
 def streaming_minhash_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob as _glob
-    import time as _time
-
     from tigate_spark.functions import dedup as dd
     from tigate_spark.streaming.stateful import lsh_incremental_pairs
 
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
-        src = os.path.join(sf_dir, "documents.parquet")
-        base = spark.read.parquet(src)
-        n = base.count()
-        per = max(n // 4, 1)
-        ranked = base.withColumn(
-            "part",
-            F.expr(
-                "least(cast((row_number() over (order by doc_id) - 1) "
-                f"div {per} as int), 3)"
-            ),
-        )
-        parts_dir = os.path.join(work, "parts")
-        ranked.write.partitionBy("part").parquet(parts_dir)
-        flat = os.path.join(work, "flat")
-        os.makedirs(flat)
-        now = _time.time()
-        for k in range(4):
-            files = sorted(
-                _glob.glob(os.path.join(parts_dir, f"part={k}", "*.parquet"))
-            )
-            for j, f in enumerate(files):
-                dst = os.path.join(flat, f"{k:02d}-{j}.parquet")
-                os.link(f, dst)
-                os.utime(dst, (now + k, now + k))
-        schema = base.schema
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
+        base = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        flat, land = split_df_in_order(spark, base, work, 4, "doc_id")
+        n = sum(land(k) for k in range(4))
         raw = (
-            spark.readStream.schema(schema)
+            spark.readStream.schema(base.schema)
             .option("maxFilesPerTrigger", "1")
             .option("pathGlobFilter", "*.parquet")
             .parquet(flat)
         )
         bands = dd.lsh_bands(raw)
-        out_dir, ckpt = os.path.join(work, "out"), os.path.join(work, "ckpt")
-        q = (
+        out_dir = os.path.join(work, "out")
+        run_available_now(
             lsh_incremental_pairs(bands, cap=dd.LSH_BUCKET_CAP)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .writeStream.format("parquet").option("path", out_dir),
+            os.path.join(work, "ckpt"),
+            min_batches=2 if n > 4 else 0,
         )
-        q.awaitTermination(300)
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
-        n_batches = (
-            spark.read.json(os.path.join(ckpt, "offsets")).count()
-            if os.path.isdir(os.path.join(ckpt, "offsets"))
-            else 0
-        )
-        if n > 4 and n_batches < 2:
-            raise RuntimeError(
-                f"expected a multi-batch run, got {n_batches} micro-batches"
-            )
         pairs = (
             spark.read.parquet(out_dir)
             .groupBy("doc_a", "doc_b")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_shared_bands"))
         )
         return _materialize(pairs)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # attach the oracle (assembled from catalog_llm's shingle/signature CTEs)
@@ -968,11 +805,10 @@ FROM ordered WHERE rn = 1 AND op <> 'D'
 )
 def streaming_filtered_replica_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tigate_spark.config import EventFilterRule, FilterConfig
-    from tigate_spark.streaming.changefeed import Changefeed
     from tigate_spark.streaming.sinks import read_replica
 
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         cfg = ChangefeedConfig(
             changefeed_id="filt-e2e",
             sink_uri="replica://",
@@ -997,8 +833,6 @@ def streaming_filtered_replica_e2e(spark: SparkSession, sf_dir: str) -> DataFram
             "event_type", "value_cents",
         )
         return _materialize(replica)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1032,36 +866,12 @@ FROM ranges, unnest(range((lo // 3600000000 + 1) * 3600000000,
         "mysql_writer.go:528-542), hash-matched tick for tick",
 )
 def streaming_syncpoint_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob as _glob
-    import time as _time
-
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
-        src = os.path.join(sf_dir, "events.parquet")
-        base = spark.read.parquet(src)
-        n = base.count()
-        per = max(n // 4, 1)
-        ranked = base.withColumn(
-            "part",
-            F.expr(
-                "least(cast((row_number() over (order by ts, event_id) - 1) "
-                f"div {per} as int), 3)"
-            ),
-        )
-        parts_dir = os.path.join(work, "parts")
-        ranked.write.partitionBy("part").parquet(parts_dir)
-        flat = os.path.join(work, "flat")
-        os.makedirs(flat)
-        now = _time.time()
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
+        flat, land = split_commit_order(
+            spark, os.path.join(sf_dir, "events.parquet"), work, 4)
         for k in range(4):
-            for j, f in enumerate(sorted(
-                _glob.glob(os.path.join(parts_dir, f"part={k}", "*.parquet"))
-            )):
-                dst = os.path.join(flat, f"{k:02d}-{j}.parquet")
-                os.link(f, dst)
-                os.utime(dst, (now + k, now + k))
-        from tigate_spark.streaming.changefeed import Changefeed
-
+            land(k)
         cfg = ChangefeedConfig(
             changefeed_id="sp-e2e", sink_uri="noop://",
             enable_sync_point=True, sync_point_interval_s=3600,
@@ -1074,8 +884,6 @@ def streaming_syncpoint_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("secondary_ts").cast("bigint").alias("secondary_ts"),
         )
         return _materialize(sp)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1102,27 +910,17 @@ def streaming_window_append_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tigate_spark.sources.changes import normalize_events
     from tigate_spark.streaming.stateful import windowed_counts
 
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         src = os.path.join(sf_dir, "events.parquet")
-        base = spark.read.parquet(src)
-        n = base.count()
-        per = max(n // 4, 1)
-        ranked = base.withColumn(
-            "part",
-            F.expr(
-                "least(cast((row_number() over (order by ts, event_id) - 1) "
-                f"div {per} as int), 3)"
-            ),
-        )
-        src_dir = os.path.join(work, "src")
-        ranked.write.partitionBy("part").parquet(src_dir)
-        schema = base.schema
+        flat, land = split_commit_order(spark, src, work, 4)
+        for k in range(4):
+            land(k)
         raw = (
-            spark.readStream.schema(schema)
+            spark.readStream.schema(spark.read.parquet(src).schema)
             .option("maxFilesPerTrigger", "1")
             .option("pathGlobFilter", "*.parquet")
-            .parquet(os.path.join(src_dir, "part=*"))
+            .parquet(flat)
         )
         agg = windowed_counts(normalize_events(raw), "1 hour", "30 minutes")
         out = agg.select(
@@ -1130,21 +928,13 @@ def streaming_window_append_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             "table_id",
             F.col("n_events").cast("bigint").alias("n_events"),
         )
-        out_dir, ckpt = os.path.join(work, "out"), os.path.join(work, "ckpt")
-        q = (
+        out_dir = os.path.join(work, "out")
+        run_available_now(
             out.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .format("parquet").option("path", out_dir),
+            os.path.join(work, "ckpt"),
         )
-        q.awaitTermination(300)
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
         return _materialize(spark.read.parquet(out_dir))
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def split_df_in_order(spark: SparkSession, base: DataFrame, work: str,
@@ -1153,10 +943,12 @@ def split_df_in_order(spark: SparkSession, base: DataFrame, work: str,
     ``(flat_dir, land)``: ``land(k)`` hard-links part k's files into
     ``flat_dir`` with a pinned increasing mtime (the file source orders
     batches by modification time) and returns the part's row count.
-    Shared by the lifecycle + flush entries and their unit tests so the
+    Shared by every split-source entry and their unit tests so the
     batching scheme can't silently diverge between them."""
     import glob as _glob
     import time as _time
+
+    import pyarrow.parquet as pq
 
     n = base.count()
     per = max(n // n_parts, 1)
@@ -1182,7 +974,7 @@ def split_df_in_order(spark: SparkSession, base: DataFrame, work: str,
             dst = os.path.join(flat, f"{k:02d}-{j}.parquet")
             os.link(f, dst)
             os.utime(dst, (now + k, now + k))
-            total += spark.read.parquet(f).count()
+            total += pq.read_metadata(f).num_rows
         return total
 
     return flat, land
@@ -1197,6 +989,16 @@ def split_commit_order(spark: SparkSession, src: str, work: str,
     )
 
 
+#: Split order for the executable-sink entries: the LWW replay tie-break
+#: (commit_ts, start_ts, D<U<I, seq) spelled over raw events columns, so
+#: equal-commit-ts ties never straddle micro-batches out of order
+_LWW_SPLIT_ORDER = (
+    "ts, -(event_id % 97), "
+    "case when event_id % 10 >= 9 then 1 "
+    "when event_id % 10 >= 6 then 2 else 3 end, event_id"
+)
+
+
 
 @register(
     "engine_lifecycle_e2e",
@@ -1206,19 +1008,21 @@ def split_commit_order(spark: SparkSession, src: str, work: str,
         "through the v2-API twin (Engine.create), run it over the first "
         "half of the commit order, pause, land the second half as "
         "backlog while paused (pinned mtimes keep the file-source batch "
-        "order), then resume — the restart replays NOTHING (Spark "
-        "checkpoint = the reference's etcd checkpointTs, T10 recovery) "
-        "and drains only the backlog. The final replica hash-matches the "
-        "last-writer-wins oracle over ALL changes; remove() tears the "
-        "feed down. Exactly-once-resume is additionally pinned by a unit "
-        "test on the resumed run's input row counts",
+        "order), then resume it to completion from the committed "
+        "checkpoint — the restart replays NOTHING (Spark checkpoint = the "
+        "reference's etcd checkpointTs, T10 recovery) and commits exactly "
+        "the backlog's one micro-batch (asserted). The final replica "
+        "hash-matches the last-writer-wins oracle over ALL changes; "
+        "remove() tears the feed down. Exactly-once-resume is "
+        "additionally pinned by a unit test on the resumed run's input "
+        "row counts",
 )
 def engine_lifecycle_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tigate_spark.engine import Engine
     from tigate_spark.streaming.sinks import read_replica
 
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         src = os.path.join(sf_dir, "events.parquet")
         flat, land = split_commit_order(spark, src, work, 2)
         land(0)
@@ -1229,14 +1033,11 @@ def engine_lifecycle_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         eng.run_to_completion(cid)
         eng.pause(cid)
         land(1)  # backlog arrives while paused
-        q = eng.resume(cid)
-        try:
-            q.awaitTermination(300)
-        finally:
-            if q.isActive:
-                q.stop()
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
+        resumed = eng.run_to_completion(cid)
+        if resumed != 1:
+            raise RuntimeError(
+                f"resume committed {resumed} micro-batches, expected the "
+                "backlog's 1")
         replica = read_replica(spark, eng.state_dir(cid)).select(
             "table_id", "pk", F.col("commit_ts").alias("last_commit_ts"),
             "event_type", "value_cents",
@@ -1244,8 +1045,6 @@ def engine_lifecycle_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = _materialize(replica)
         eng.remove(cid, drop_state=True)
         return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1262,8 +1061,10 @@ def engine_lifecycle_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT table_id, pk, event_type, value_cents
 FROM ordered WHERE rn = 1 AND op <> 'D'
 """,
-    doc="K1 executable sink: the changefeed drives a REAL writer loop — "
-        "foreachBatch renders the safe-mode statement stream "
+    doc="K1 executable sink: a sqlite:// changefeed drives a REAL writer "
+        "loop through the production per-batch path (bookkeeping, redo "
+        "hook and DDL barrier included) — the sink renders the safe-mode "
+        "statement stream "
         "(encoder_mysql_sql_safe_mode, the SQLite-replay-proven SQL "
         "surface) and foreachPartition EXECUTES it on live SQLite files, "
         "one sequential connection per worker lane (table_id % lanes, "
@@ -1278,51 +1079,27 @@ FROM ordered WHERE rn = 1 AND op <> 'D'
         "JDBC round trip as a MySQL-less sandbox allows",
 )
 def streaming_sqlite_apply_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tigate_spark.sources.changes import normalize_events
-    from tigate_spark.streaming.sqlite_apply import SqliteApplySink
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
+        return _materialize(_sqlite_feed_state(
+            spark, sf_dir, work, "sqlite-e2e", "sqlite://"))
 
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
-        src = os.path.join(sf_dir, "events.parquet")
-        base = spark.read.parquet(src)
-        # micro-batch boundaries respect the LWW replay tie-break
-        # (commit_ts, start_ts, D<U<I, seq) spelled over raw events
-        # columns, so equal-commit-ts ties never straddle batches out
-        # of order
-        order_sql = (
-            "ts, -(event_id % 97), "
-            "case when event_id % 10 >= 9 then 1 "
-            "when event_id % 10 >= 6 then 2 else 3 end, event_id"
-        )
-        flat, land = split_df_in_order(spark, base, work, 3, order_sql)
-        for k in range(3):
-            land(k)
-        raw = (
-            spark.readStream.schema(base.schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(flat)
-        )
-        sink = SqliteApplySink(os.path.join(work, "db"))
-        ckpt = os.path.join(work, "ckpt")
-        q = (
-            normalize_events(raw)
-            .writeStream.foreachBatch(sink.process_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
-        off = os.path.join(ckpt, "offsets")
-        n_batches = len(os.listdir(off)) if os.path.isdir(off) else 0
-        if n_batches < 2:
-            raise RuntimeError(f"expected multi-batch run, got {n_batches}")
-        return _materialize(sink.read_state(spark))
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
+def _sqlite_feed_state(spark: SparkSession, sf_dir: str, work: str,
+                       changefeed_id: str, sink_uri: str) -> DataFrame:
+    """Run a ``sqlite://`` changefeed over the events split 3 ways in
+    LWW order (one file per micro-batch) and return the downstream
+    state; the run must commit at least 2 micro-batches."""
+    base = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    flat, land = split_df_in_order(spark, base, work, 3, _LWW_SPLIT_ORDER)
+    for k in range(3):
+        land(k)
+    cf = Changefeed(spark, ChangefeedConfig(
+        changefeed_id=changefeed_id, sink_uri=sink_uri), flat, work)
+    n = cf.run_to_completion()
+    if n < 2:
+        raise RuntimeError(f"expected a multi-batch run, got {n}")
+    return cf.sink.read_state(spark)
 
 
 #: Shared by the two DDL-barrier sink entries (SQLite apply + parquet
@@ -1405,10 +1182,12 @@ FROM ordered WHERE rn = 1 AND op <> 'D'
 """,
     doc="K1 executable sink, batch-dml MULTI-ROW form (the MySQL "
         "driver's rewriteBatchedStatements shape batch-dml actually "
-        "wins by, mysql/config.go:70,104): the changefeed's rendered "
-        "safe-mode stream passes through coalesce_multirow_statements "
-        "— adjacent same-table REPLACEs become ONE multi-row VALUES "
-        "statement bounded by max-txn-row (16 here) and packet bytes — "
+        "wins by, mysql/config.go:70,104): a changefeed on "
+        "sqlite://?max-txn-row=16&batch-dml-multirow=true, so its "
+        "rendered safe-mode stream passes through "
+        "coalesce_multirow_statements — adjacent same-table REPLACEs "
+        "become ONE multi-row VALUES statement bounded by max-txn-row "
+        "(16) and packet bytes — "
         "and the lane writer executes each coalesced statement in its "
         "own downstream txn on live SQLite. Same LWW oracle as the "
         "row-at-a-time e2e: the two execution forms MUST converge to "
@@ -1421,50 +1200,20 @@ def streaming_sqlite_multirow_e2e(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
     from tigate_spark.sources.changes import normalize_events
     from tigate_spark.streaming.sqlite_apply import (
-        SqliteApplySink, coalesce_multirow_statements,
-        render_safe_mode_statements)
+        coalesce_multirow_statements, render_safe_mode_statements)
 
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
-        src = os.path.join(sf_dir, "events.parquet")
-        base = spark.read.parquet(src)
-        order_sql = (
-            "ts, -(event_id % 97), "
-            "case when event_id % 10 >= 9 then 1 "
-            "when event_id % 10 >= 6 then 2 else 3 end, event_id"
-        )
-        flat, land = split_df_in_order(spark, base, work, 3, order_sql)
-        for k in range(3):
-            land(k)
-        # non-triviality: this corpus must actually form multi-row runs
-        probe = coalesce_multirow_statements(
-            render_safe_mode_statements(
-                normalize_events(spark.read.parquet(src))),
-            max_rows=16).agg(F.max("n_rows").alias("m")).first()["m"]
-        if not probe or probe < 2:
-            raise RuntimeError("corpus never coalesces — vacuous entry")
-        raw = (
-            spark.readStream.schema(base.schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(flat)
-        )
-        sink = SqliteApplySink(os.path.join(work, "db"),
-                               txn_rows=16, multirow_dml=True)
-        ckpt = os.path.join(work, "ckpt")
-        q = (
-            normalize_events(raw)
-            .writeStream.foreachBatch(sink.process_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
-        return _materialize(sink.read_state(spark))
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    # non-triviality: this corpus must actually form multi-row runs
+    probe = coalesce_multirow_statements(
+        render_safe_mode_statements(normalize_events(
+            spark.read.parquet(os.path.join(sf_dir, "events.parquet")))),
+        max_rows=16).agg(F.max("n_rows").alias("m")).first()["m"]
+    if not probe or probe < 2:
+        raise RuntimeError("corpus never coalesces — vacuous entry")
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
+        return _materialize(_sqlite_feed_state(
+            spark, sf_dir, work, "sqlite-multirow-e2e",
+            "sqlite://?max-txn-row=16&batch-dml-multirow=true"))
 
 
 @register(
@@ -1510,15 +1259,10 @@ def streaming_sqlite_ddl_apply_e2e(spark: SparkSession,
     from tigate_spark.streaming.ddl import DDLEvent, split_batch_at_ddl
     from tigate_spark.streaming.sqlite_apply import SqliteApplySink
 
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         src = os.path.join(sf_dir, "events.parquet")
         base = spark.read.parquet(src)
-        order_sql = (
-            "ts, -(event_id % 97), "
-            "case when event_id % 10 >= 9 then 1 "
-            "when event_id % 10 >= 6 then 2 else 3 end, event_id"
-        )
         norm = normalize_events(base)
         ddl_ts, anchor_seq = _ddl_anchor(norm, 1, 2)
         ddl = DDLEvent(
@@ -1527,7 +1271,7 @@ def streaming_sqlite_ddl_apply_e2e(spark: SparkSession,
                   "INTEGER DEFAULT 0",
             schema_tag="v1",
         )
-        flat, land = split_df_in_order(spark, base, work, 3, order_sql)
+        flat, land = split_df_in_order(spark, base, work, 3, _LWW_SPLIT_ORDER)
         for k in range(3):
             land(k)
         raw = (
@@ -1537,7 +1281,6 @@ def streaming_sqlite_ddl_apply_e2e(spark: SparkSession,
             .parquet(flat)
         )
         sink = SqliteApplySink(os.path.join(work, "db"))
-        ckpt = os.path.join(work, "ckpt")
         evolved: set[int] = set()
         ddl_log: list[tuple[str, str]] = []
 
@@ -1562,22 +1305,10 @@ def streaming_sqlite_ddl_apply_e2e(spark: SparkSession,
                 batch_df, [ddl] if has_anchor else [], apply_dml, apply_ddl
             )
 
-        q = (
-            normalize_events(raw)
-            .writeStream.foreachBatch(run)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
+        run_available_now(normalize_events(raw).writeStream.foreachBatch(run),
+                          os.path.join(work, "ckpt"), min_batches=2)
         if ddl_log != [("applied", "ignored")]:
             raise RuntimeError(f"DDL exec/replay outcome wrong: {ddl_log}")
-        off = os.path.join(ckpt, "offsets")
-        n_batches = len(os.listdir(off)) if os.path.isdir(off) else 0
-        if n_batches < 2:
-            raise RuntimeError(f"expected multi-batch run, got {n_batches}")
         state = sink.read_state(spark, extra_cols=("extra_cents",))
         n_evolved = state.filter(
             "table_id = 1 and extra_cents is not null and extra_cents > 0"
@@ -1585,8 +1316,6 @@ def streaming_sqlite_ddl_apply_e2e(spark: SparkSession,
         if n_evolved == 0:
             raise RuntimeError("no post-DDL mounted values downstream")
         return _materialize(state)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1637,8 +1366,8 @@ def streaming_partition_table_e2e(spark: SparkSession,
         (100, 0, 0, "app", "t0"), (102, 0, 2, "app", "t2"),
         (103, 0, 3, "app", "t3"),
     ]
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         src = os.path.join(sf_dir, "events.parquet")
         base = spark.read.parquet(src)
         # the upstream's physical provenance: t1 rows carry their hash
@@ -1665,12 +1394,7 @@ def streaming_partition_table_e2e(spark: SparkSession,
             commit_ts=int(ddl_ts), table_id=1,
             query="ALTER TABLE `app`.`t1` TRUNCATE PARTITION p1",
             schema_tag="v1")
-        order_sql = (
-            "ts, -(event_id % 97), "
-            "case when event_id % 10 >= 9 then 1 "
-            "when event_id % 10 >= 6 then 2 else 3 end, event_id"
-        )
-        flat, land = split_df_in_order(spark, base, work, 3, order_sql)
+        flat, land = split_df_in_order(spark, base, work, 3, _LWW_SPLIT_ORDER)
         for k in range(3):
             land(k)
         raw = (
@@ -1680,7 +1404,6 @@ def streaming_partition_table_e2e(spark: SparkSession,
             .parquet(flat)
         )
         sink = SqliteApplySink(os.path.join(work, "db"))
-        ckpt = os.path.join(work, "ckpt")
         ddl_log: list[tuple[str, str]] = []
 
         def run(batch_df: DataFrame, batch_id: int) -> None:
@@ -1708,28 +1431,15 @@ def streaming_partition_table_e2e(spark: SparkSession,
         routed = resolve_logical(
             normalize_events(
                 raw.withColumn("_physical_table_id", phys)), reg)
-        q = (
-            routed.writeStream.foreachBatch(run)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
+        run_available_now(routed.writeStream.foreachBatch(run),
+                          os.path.join(work, "ckpt"), min_batches=2)
         if ddl_log != [("applied", "ignored")]:
             raise RuntimeError(f"DDL exec/replay outcome wrong: {ddl_log}")
-        off = os.path.join(ckpt, "offsets")
-        n_batches = len(os.listdir(off)) if os.path.isdir(off) else 0
-        if n_batches < 2:
-            raise RuntimeError(f"expected multi-batch run, got {n_batches}")
         state = sink.read_state(spark)
         # fan-in sanity: no physical id leaked downstream as a table id
         if state.filter("table_id >= 100").count() > 0:
             raise RuntimeError("physical table ids leaked downstream")
         return _materialize(state)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1756,11 +1466,10 @@ def streaming_partition_table_e2e(spark: SparkSession,
 )
 def redo_disaster_recovery_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tigate_spark.config import ConsistentConfig
-    from tigate_spark.streaming.changefeed import Changefeed
     from tigate_spark.streaming.redo import redo_apply
 
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         src = os.path.join(sf_dir, "events.parquet")
         flat, land = split_commit_order(spark, src, os.path.join(work, "p"), 3)
         for k in range(3):
@@ -1779,8 +1488,6 @@ def redo_disaster_recovery_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         got = redo_apply(spark, redo_dir, ["event_type", "value_cents"])
         return _materialize(got.select(
             "table_id", "pk", "last_commit_ts", "event_type", "value_cents"))
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1806,11 +1513,10 @@ def redo_disaster_recovery_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 def consumer_changelog_apply_e2e(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
     from tigate_spark.functions.encoders import decode_canal_for_apply
-    from tigate_spark.streaming.changefeed import Changefeed
     from tigate_spark.streaming.sinks import ReplicaSink, read_replica
 
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         src = os.path.join(sf_dir, "events.parquet")
         ev = spark.read.parquet(src)
         if ev.count() != ev.select("ts").distinct().count():
@@ -1835,23 +1541,15 @@ def consumer_changelog_apply_e2e(spark: SparkSession,
         )
         sink = ReplicaSink(os.path.join(work, "replica"),
                            ["event_type", "value_cents"])
-        q = (
+        run_available_now(
             decode_canal_for_apply(raw)
-            .writeStream.foreachBatch(sink.process_batch)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
+            .writeStream.foreachBatch(sink.process_batch),
+            os.path.join(work, "ckpt"))
         rep = read_replica(spark, sink.state_dir).select(
             "table_id", "pk", F.col("commit_ts").alias("last_commit_ts"),
             "event_type", "value_cents",
         )
         return _materialize(rep)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1873,11 +1571,10 @@ def consumer_changelog_apply_e2e(spark: SparkSession,
 )
 def engine_crash_resume_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tigate_spark.config import ConsistentConfig
-    from tigate_spark.streaming.changefeed import Changefeed
     from tigate_spark.streaming.sinks import read_replica
 
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         src = os.path.join(sf_dir, "events.parquet")
         flat, land = split_commit_order(spark, src, os.path.join(work, "p"), 4)
         for k in range(4):
@@ -1926,8 +1623,6 @@ def engine_crash_resume_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type", "value_cents",
         )
         return _materialize(rep)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -1950,11 +1645,10 @@ def engine_crash_resume_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 def consumer_openprotocol_apply_e2e(spark: SparkSession,
                                     sf_dir: str) -> DataFrame:
     from tigate_spark.functions.encoders import decode_open_for_apply
-    from tigate_spark.streaming.changefeed import Changefeed
     from tigate_spark.streaming.sinks import ReplicaSink, read_replica
 
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         src = os.path.join(sf_dir, "events.parquet")
         ev = spark.read.parquet(src)
         if ev.count() != ev.select("ts").distinct().count():
@@ -1978,23 +1672,15 @@ def consumer_openprotocol_apply_e2e(spark: SparkSession,
         )
         sink = ReplicaSink(os.path.join(work, "replica"),
                            ["event_type", "value_cents"])
-        q = (
+        run_available_now(
             decode_open_for_apply(raw)
-            .writeStream.foreachBatch(sink.process_batch)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
+            .writeStream.foreachBatch(sink.process_batch),
+            os.path.join(work, "ckpt"))
         rep = read_replica(spark, sink.state_dir).select(
             "table_id", "pk", F.col("commit_ts").alias("last_commit_ts"),
             "event_type", "value_cents",
         )
         return _materialize(rep)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -2015,11 +1701,10 @@ def consumer_compressed_apply_e2e(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
     from tigate_spark.functions.compress import decompress_col
     from tigate_spark.functions.encoders import decode_open_for_apply
-    from tigate_spark.streaming.changefeed import Changefeed
     from tigate_spark.streaming.sinks import ReplicaSink, read_replica
 
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         src = os.path.join(sf_dir, "events.parquet")
         ev = spark.read.parquet(src)
         if ev.count() != ev.select("ts").distinct().count():
@@ -2048,23 +1733,15 @@ def consumer_compressed_apply_e2e(spark: SparkSession,
         )
         sink = ReplicaSink(os.path.join(work, "replica"),
                            ["event_type", "value_cents"])
-        q = (
+        run_available_now(
             decode_open_for_apply(raw)
-            .writeStream.foreachBatch(sink.process_batch)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
+            .writeStream.foreachBatch(sink.process_batch),
+            os.path.join(work, "ckpt"))
         rep = read_replica(spark, sink.state_dir).select(
             "table_id", "pk", F.col("commit_ts").alias("last_commit_ts"),
             "event_type", "value_cents",
         )
         return _materialize(rep)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -2088,11 +1765,10 @@ def consumer_simple_avro_apply_e2e(spark: SparkSession,
     from tigate_spark.functions.simple_avro import (
         decode_simple_avro_for_apply,
     )
-    from tigate_spark.streaming.changefeed import Changefeed
     from tigate_spark.streaming.sinks import ReplicaSink, read_replica
 
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         src = os.path.join(sf_dir, "events.parquet")
         ev = spark.read.parquet(src)
         if ev.count() != ev.select("ts").distinct().count():
@@ -2116,23 +1792,15 @@ def consumer_simple_avro_apply_e2e(spark: SparkSession,
         )
         sink = ReplicaSink(os.path.join(work, "replica"),
                            ["event_type", "value_cents"])
-        q = (
+        run_available_now(
             decode_simple_avro_for_apply(raw)
-            .writeStream.foreachBatch(sink.process_batch)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
+            .writeStream.foreachBatch(sink.process_batch),
+            os.path.join(work, "ckpt"))
         rep = read_replica(spark, sink.state_dir).select(
             "table_id", "pk", F.col("commit_ts").alias("last_commit_ts"),
             "event_type", "value_cents",
         )
         return _materialize(rep)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -2157,11 +1825,10 @@ def consumer_kafka_wire_apply_e2e(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
     from tigate_spark.functions.encoders import decode_open_for_apply
     from tigate_spark.operators.apply import materialize
-    from tigate_spark.streaming.changefeed import Changefeed
     from tigate_spark.streaming.kafka import FakeWireProducer
 
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         src = os.path.join(sf_dir, "events.parquet")
         ev = spark.read.parquet(src)
         if ev.count() != ev.select("ts").distinct().count():
@@ -2192,8 +1859,6 @@ def consumer_kafka_wire_apply_e2e(spark: SparkSession,
         return _materialize(state.select(
             "table_id", "pk", "last_commit_ts",
             "event_type", "value_cents"))
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -2218,11 +1883,10 @@ def consumer_kafka_transport_compressed_e2e(spark: SparkSession,
                                             sf_dir: str) -> DataFrame:
     from tigate_spark.functions.encoders import decode_open_for_apply
     from tigate_spark.operators.apply import materialize
-    from tigate_spark.streaming.changefeed import Changefeed
     from tigate_spark.streaming.kafka import FakeWireProducer
 
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         src = os.path.join(sf_dir, "events.parquet")
         ev = spark.read.parquet(src)
         if ev.count() != ev.select("ts").distinct().count():
@@ -2265,8 +1929,6 @@ def consumer_kafka_transport_compressed_e2e(spark: SparkSession,
         return _materialize(state.select(
             "table_id", "pk", "last_commit_ts",
             "event_type", "value_cents"))
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -2294,11 +1956,10 @@ def consumer_storage_apply_e2e(spark: SparkSession,
     import json
 
     from tigate_spark.functions.encoders import decode_csv_for_apply
-    from tigate_spark.streaming.changefeed import Changefeed
     from tigate_spark.streaming.sinks import ReplicaSink, read_replica
 
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         src = os.path.join(sf_dir, "events.parquet")
         ev = spark.read.parquet(src)
         if ev.count() != ev.select("ts").distinct().count():
@@ -2330,24 +1991,15 @@ def consumer_storage_apply_e2e(spark: SparkSession,
         )
         sink = ReplicaSink(os.path.join(work, "replica"),
                            ["event_type", "value_cents"])
-        q = (
-            decode_csv_for_apply(raw)
-            .filter(F.col("commit_ts") <= ckpt)
-            .writeStream.foreachBatch(sink.process_batch)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
+        run_available_now(
+            decode_csv_for_apply(raw).filter(F.col("commit_ts") <= ckpt)
+            .writeStream.foreachBatch(sink.process_batch),
+            os.path.join(work, "ckpt"))
         rep = read_replica(spark, sink.state_dir).select(
             "table_id", "pk", F.col("commit_ts").alias("last_commit_ts"),
             "event_type", "value_cents",
         )
         return _materialize(rep)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -2380,11 +2032,10 @@ FROM ordered WHERE rn = 1 AND op <> 'D'
 )
 def streaming_bdr_loop_prevention_e2e(spark: SparkSession,
                                       sf_dir: str) -> DataFrame:
-    from tigate_spark.streaming.changefeed import Changefeed
     from tigate_spark.streaming.sinks import read_replica
 
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
         src = os.path.join(work, "tagged")
         ev.withColumn(
@@ -2400,8 +2051,6 @@ def streaming_bdr_loop_prevention_e2e(spark: SparkSession,
             "event_type", "value_cents",
         )
         return _materialize(rep)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -2440,17 +2089,10 @@ def engine_ddl_barrier_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tigate_spark.sources.changes import normalize_events
     from tigate_spark.streaming.ddl import DDLEvent
 
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         src = os.path.join(sf_dir, "events.parquet")
         base = spark.read.parquet(src)
-        # micro-batch boundaries respect the LWW replay tie-break (same
-        # split as the other executable-sink entries)
-        order_sql = (
-            "ts, -(event_id % 97), "
-            "case when event_id % 10 >= 9 then 1 "
-            "when event_id % 10 >= 6 then 2 else 3 end, event_id"
-        )
         norm = normalize_events(base)
         ddl_ts, _ = _ddl_anchor(norm, 1, 2)
         ddl = DDLEvent(
@@ -2459,7 +2101,7 @@ def engine_ddl_barrier_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
                   "INTEGER DEFAULT 7",
             schema_tag="v1", schema_name="app", table_name="t1",
         )
-        flat, land = split_df_in_order(spark, base, work, 3, order_sql)
+        flat, land = split_df_in_order(spark, base, work, 3, _LWW_SPLIT_ORDER)
         for k in range(3):
             land(k)
         eng = Engine(spark, flat, work)
@@ -2480,8 +2122,6 @@ def engine_ddl_barrier_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         if bad:
             raise RuntimeError(f"{bad} t1 rows missing the ALTER backfill")
         return _materialize(state)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -2548,15 +2188,10 @@ def streaming_sqlite_bookkeeping_e2e(spark: SparkSession,
     from tigate_spark.sources.changes import normalize_events
     from tigate_spark.streaming.ddl import DDLEvent
 
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         src = os.path.join(sf_dir, "events.parquet")
         base = spark.read.parquet(src)
-        order_sql = (
-            "ts, -(event_id % 97), "
-            "case when event_id % 10 >= 9 then 1 "
-            "when event_id % 10 >= 6 then 2 else 3 end, event_id"
-        )
         norm = normalize_events(base)
         ddl_ts, _ = _ddl_anchor(norm, 1, 2)
         ddl = DDLEvent(
@@ -2564,7 +2199,7 @@ def streaming_sqlite_bookkeeping_e2e(spark: SparkSession,
             query="CREATE INDEX `idx_bk_vc` ON `app`.`t1` (`value_cents`)",
             schema_tag="v1", schema_name="app", table_name="t1",
         )
-        flat, land = split_df_in_order(spark, base, work, 3, order_sql)
+        flat, land = split_df_in_order(spark, base, work, 3, _LWW_SPLIT_ORDER)
         for k in range(3):
             land(k)
         eng = Engine(spark, flat, work)
@@ -2601,8 +2236,6 @@ def streaming_sqlite_bookkeeping_e2e(spark: SparkSession,
             F.col("primary_ts").cast("bigint").alias("ts_a"),
             F.col("secondary_ts").cast("bigint").alias("ts_b"))
         return _materialize(state.unionAll(ddl_rows).unionAll(sp_rows))
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -2648,15 +2281,10 @@ def streaming_replica_schema_evolution_e2e(spark: SparkSession,
     from tigate_spark.streaming.changefeed import PAYLOAD_COLS
     from tigate_spark.streaming.sinks import ReplicaSink
 
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         src = os.path.join(sf_dir, "events.parquet")
         base = spark.read.parquet(src)
-        order_sql = (
-            "ts, -(event_id % 97), "
-            "case when event_id % 10 >= 9 then 1 "
-            "when event_id % 10 >= 6 then 2 else 3 end, event_id"
-        )
         norm = normalize_events(base)
         ddl_ts, anchor_seq = _ddl_anchor(norm, 9, 10, max_tail=400)
         ddl = DDLEvent(
@@ -2664,7 +2292,7 @@ def streaming_replica_schema_evolution_e2e(spark: SparkSession,
             query="ALTER TABLE `app`.`t1` ADD COLUMN `extra_cents` BIGINT",
             schema_tag="v1",
         )
-        flat, land = split_df_in_order(spark, base, work, 3, order_sql)
+        flat, land = split_df_in_order(spark, base, work, 3, _LWW_SPLIT_ORDER)
         for k in range(3):
             land(k)
         raw = (
@@ -2678,7 +2306,6 @@ def streaming_replica_schema_evolution_e2e(spark: SparkSession,
             [*PAYLOAD_COLS, "extra_cents"],
         )
         registry = SchemaRegistry(os.path.join(work, "registry"))
-        ckpt = os.path.join(work, "ckpt")
         evolved: set[int] = set()
 
         def run(batch_df: DataFrame, batch_id: int) -> None:
@@ -2705,20 +2332,8 @@ def streaming_replica_schema_evolution_e2e(spark: SparkSession,
                 batch_df, [ddl] if has_anchor else [], apply_dml, apply_ddl
             )
 
-        q = (
-            normalize_events(raw)
-            .writeStream.foreachBatch(run)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
-        off = os.path.join(ckpt, "offsets")
-        n_batches = len(os.listdir(off)) if os.path.isdir(off) else 0
-        if n_batches < 2:
-            raise RuntimeError(f"expected multi-batch run, got {n_batches}")
+        run_available_now(normalize_events(raw).writeStream.foreachBatch(run),
+                          os.path.join(work, "ckpt"), min_batches=2)
         if registry.versions(spark).count() == 0:
             raise RuntimeError("registry did not record the DDL version")
         from tigate_spark.streaming.sinks import read_replica
@@ -2738,8 +2353,6 @@ def streaming_replica_schema_evolution_e2e(spark: SparkSession,
                 f"{n_pre} pre-DDL winners"
             )
         return _materialize(state)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 _MULTIFEED_ORACLE = ORACLE_CHANGES_CTE + """
@@ -2776,35 +2389,28 @@ FROM (""" + _CHANGELOG_ORACLE + """
         "run through overlapping lifecycle: both started concurrently "
         "(two availableNow queries sharing the session), both paused, "
         "backlog lands while paused, both resumed together. Each feed's "
-        "checkpoint replays NOTHING on resume (asserted: the resumed "
-        "drain adds exactly the backlog's micro-batches to the offset "
-        "log; the append-only changelog would double rows on any "
+        "checkpoint replays NOTHING on resume (asserted: each resumed "
+        "drain commits exactly the backlog's one micro-batch; the "
+        "append-only changelog would double rows on any "
         "replay, so the hash match IS the exactly-once proof for b). "
         "Result = both downstream states as (feed, key, value) rows "
         "vs the filtered LWW + filtered changelog oracles",
 )
 def engine_multifeed_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from concurrent.futures import ThreadPoolExecutor
+
     from tigate_spark.config import FilterConfig
     from tigate_spark.engine import Engine
     from tigate_spark.streaming.sinks import read_replica
 
-    def _await(*queries):
-        for q in queries:
-            try:
-                q.awaitTermination(300)
-            finally:
-                if q.isActive:
-                    q.stop()
-            if q.exception() is not None:
-                raise RuntimeError(str(q.exception()))
+    def drain(*cids) -> list[int]:
+        # one thread per feed: the availableNow queries share the session
+        # and overlap, each committing through the engine's run path
+        with ThreadPoolExecutor(len(cids)) as pool:
+            return list(pool.map(eng.run_to_completion, cids))
 
-    def _n_batches(eng, cid):
-        d = os.path.join(
-            eng._get(cid).changefeed.checkpoint_dir, "offsets")
-        return len(os.listdir(d)) if os.path.isdir(d) else 0
-
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         src = os.path.join(sf_dir, "events.parquet")
         flat, land = split_commit_order(spark, src, work, 2)
         land(0)
@@ -2817,16 +2423,15 @@ def engine_multifeed_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             changefeed_id="multi-b", sink_uri="changelog://",
             filter=FilterConfig(rules=["app.t2", "app.t3"]),
         ))
-        _await(eng.start(a), eng.start(b))  # concurrent first drain
+        drain(a, b)  # concurrent first drain
         eng.pause(a)
         eng.pause(b)
-        na0, nb0 = _n_batches(eng, a), _n_batches(eng, b)
-        n_backlog = land(1)  # backlog arrives while both are paused
-        _await(eng.resume(a), eng.resume(b))  # overlapping resumed drain
-        na1, nb1 = _n_batches(eng, a), _n_batches(eng, b)
-        if n_backlog > 0 and not (na1 > na0 and nb1 > nb0):
+        land(1)  # backlog arrives while both are paused
+        resumed = drain(a, b)  # overlapping resumed drain
+        if resumed != [1, 1]:
             raise RuntimeError(
-                f"resume drained no backlog: a {na0}->{na1}, b {nb0}->{nb1}")
+                f"resume committed {resumed} micro-batches (a, b), "
+                "expected the backlog's 1 each")
         replica = read_replica(spark, eng.state_dir(a)).select(
             F.lit("a").alias("feed"),
             F.concat_ws(":", F.col("table_id"), F.col("pk")).alias("k"),
@@ -2850,8 +2455,6 @@ def engine_multifeed_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         eng.remove(a, drop_state=True)
         eng.remove(b, drop_state=True)
         return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # the oracle template and the streaming twin share the engine's constants
@@ -2961,8 +2564,8 @@ def streaming_flush_batches_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tigate_spark.sources.changes import changes_stream
     from tigate_spark.streaming.stateful import flush_batch_accounting
 
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         # one materialization feeds the split's count/write AND the
         # sentinel aggregates below (4 actions otherwise re-run the
         # event scan + txn shuffle each)
@@ -2999,30 +2602,14 @@ def streaming_flush_batches_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("pathGlobFilter", "*.parquet")
             .parquet(flat)
         )
-        out_dir, ckpt = os.path.join(work, "out"), os.path.join(work, "ckpt")
-        q = (
+        out_dir = os.path.join(work, "out")
+        run_available_now(
             flush_batch_accounting(raw, max_rows=_FLUSH_C)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .writeStream.format("parquet").option("path", out_dir),
+            os.path.join(work, "ckpt"),
+            min_batches=2 if n > 4 else 0,
         )
-        q.awaitTermination(300)
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
-        n_batches = (
-            spark.read.json(os.path.join(ckpt, "offsets")).count()
-            if os.path.isdir(os.path.join(ckpt, "offsets"))
-            else 0
-        )
-        if n > 4 and n_batches < 2:
-            raise RuntimeError(
-                f"expected a multi-batch run, got {n_batches} micro-batches"
-            )
         return _materialize(spark.read.parquet(out_dir))
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -3044,11 +2631,10 @@ def streaming_jsonl_replica_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _text_format_replica_e2e(spark: SparkSession, sf_dir: str,
                              fmt: str) -> DataFrame:
     from tigate_spark.sources.formats import export_events
-    from tigate_spark.streaming.changefeed import Changefeed
     from tigate_spark.streaming.sinks import read_replica
 
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         src = export_events(spark, sf_dir, fmt)
         cfg = ChangefeedConfig(
             changefeed_id=f"{fmt}-e2e", sink_uri="replica://",
@@ -3061,8 +2647,6 @@ def _text_format_replica_e2e(spark: SparkSession, sf_dir: str,
             "event_type", "value_cents",
         )
         return _materialize(replica)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -3127,15 +2711,10 @@ def streaming_sqlite_ddl_matrix_e2e(spark: SparkSession,
     from tigate_spark.streaming.ddl import DDLEvent, split_batch_at_ddl
     from tigate_spark.streaming.sqlite_apply import SqliteApplySink
 
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         src = os.path.join(sf_dir, "events.parquet")
         base = spark.read.parquet(src)
-        order_sql = (
-            "ts, -(event_id % 97), "
-            "case when event_id % 10 >= 9 then 1 "
-            "when event_id % 10 >= 6 then 2 else 3 end, event_id"
-        )
         norm = normalize_events(base)
         idx_ts, idx_seq = _ddl_anchor(norm, 1, 3)
         trunc_ts, trunc_seq = _ddl_anchor(norm, 2, 3)
@@ -3148,7 +2727,7 @@ def streaming_sqlite_ddl_matrix_e2e(spark: SparkSession,
                 commit_ts=int(trunc_ts), table_id=2,
                 query="TRUNCATE TABLE `app`.`t2`", schema_tag="v2")),
         ]
-        flat, land = split_df_in_order(spark, base, work, 3, order_sql)
+        flat, land = split_df_in_order(spark, base, work, 3, _LWW_SPLIT_ORDER)
         for k in range(3):
             land(k)
         raw = (
@@ -3158,7 +2737,6 @@ def streaming_sqlite_ddl_matrix_e2e(spark: SparkSession,
             .parquet(flat)
         )
         sink = SqliteApplySink(os.path.join(work, "db"))
-        ckpt = os.path.join(work, "ckpt")
         ddl_log: list[tuple[str, ...]] = []
 
         def run(batch_df: DataFrame, batch_id: int) -> None:
@@ -3180,16 +2758,8 @@ def streaming_sqlite_ddl_matrix_e2e(spark: SparkSession,
 
             split_batch_at_ddl(batch_df, due, apply_dml, apply_ddl)
 
-        q = (
-            normalize_events(raw)
-            .writeStream.foreachBatch(run)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
+        run_available_now(normalize_events(raw).writeStream.foreachBatch(run),
+                          os.path.join(work, "ckpt"))
         if ddl_log != [("applied", "ignored"), ("applied",)]:
             raise RuntimeError(f"barrier DDL outcomes wrong: {ddl_log}")
         lane2 = os.path.join(work, "db", "lane-2.db")
@@ -3266,8 +2836,6 @@ def streaming_sqlite_ddl_matrix_e2e(spark: SparkSession,
         if before_t0 != after_t0:
             raise RuntimeError("MODIFY COLUMN rebuild changed t0 state")
         return _materialize(state)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -3402,10 +2970,8 @@ FROM ordered WHERE rn = 1 AND op <> 'D'
         "winner per key with the same renderings in DuckDB spellings.",
 )
 def streaming_wide_replica_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tigate_spark.streaming.changefeed import Changefeed
-
-    work = tempfile.mkdtemp(prefix="tigate-stream-")
-    try:
+    with tempfile.TemporaryDirectory(prefix="tigate-stream-",
+                                     ignore_cleanup_errors=True) as work:
         cfg = ChangefeedConfig(
             changefeed_id="wide-e2e", sink_uri="sqlite://",
             wide_payload=tuple(
@@ -3421,5 +2987,3 @@ def streaming_wide_replica_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             extra_cols=tuple((n, rt) for n, _, _, _, rt in _WIDE_LANES),
         )
         return _materialize(state)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)

@@ -170,7 +170,7 @@ class Engine:
         return feed.query
 
     def run_to_completion(self, changefeed_id: str, timeout_s: int = 300,
-                          max_retries: int = 2) -> None:
+                          max_retries: int = 2) -> int:
         """Run the feed, with the reference's error-state machine
         (``changefeed_error`` / ``changefeed_fast_fail`` integration
         tests; states per ``api/v2/model.go``): a retryable failure puts
@@ -180,16 +180,19 @@ class Engine:
         exhausted retries puts it in **failed** and re-raises. The last
         retryable error is kept as ``meta['last_warning']`` even after a
         successful recovery (the reference's ``last_warning`` field,
-        ``model.go:1305``)."""
+        ``model.go:1305``). A run that outlives ``timeout_s`` is stopped
+        and raises :class:`TimeoutError`, retried like any other
+        retryable failure. Returns the micro-batches the successful
+        attempt committed."""
         feed = self._get(changefeed_id)
         attempt = 0
         while True:
             feed.state = "running"
             try:
-                feed.changefeed.run_to_completion(timeout_s)
+                n = feed.changefeed.run_to_completion(timeout_s)
                 feed.state = "stopped"
                 feed.meta.pop("error", None)
-                return
+                return n
             except Exception as e:  # noqa: BLE001 — classified below
                 # foreachBatch failures arrive wrapped in a JVM
                 # StreamingQueryException whose root cause sits deep in

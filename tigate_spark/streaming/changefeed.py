@@ -7,7 +7,9 @@ happens here; "coordinator/maintainer/dispatcher scheduling" is the Spark
 driver + task scheduler; per-dispatcher seq/handshake recovery (T10,
 ``event_collector.go:469-496``) is subsumed by the file-source offset log
 + ``checkpointLocation`` WAL — a restarted query resumes exactly after the
-last committed batch.
+last committed batch. :func:`run_available_now` is the package's one
+run-to-completion lifecycle (start, drain, commit, terminate — or stop
+and raise on timeout); it reports the batches each run committed.
 
 Pipeline per micro-batch (the hot loop, §3.2):
   raw events → :func:`normalize_events` (S3) → table/event/expr/start-ts
@@ -27,7 +29,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from tigate_spark.config import ChangefeedConfig
 from tigate_spark.operators import filters as f_ops
@@ -223,6 +225,39 @@ def _apply_sink_uri_options(cfg: ChangefeedConfig) -> dict:
                 f" 0 NoResponse)")
         cfg.sink.required_acks = acks
     return q
+
+
+def _committed_batches(checkpoint: str) -> int:
+    """Micro-batches committed under ``checkpoint``: the digit-named
+    files of its ``commits`` log (each batch also leaves a ``.N.crc``)."""
+    d = os.path.join(checkpoint, "commits")
+    return sum(f.isdigit() for f in os.listdir(d)) if os.path.isdir(d) else 0
+
+
+def run_available_now(writer: DataStreamWriter, checkpoint: str, *,
+                      timeout_s: float = 300, min_batches: int = 0) -> int:
+    """The run-to-completion lifecycle, spelled once: start ``writer``
+    with ``checkpointLocation`` and the availableNow trigger, await it,
+    and return how many micro-batches THIS run committed (a resumed
+    query counts only its new ones). A query still running at
+    ``timeout_s`` is stopped and raises :class:`TimeoutError`; a failed
+    one raises its ``StreamingQueryException``; fewer than
+    ``min_batches`` commits raise :class:`RuntimeError`."""
+    before = _committed_batches(checkpoint)
+    q = (writer.option("checkpointLocation", checkpoint)
+         .trigger(availableNow=True).start())
+    try:
+        if not q.awaitTermination(timeout_s):
+            raise TimeoutError(
+                f"query {q.name or q.id} still running after {timeout_s}s")
+    finally:
+        if q.isActive:
+            q.stop()
+    n = _committed_batches(checkpoint) - before
+    if n < min_batches:
+        raise RuntimeError(
+            f"expected at least {min_batches} micro-batches, got {n}")
+    return n
 
 
 class Changefeed:
@@ -902,23 +937,21 @@ class Changefeed:
             prepared.unpersist()
 
     # -- lifecycle ---------------------------------------------------------
+    def _writer(self) -> DataStreamWriter:
+        return (self.transform(self.read_stream()).writeStream
+                .foreachBatch(self._foreach_batch)
+                .queryName(self.cfg.changefeed_id))
+
     def start(self, available_now: bool = True) -> StreamingQuery:
-        stream = self.transform(self.read_stream())
-        writer = (
-            stream.writeStream.foreachBatch(self._foreach_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .queryName(self.cfg.changefeed_id)
-        )
+        """Start the feed without waiting (the engine's start/resume)."""
+        writer = self._writer().option("checkpointLocation",
+                                       self.checkpoint_dir)
         if available_now:
             writer = writer.trigger(availableNow=True)
         return writer.start()
 
-    def run_to_completion(self, timeout_s: int = 300) -> None:
-        q = self.start(available_now=True)
-        try:
-            q.awaitTermination(timeout_s)
-        finally:
-            if q.isActive:
-                q.stop()
-        if q.exception() is not None:
-            raise RuntimeError(str(q.exception()))
+    def run_to_completion(self, timeout_s: int = 300) -> int:
+        """Drain everything available; returns the micro-batches this run
+        committed (see :func:`run_available_now`)."""
+        return run_available_now(self._writer(), self.checkpoint_dir,
+                                 timeout_s=timeout_s)
