@@ -92,7 +92,11 @@ def test_total_balance_constant_per_batch(spark, transfer_chunks, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        try:
+            assert q.awaitTermination(300), "query still running at timeout"
+        finally:
+            if q.isActive:
+                q.stop()
         assert q.exception() is None
         replica = read_replica(spark, state_dir)
         touched_sum, touched_n = replica.agg(

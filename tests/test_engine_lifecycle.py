@@ -40,7 +40,11 @@ def test_pause_resume_completes_from_checkpoint(spark, sf_dir, tmp_path):
     eng.pause(cid)
     assert eng.list()[0]["state"] == "paused"
     q = eng.resume(cid)
-    q.awaitTermination(120)
+    try:
+        assert q.awaitTermination(120), "query still running at timeout"
+    finally:
+        if q.isActive:
+            q.stop()
     n2 = read_replica(spark, feed_state_dir).count()
     assert n2 == n1
     exp = (
@@ -165,7 +169,7 @@ def test_resume_processes_only_backlog(spark, sf_dir, tmp_path):
     n2 = land(1)
     q = eng.resume(cid)
     try:
-        q.awaitTermination(300)
+        assert q.awaitTermination(300), "query still running at timeout"
     finally:
         if q.isActive:
             q.stop()
@@ -204,7 +208,7 @@ def test_resume_with_overwritten_checkpoint_ts(spark, sf_dir, tmp_path):
         "percentile_approx(commit_ts, 0.5)").first()[0])
     q = eng.resume(cid, overwrite_checkpoint_ts=mid)
     try:
-        q.awaitTermination(300)
+        assert q.awaitTermination(300), "query still running at timeout"
     finally:
         if q.isActive:
             q.stop()

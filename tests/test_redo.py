@@ -176,7 +176,7 @@ def test_redo_survives_resume_with_overwrite(spark, sf_dir,
     mid = int(ch.selectExpr("percentile_approx(commit_ts, 0.5)").first()[0])
     q = eng.resume(cid, overwrite_checkpoint_ts=mid)
     try:
-        q.awaitTermination(300)
+        assert q.awaitTermination(300), "query still running at timeout"
     finally:
         if q.isActive:
             q.stop()

@@ -272,26 +272,55 @@ def test_ignore_start_ts_df_matches_list_variant(spark, sf_dir):
     assert got.exceptAll(exp).count() == 0
 
 
-def test_replica_batch_path_has_no_driver_collect():
+def test_replica_one_table_merge_reads_only_that_table(
+        spark, sf_dir, tmp_path, monkeypatch):
     """Scale gate: the reference's design point is >1M tables
-    (README.md:5) — the per-batch merge must not collect() a table list to
-    the driver (touched pruning is a broadcast semi-join; state resolution
-    is a manifest join, not a directory walk)."""
-    import inspect
+    (README.md:5), so merging a batch must cost nothing proportional to
+    the tables in state. With state seeded across every table, a
+    one-table batch runs at most 5 Spark jobs, hands the driver exactly
+    that one table id, and scans only that table's version dir: every
+    other table's state files are corrupted, so reading any of them
+    would fail the merge."""
+    from tigate_spark.streaming.sinks import ReplicaSink
 
-    from tigate_spark.streaming import sinks
+    state_dir = str(tmp_path / "state")
+    sink = ReplicaSink(state_dir, ["event_type", "value_cents"])
+    full = changes_stream(spark, sf_dir)
+    sink.process_batch(full, 0)  # seed: state now spans every table
+    tables = {r[0] for r in full.select("table_id").distinct().collect()}
+    assert len(tables) > 1
+    seeded = glob.glob(os.path.join(state_dir, "data", "v=*"))
+    assert len(seeded) == 1
+    for t in tables - {1}:
+        for f in glob.glob(os.path.join(seeded[0], f"table_id={t}", "*")):
+            with open(f, "wb") as fh:
+                fh.write(b"not parquet")
+    one_table = spark.createDataFrame(
+        full.filter(F.col("table_id") == 1).limit(50).collect(), full.schema)
 
-    src = (
-        inspect.getsource(sinks.ReplicaSink.process_batch)
-        + inspect.getsource(sinks._resolve_state)
-        + inspect.getsource(sinks._read_manifest)
-    )
-    assert ".collect(" not in src
-    assert ".isin(" not in src
-    assert "left_semi" in src
-    # no per-table driver filesystem work on the batch path
-    for banned in ("os.listdir", "os.link", "os.rename", "shutil"):
-        assert banned not in src, banned
+    received = []
+    frame_cls = type(one_table)  # the session's concrete DataFrame class
+    real_collect = frame_cls.collect
+
+    def collect(self):
+        rows = real_collect(self)
+        received.extend(rows)
+        return rows
+
+    jvm = spark.sparkContext._jsc.sc()
+    monkeypatch.setattr(frame_cls, "collect", collect)
+    j0 = jvm.dagScheduler().nextJobId()
+    sink.process_batch(one_table, 1)
+    jobs = jvm.dagScheduler().nextJobId() - j0
+    monkeypatch.undo()
+    assert jobs <= 5, jobs
+    assert [tuple(r) for r in received] == [(1,)]
+    # the merged version holds table 1 only, with its full state
+    merged = spark.read.parquet(os.path.join(state_dir, "data", "v=2"))
+    assert {r[0] for r in merged.select("table_id").distinct().collect()} \
+        == {1}
+    want = full.filter(F.col("table_id") == 1).select("pk").distinct()
+    assert merged.count() == want.count()
 
 
 def test_replica_driver_fs_ops_scale_with_touched_only(
@@ -367,12 +396,13 @@ def test_syncpoint_batch_inside_one_interval_records_no_ticks(spark,
     from tigate_spark.streaming.sinks import Bookkeeping
 
     bk = Bookkeeping(str(tmp_path), sync_point_us=1000)
-    schema = "table_id BIGINT, commit_ts BIGINT"
-    inside = spark.createDataFrame([(1, 1100), (2, 1500), (1, 1900)], schema)
-    assert bk.record(inside, 0, lo=1100, hi=1900) == []
-    crossing = spark.createDataFrame(
-        [(1, 1950), (2, 3300), (1, 5100)], schema)
-    assert bk.record(crossing, 1, lo=1950, hi=5100) == [
+    # per-table (table_id, min commit_ts, max commit_ts, count) summaries
+    # of the changes (1, 1100), (2, 1500), (1, 1900) ...
+    inside = [(1, 1100, 1900, 2), (2, 1500, 1500, 1)]
+    assert bk.record(spark, inside, 0) == []
+    # ... and of (1, 1950), (2, 3300), (1, 5100)
+    crossing = [(1, 1950, 5100, 2), (2, 3300, 3300, 1)]
+    assert bk.record(spark, crossing, 1) == [
         2000, 3000, 4000, 5000]
     ticks = spark.read.parquet(bk.syncpoint_dir)
     got = sorted((r["batch_id"], r["primary_ts"], r["secondary_ts"])

@@ -54,7 +54,11 @@ def _run(spark, src_dir, out_dir, ckpt):
         .option("path", out_dir).option("checkpointLocation", ckpt)
         .trigger(availableNow=True).start()
     )
-    q.awaitTermination(120)
+    try:
+        assert q.awaitTermination(120), "query still running at timeout"
+    finally:
+        if q.isActive:
+            q.stop()
     assert q.exception() is None
 
 

@@ -13,6 +13,7 @@ pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
 
 from tigate_spark.sources.changes import changes_stream, normalize_events
+from tigate_spark.streaming.changefeed import run_available_now
 from tigate_spark.streaming.stateful import first_seen, windowed_counts
 
 
@@ -53,14 +54,10 @@ def test_first_seen_dedup_across_batches(spark, sf_dir, chunked_source, tmp_path
         "k", F.concat_ws(":", F.col("table_id"), F.col("pk"))
     )
     out = first_seen(keyed, "k", "pk", "seq")
-    q = (
+    run_available_now(
         out.writeStream.format("parquet")
-        .option("path", str(tmp_path / "out"))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+        .option("path", str(tmp_path / "out")),
+        str(tmp_path / "ckpt"))
     got = spark.read.parquet(str(tmp_path / "out"))
     # chunks ascend in seq, so the first batch containing a key holds its
     # global min seq → output == batch min(seq) per key
@@ -81,15 +78,11 @@ def test_first_seen_dedup_across_batches(spark, sf_dir, chunked_source, tmp_path
 def test_windowed_counts_with_watermark(spark, sf_dir, chunked_source, tmp_path):
     ch = _stream(spark, chunked_source)
     agg = windowed_counts(ch, window="1 hour", watermark_delay="30 minutes")
-    q = (
+    run_available_now(
         agg.writeStream.format("parquet")
         .option("path", str(tmp_path / "out"))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+        .outputMode("append"),
+        str(tmp_path / "ckpt"))
     got = spark.read.parquet(str(tmp_path / "out"))
     # append mode only emits windows the final watermark passed; every
     # emitted window must match the batch count exactly
@@ -142,15 +135,11 @@ def test_late_rows_dropped_by_watermark(spark, tmp_path):
     src = str(tmp_path / "src")
     ch = _stream(spark, src)
     agg = windowed_counts(ch, window="1 hour", watermark_delay="30 minutes")
-    q = (
+    run_available_now(
         agg.writeStream.format("parquet")
         .option("path", str(tmp_path / "out"))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+        .outputMode("append"),
+        str(tmp_path / "ckpt"))
     got = spark.read.parquet(str(tmp_path / "out"))
     h0 = got.filter(F.col("window_start") == F.timestamp_micros(F.lit(base_us)))
     # hour-0 window closed in batch 1; the late row must NOT be counted:
@@ -171,14 +160,10 @@ def test_drop_duplicates_within_watermark(spark, sf_dir, chunked_source, tmp_pat
         ch.withWatermark("commit_time", "10 seconds")
         .dropDuplicatesWithinWatermark(["table_id", "pk"])
     )
-    q = (
+    run_available_now(
         dedup.writeStream.format("parquet")
-        .option("path", str(tmp_path / "out"))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+        .option("path", str(tmp_path / "out")),
+        str(tmp_path / "ckpt"))
     got = spark.read.parquet(str(tmp_path / "out"))
     exp = changes_stream(spark, sf_dir).select("table_id", "pk").distinct().count()
     # every key emitted at least once; duplicates only across expired
@@ -237,7 +222,11 @@ def test_txn_match_cross_batch_state(spark, sf_dir, tmp_path):
         .writeStream.format("parquet").option("path", out_dir)
         .option("checkpointLocation", ck).trigger(availableNow=True).start()
     )
-    q.awaitTermination(180)
+    try:
+        assert q.awaitTermination(180), "query still running at timeout"
+    finally:
+        if q.isActive:
+            q.stop()
     assert q.exception() is None, q.exception()
     got = spark.read.parquet(out_dir)
     assert got.count() == expected

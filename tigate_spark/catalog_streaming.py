@@ -2261,8 +2261,9 @@ FROM ordered WHERE rn = 1 AND op <> 'D'
         "micro-batches, the registry appends the new version, and "
         "post-DDL sub-batches carry the evolved extra_cents payload "
         "column — the ReplicaSink's merge unions evolved and pre-DDL "
-        "state by NAME (allowMissingColumns) and the state read "
-        "footer-merges version dirs written under either schema, so the "
+        "state by NAME (allowMissingColumns) and the state read takes "
+        "each version dir's schema from the manifest and unions them by "
+        "name, so the "
         "new column appears downstream with NULL for rows whose last "
         "writer predates the DDL (parquet ADD COLUMN semantics: no "
         "backfill, unlike the SQLite DEFAULT) and the mounted value for "

@@ -43,6 +43,7 @@ from tigate_spark.streaming.sinks import (
     NoopSink,
     ReplicaSink,
     StorageSink,
+    commit_range,
 )
 from tigate_spark.streaming.sqlite_apply import SqliteApplySink
 
@@ -232,6 +233,13 @@ def _committed_batches(checkpoint: str) -> int:
     files of its ``commits`` log (each batch also leaves a ``.N.crc``)."""
     d = os.path.join(checkpoint, "commits")
     return sum(f.isdigit() for f in os.listdir(d)) if os.path.isdir(d) else 0
+
+
+def _summarize(batch: DataFrame) -> list:
+    """The batch's per-table ``(table_id, min commit_ts, max commit_ts,
+    count)`` rows, on the driver: O(touched tables)."""
+    return batch.groupBy("table_id").agg(
+        F.min("commit_ts"), F.max("commit_ts"), F.count(F.lit(1))).collect()
 
 
 def run_available_now(writer: DataStreamWriter, checkpoint: str, *,
@@ -851,20 +859,23 @@ class Changefeed:
         batch, in this order: redo WAL, sink write (split at due DDL
         barriers), bookkeeping, redo checkpoint. The sinks only write.
 
-        One cache serves every action: the commit-range agg, the WAL, the
-        barrier sub-batch filters, the sink's own actions and the
-        bookkeeping aggregates. The range is computed only when something
-        reads it (redo, a pending DDL, syncpoint), so a plain feed runs no
-        extra job."""
+        One cache serves every action: the per-table summary, the WAL,
+        the barrier sub-batch filters and the sink's own actions. The
+        summary — one ``groupBy(table_id)`` of min/max commit_ts and count,
+        collected to the driver — is the batch's only bookkeeping
+        aggregate: the commit range (redo, the DDL due-check, syncpoint
+        ticks) and the progress rows are derived from it on the driver.
+        It runs before the sink only when the redo log or a pending DDL
+        needs the range there; otherwise after it, so the sink's first
+        action, not an extra job, fills the cache."""
         pending = [d for d in self.ddl_events
                    if d.commit_ts not in self._ddl_applied]
         prepared = self._prepare_for_sink(batch_df).persist()
         try:
-            lo = hi = None
-            if (self.redo is not None or pending
-                    or self.bookkeeping.sync_point_us):
-                lo, hi = prepared.agg(
-                    F.min("commit_ts"), F.max("commit_ts")).first()
+            summary = None
+            if self.redo is not None or pending:
+                summary = _summarize(prepared)
+            lo, hi = commit_range(summary or [])
             # a configured DDL is due in the first micro-batch whose
             # commit range reaches its ts
             due = sorted((d for d in pending
@@ -923,9 +934,13 @@ class Changefeed:
 
                 # prepared is persisted here, so the split owns no cache
                 split_batch_at_ddl(prepared, due, apply_dml, apply_ddl)
+            if summary is None:
+                summary = _summarize(prepared)
+                lo, hi = commit_range(summary)
             # K4 progress + K5 syncpoint ticks: once per micro-batch,
             # after the sink committed, however the barriers split it
-            ticks = self.bookkeeping.record(prepared, batch_id, lo=lo, hi=hi)
+            ticks = self.bookkeeping.record(prepared.sparkSession, summary,
+                                            batch_id)
             if ticks and isinstance(self.sink, SqliteApplySink):
                 # the downstream tidb_cdc syncpoint_v1 rows a real
                 # MySQL-sink consumer reads (K5 on the executable sink)

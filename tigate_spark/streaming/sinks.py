@@ -8,6 +8,12 @@ Reference parity:
   into a parquet replica. At lake scale the same ``process_batch`` body is
   a Delta/Iceberg ``MERGE INTO``; the union+max_by merge below is the
   engine-neutral formulation (one shuffle on the key, map-side combinable).
+  Its commit metadata is small and lives on the driver, as a sink's
+  commit log does in Structured Streaming: each sink instance loads the
+  manifest (every table's current version, and each version's state
+  schema) once and advances it after every commit, so a batch reads only
+  its touched tables' version dirs, never the manifest or the whole data
+  tree.
 - K2 Kafka sink (``downstreamadapter/sink/kafka_sink.go``; DML worker
   ``kafka_dml_worker.go:107-369``): :class:`ChangelogSink` — router columns
   (topic, partition, key) + protocol encoding appended to a partitioned
@@ -18,8 +24,9 @@ Reference parity:
   T5/T11 progress: the changefeed appends per-batch checkpoint rows
   (batch_id, table_id, resolved_ts, n_events) to a bookkeeping table
   through :class:`Bookkeeping`, once per micro-batch after the sink
-  wrote it — the sinks only write, as the reference's sinks do while
-  its dispatcher tracks table progress (``table_progress.go:24-44``).
+  wrote it, from the batch's one driver-side per-table summary — the
+  sinks only write, as the reference's sinks do while its dispatcher
+  tracks table progress (``table_progress.go:24-44``).
 - K5 syncpoint ts-map (``mysql_writer.go:154-200,525-545``): aligned ticks
   appended per batch when sync point is enabled (T7,
   ``downstreamadapter/syncpoint/syncpoint.go:15-22``), derived on the
@@ -35,75 +42,188 @@ here a ``VACUUM``-style rewrite, left to the store).
 
 from __future__ import annotations
 
+import functools
 import glob
+import json
 import os
+import re
 import shutil
 import uuid
+from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from tigate_spark.operators.ordering import op_rank_col
 
 #: replica state layout (manifest-versioned, Delta-log-style)
 _MANIFEST = "_manifest"
 _DATA = "data"
+#: manifest file footer key holding the version's state schema (Spark JSON)
+_SCHEMA_KEY = b"tigate.state_schema"
+#: one manifest file per committed version; compactions write checkpoints
+_MANIFEST_NAME = re.compile(r"^(\d+)(\.checkpoint)?\.parquet$")
 
 
-def _manifest_dir(state_dir: str) -> str:
-    return os.path.join(state_dir, _MANIFEST)
+def _manifest_file(state_dir: str, version: int,
+                   checkpoint: bool = False) -> str:
+    kind = ".checkpoint" if checkpoint else ""
+    return os.path.join(state_dir, _MANIFEST, f"{version:020d}{kind}.parquet")
 
 
-def _data_dir(state_dir: str) -> str:
-    return os.path.join(state_dir, _DATA)
+def _version_dir(state_dir: str, version: int) -> str:
+    return os.path.join(state_dir, _DATA, f"v={version}")
 
 
-def _read_manifest(spark: SparkSession, state_dir: str) -> DataFrame | None:
-    """The manifest log: (table_id, version) rows appended per batch —
-    a table's current state lives in ``data/v=<max version>``. Returns
-    None before the first commit."""
-    mdir = _manifest_dir(state_dir)
-    if not os.path.exists(mdir):
+def _write_parquet_atomic(table: pa.Table, path: str) -> None:
+    """Write a small driver-side table as one parquet file. Readers skip
+    the dot-prefixed temp name, so the file appears whole or not at all."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = os.path.join(os.path.dirname(path),
+                       f".{os.path.basename(path)}.{uuid.uuid4().hex[:8]}")
+    pq.write_table(table, tmp)
+    os.replace(tmp, path)
+
+
+def _write_manifest(state_dir: str, version: int, tables: list[int],
+                    schema: StructType, checkpoint: bool = False) -> None:
+    """The commit point of a version: its (table_id, version) rows, with
+    the version's state schema in the file footer."""
+    rows = pa.table({
+        "table_id": pa.array(tables, pa.int64()),
+        "version": pa.array([version] * len(tables), pa.int64()),
+    }).replace_schema_metadata({_SCHEMA_KEY: schema.json().encode()})
+    _write_parquet_atomic(rows, _manifest_file(state_dir, version, checkpoint))
+
+
+@dataclass
+class _Manifest:
+    """Driver-side snapshot of a replica's manifest: each table's current
+    version, each live version's state schema and table count, the newest
+    version and the newest checkpoint (a compaction's full snapshot; the
+    versions before it are dead). Small: O(tables) ints plus at most
+    ``compact_every`` + 1 schemas."""
+
+    current: dict[int, int] = field(default_factory=dict)
+    schemas: dict[int, StructType] = field(default_factory=dict)
+    sizes: dict[int, int] = field(default_factory=dict)
+    newest: int = 0
+    checkpoint: int = 0
+
+    @classmethod
+    def load(cls, state_dir: str, as_of: int | None = None) -> _Manifest:
+        """Read the manifest files (at most versions ≤ ``as_of``) from
+        the newest checkpoint on. One listing of ``_manifest``, which
+        compaction keeps at ``compact_every`` + 1 files."""
+        mdir = os.path.join(state_dir, _MANIFEST)
+        files: dict[int, tuple[str, bool]] = {}
+        for name in os.listdir(mdir) if os.path.isdir(mdir) else ():
+            m = _MANIFEST_NAME.match(name)
+            if m is None or (as_of is not None and int(m[1]) > as_of):
+                continue
+            v, cp = int(m[1]), m[2] is not None
+            if cp or v not in files:
+                files[v] = (os.path.join(mdir, name), cp)
+        snap = cls()
+        base = max((v for v, (_, cp) in files.items() if cp), default=0)
+        for v in sorted(files):
+            if v >= base:
+                path, cp = files[v]
+                t = pq.read_table(path)
+                schema = StructType.fromJson(
+                    json.loads(t.schema.metadata[_SCHEMA_KEY]))
+                snap.advance(v, t.column("table_id").to_pylist(), schema, cp)
+        return snap
+
+    def advance(self, version: int, tables: list[int], schema: StructType,
+                checkpoint: bool = False) -> None:
+        """Apply one committed version (a checkpoint replaces everything)."""
+        if checkpoint:
+            self.current, self.schemas, self.sizes = {}, {}, {}
+            self.checkpoint = version
+        for t in tables:
+            self.current[t] = version
+        self.schemas[version] = schema
+        self.sizes[version] = len(tables)
+        self.newest = version
+
+    @property
+    def n_versions(self) -> int:
+        return len(self.schemas)
+
+    def stale(self, state_dir: str) -> bool:
+        """Whether another writer (a second sink, :func:`vacuum_tombstones`)
+        committed past this snapshot: the next version's manifest file
+        exists, or the newest one is gone (a compaction removed it —
+        in ascending version order, so while it is there every later file
+        is too). At most three existence checks, no listing."""
+        if not self.newest:
+            return os.path.isdir(os.path.join(state_dir, _MANIFEST))
+        if not os.path.exists(_manifest_file(
+                state_dir, self.newest, self.newest == self.checkpoint)):
+            return True
+        return any(os.path.exists(_manifest_file(state_dir, self.newest + 1, cp))
+                   for cp in (False, True))
+
+
+def _scan(spark: SparkSession, state_dir: str, snap: _Manifest,
+          tables: list[int] | None = None) -> DataFrame | None:
+    """The one reader of the layout: the state rows (tombstones included)
+    of ``tables`` — every table when None — at their version in ``snap``,
+    or None if none of them has state.
+
+    Each version dir is read with its own ``basePath`` and its schema
+    from the manifest, so ``v=`` never becomes a column and no column is
+    joined in: a payload column may carry any name. Named tables read
+    their ``table_id=`` dirs only. A full read takes a version dir whole
+    when every table it wrote is still current there, and semi-joins it
+    against its current tables otherwise; a version dir a crash left
+    without a manifest file is never read."""
+    by_version: dict[int, list[int]] = {}
+    for t in snap.current if tables is None else tables:
+        if t in snap.current:
+            by_version.setdefault(snap.current[t], []).append(t)
+    parts = []
+    for v, ts in sorted(by_version.items()):
+        vdir = _version_dir(state_dir, v)
+        reader = spark.read.schema(snap.schemas[v]).option("basePath", vdir)
+        if tables is not None:
+            df = reader.parquet(*[os.path.join(vdir, f"table_id={t}")
+                                  for t in ts])
+        elif len(ts) == snap.sizes[v]:
+            df = reader.parquet(vdir)
+        else:
+            keep = spark.createDataFrame([(t,) for t in ts], "table_id bigint")
+            df = reader.parquet(vdir).join(F.broadcast(keep), "table_id",
+                                           "left_semi")
+        parts.append(df.withColumn("table_id", F.col("table_id").cast("bigint")))
+    if not parts:
         return None
-    return spark.read.parquet(mdir).select(
-        F.col("table_id").cast("bigint").alias("table_id"),
-        F.col("version").cast("bigint").alias("version"),
-    )
+    # schema evolution: a version written before a DDL lacks the evolved
+    # payload columns — the union by name NULL-fills them (the parquet
+    # replica's ALTER ... ADD COLUMN semantics)
+    return functools.reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
 
 
-def _resolve_state(spark: SparkSession, state_dir: str,
-                   man: DataFrame) -> DataFrame:
-    """Current state rows: data tree joined against each table's
-    max-version manifest row. Superseded copies (and orphan version dirs
-    a crash left without a manifest row) drop out of the version match —
-    no driver-side listing, linking, or renames anywhere on this path."""
-    data = (
-        # mergeSchema: version dirs written before a DDL lack the
-        # evolved payload columns — the union schema NULL-fills them
-        # (the parquet replica's ALTER ... ADD COLUMN semantics). A
-        # production deployment carries the schema in the manifest (or
-        # uses Delta/Iceberg metadata) instead of footer-merging; here
-        # the compact cycle keeps the file population bounded.
-        spark.read.option("mergeSchema", "true")
-        .parquet(_data_dir(state_dir))
-        .withColumn("table_id", F.col("table_id").cast("bigint"))
-        .withColumn("v", F.col("v").cast("bigint"))
-    )
-    cur = man.groupBy("table_id").agg(F.max("version").alias("version"))
-    return (
-        data.join(cur, "table_id", "inner")
-        .filter(F.col("v") == F.col("version"))
-        .drop("v", "version")
-    )
+def _full_state(spark: SparkSession, state_dir: str,
+                snap: _Manifest) -> DataFrame | None:
+    """Every table's current state, or None before the first commit."""
+    if not snap.newest:
+        return None
+    state = _scan(spark, state_dir, snap)
+    if state is None:  # every table vacuumed away
+        return spark.createDataFrame([], snap.schemas[snap.newest])
+    return state
 
 
 def read_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """Full current replica state (tombstones included), or None if no
     batch has committed yet."""
-    man = _read_manifest(spark, state_dir)
-    if man is None:
-        return None
-    return _resolve_state(spark, state_dir, man)
+    return _full_state(spark, state_dir, _Manifest.load(state_dir))
 
 
 def read_state_as_of(spark: SparkSession, state_dir: str,
@@ -116,13 +236,16 @@ def read_state_as_of(spark: SparkSession, state_dir: str,
     reclaims superseded versions (the VACUUM analogue — after a compact,
     only versions at/after the snapshot remain addressable). Returns
     None if no manifest row is ≤ ``version``."""
-    man = _read_manifest(spark, state_dir)
-    if man is None:
-        return None
-    man_v = man.filter(F.col("version") <= version)
-    if man_v.first() is None:
-        return None
-    return _resolve_state(spark, state_dir, man_v)
+    return _full_state(spark, state_dir,
+                       _Manifest.load(state_dir, as_of=version))
+
+
+def commit_range(summary: list) -> tuple[int | None, int | None]:
+    """A batch's (min, max) commit_ts from its per-table summary rows
+    ``(table_id, min commit_ts, max commit_ts, count)``; (None, None)
+    for an empty batch."""
+    return (min((r[1] for r in summary), default=None),
+            max((r[2] for r in summary), default=None))
 
 
 class Bookkeeping:
@@ -171,20 +294,24 @@ class Bookkeeping:
                     ignore_errors=True,
                 )
 
-    def record(self, batch_df: DataFrame, batch_id: int,
-               lo: int | None = None, hi: int | None = None) -> list[int]:
+    def record(self, spark: SparkSession, summary: list,
+               batch_id: int) -> list[int]:
         """Append the batch's per-table progress rows and, with sync point
-        on, its syncpoint ticks; return the ticks. ``lo``/``hi`` is the
-        batch's commit range, which the changefeed has already computed
-        whenever sync point is on (None for an empty batch)."""
-        progress = batch_df.groupBy("table_id").agg(
-            F.max("commit_ts").alias("resolved_ts"),
-            F.count(F.lit(1)).alias("n_events"),
-        ).withColumn("batch_id", F.lit(batch_id))
-        progress.write.mode("append").parquet(self.progress_dir)
+        on, its syncpoint ticks; return the ticks. ``summary`` is the
+        batch's driver-side ``(table_id, min commit_ts, max commit_ts,
+        count)`` rows, which the changefeed collects once per batch; the
+        progress rows are written from it with no Spark job."""
+        _write_parquet_atomic(pa.table({
+            "table_id": pa.array([r[0] for r in summary], pa.int64()),
+            "resolved_ts": pa.array([r[2] for r in summary], pa.int64()),
+            "n_events": pa.array([r[3] for r in summary], pa.int64()),
+            "batch_id": pa.array([batch_id] * len(summary), pa.int32()),
+        }), os.path.join(self.progress_dir,
+                         f"part-{batch_id:05d}-{uuid.uuid4().hex}.parquet"))
         if not self.sync_point_us:
             return []
         iv = self.sync_point_us
+        lo, hi = commit_range(summary)
         # aligned ticks covered by this batch: CalculateStartSyncPointTs
         # rounds up to the next interval boundary (syncpoint.go:15-22); a
         # batch inside one interval crosses none. K5 ts-map rows are
@@ -197,7 +324,6 @@ class Bookkeeping:
             range((lo // iv + 1) * iv, (hi // iv) * iv + 1, iv))
         rows = [(t, hi, batch_id) for t in ticks]
         schema = "primary_ts bigint, secondary_ts bigint, batch_id int"
-        spark = batch_df.sparkSession
         if self.sync_point_retention_us:
             bucket = max(self.sync_point_retention_us // 4, 1)
             (spark.createDataFrame([r + (r[0] // bucket,) for r in rows],
@@ -214,30 +340,51 @@ class Bookkeeping:
 class ReplicaSink:
     """K1: merge each micro-batch into a materialized replica (parquet).
 
-    State schema: (table_id, pk, op, commit_ts, start_ts, op_rank, seq,
+    State schema: (table_id, pk, op, commit_ts, start_ts, seq,
     *payload_cols) — the winning change per key plus its order key, so the
     next merge's max_by is a pure union+agg (idempotent under replay).
 
     Storage is manifest-versioned (a Delta-log commit protocol in
     miniature)::
 
-        state_dir/_manifest/*.parquet       log of (table_id, version)
+        state_dir/_manifest/<n>.parquet     (table_id, version) rows of
+                                            version n; footer: its schema
+        state_dir/_manifest/<n>.checkpoint.parquet   a compaction's rows
         state_dir/data/v=<n>/table_id=<id>/*.parquet
 
     Each batch writes ONLY the touched tables' winner rows into a fresh
-    ``v=<n>`` directory and appends O(touched) manifest rows; a table's
-    current state is its max-version manifest row. Per-batch driver work
-    is O(1) filesystem calls (two Spark writes, one existence probe) —
-    no per-table listdir/hard-link loop and no POSIX dir rename, so the
-    layout holds on object stores and at the reference's >1M-table design
-    point (``README.md:5``). Superseded versions are reclaimed by the
-    amortized :meth:`compact` (Delta checkpoint + VACUUM equivalent),
-    triggered every ``compact_every`` commits. A crash between the data
-    write and the manifest append leaves an orphan version dir that no
-    manifest row references — invisible to readers, clobbered by the
-    replayed batch (same next version), swept by the next compact.
-    Production deployments point the same ``process_batch`` body at a
-    transactional table format (Delta/Iceberg ``MERGE INTO``).
+    ``v=<n>`` directory, then commits it with one manifest file of
+    O(touched) rows written from the driver: data first, manifest second,
+    so a version dir without its manifest file stays invisible.
+
+    The sink keeps its manifest on the driver (:class:`_Manifest`): each
+    table's current version, the newest version, the live version count
+    and each version's state schema. It is loaded from disk once per sink
+    instance (so a restart reloads it) and advanced only after a manifest
+    file has landed. A batch therefore collects its touched table ids,
+    reads just those tables' current ``table_id=`` dirs with the schema
+    from the manifest (no manifest scan or aggregate, no footer-merged
+    schema, no listing of the data tree), merges with one ``max_by``
+    shuffle and commits: 4 Spark jobs. At most three existence checks
+    per batch detect another writer (a second sink,
+    :func:`vacuum_tombstones`) and reload the manifest, so no committed
+    version number is reused.
+
+    The collect is O(touched), not O(tables): at the reference's
+    >1M-table design point (``README.md:5``) a micro-batch touches the
+    tables its changes name, bounded by its rows, and the driver holds
+    only their ids — the same bound as the manifest rows it writes. The
+    driver snapshot itself is O(tables) small ints, what a Delta log
+    replay holds. There is no per-table listdir/hard-link loop and no
+    POSIX dir rename, so the layout holds on object stores. Superseded
+    versions are reclaimed by the amortized :meth:`compact` (Delta
+    checkpoint + VACUUM equivalent), triggered once more than
+    ``compact_every`` versions are live. A crash between the data write
+    and the manifest file leaves an orphan version dir — invisible to
+    readers, clobbered by the replayed batch (same next version), swept
+    by the next compact. Production deployments point the same
+    ``process_batch`` body at a transactional table format (Delta/Iceberg
+    ``MERGE INTO``).
     """
 
     def __init__(self, state_dir: str, payload_cols: list[str],
@@ -245,46 +392,36 @@ class ReplicaSink:
         self.state_dir = state_dir
         self.payload_cols = payload_cols
         self.compact_every = max(2, compact_every)
+        self._snapshot: _Manifest | None = None
+
+    def _manifest(self) -> _Manifest:
+        """The driver snapshot, loaded on first use and reloaded when
+        another writer has committed past it."""
+        if self._snapshot is None or self._snapshot.stale(self.state_dir):
+            self._snapshot = _Manifest.load(self.state_dir)
+        return self._snapshot
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """Merge one micro-batch into the versioned replica.
-
-        Touched-table pruning stays distributed: a broadcast left-semi
-        join against the batch's distinct table_ids. The reference's
-        design point is >1M tables (README.md:5) — a driver
-        collect()+isin literal would be a driver OOM / plan explosion
-        there, while the semi-join lets dynamic partition pruning skip
-        untouched ``table_id=`` dirs in the state scan.
-        """
+        """Merge one micro-batch into the versioned replica."""
         spark = batch_df.sparkSession
+        snap = self._manifest()
         cols = ["table_id", "pk", "op", "commit_ts", "start_ts", "seq",
                 *[c for c in self.payload_cols if c in batch_df.columns]]
         incoming = batch_df.select(*cols)
-        touched = incoming.select("table_id").distinct()
-        man = _read_manifest(spark, self.state_dir)
-        if man is None:
-            merged_src, next_ver, n_versions = incoming, 1, 0
-        else:
-            info = man.agg(
-                F.max("version").alias("mx"),
-                F.count_distinct("version").alias("nv"),
-            ).first()
-            next_ver, n_versions = int(info["mx"]) + 1, int(info["nv"])
-            prev_all = _resolve_state(spark, self.state_dir, man).join(
-                F.broadcast(touched), "table_id", "left_semi"
-            )
+        touched = [r[0] for r in
+                   incoming.select("table_id").distinct().collect()]
+        if not touched:
+            return
+        prev = _scan(spark, self.state_dir, snap, touched)
+        merged_src = incoming
+        if prev is not None:
             # schema evolution across the DDL barrier: a payload column
             # may exist on only one side (post-DDL batch into pre-DDL
             # state, or a replayed pre-DDL batch into evolved state) —
             # union by name NULL-fills the missing side, and the winner
             # struct below re-derives from the union schema
-            prev = prev_all.select(
-                "table_id", "pk", "op", "commit_ts", "start_ts", "seq",
-                *[c for c in self.payload_cols if c in prev_all.columns],
-            )
-            merged_src = incoming.unionByName(
-                prev, allowMissingColumns=True)
-            cols = merged_src.columns
+            merged_src = incoming.unionByName(prev, allowMissingColumns=True)
+        cols = merged_src.columns
         # one shuffle: max_by over the exact total order (commit_ts,
         # start_ts, D<U<I, seq) — the winner keeps its full order key so
         # cross-batch ties at the same commit_ts still resolve correctly
@@ -300,27 +437,27 @@ class ReplicaSink:
             *[F.col(f"w.{c}").alias(c) for c in cols if c not in ("table_id", "pk")],
         )
         # data first, manifest second: rows are visible only once their
-        # manifest rows land (the commit point)
-        vdir = os.path.join(_data_dir(self.state_dir), f"v={next_ver}")
-        new_state.write.mode("overwrite").partitionBy("table_id").parquet(vdir)
-        (touched.withColumn("version", F.lit(next_ver).cast("bigint"))
-         .coalesce(1)
-         .write.mode("append").parquet(_manifest_dir(self.state_dir)))
-        if n_versions + 1 > self.compact_every:
+        # manifest file lands (the commit point); the snapshot advances
+        # only after that
+        version = snap.newest + 1
+        new_state.write.mode("overwrite").partitionBy("table_id").parquet(
+            _version_dir(self.state_dir, version))
+        _write_manifest(self.state_dir, version, touched, new_state.schema)
+        snap.advance(version, touched, new_state.schema)
+        if snap.n_versions > self.compact_every:
             self.compact(spark)
 
     def compact(self, spark: SparkSession) -> None:
         """Amortized checkpoint: rewrite the full current state into one
-        new version, append a manifest snapshot, then drop superseded
-        version dirs and old manifest log files. Crash-safe in every
-        prefix: the snapshot append wins by max-version before any delete
-        runs, and cleanup is redone by the next compact."""
-        man = _read_manifest(spark, self.state_dir)
-        if man is None:
-            return
-        state = _resolve_state(spark, self.state_dir, man)
-        snapshot_ver = int(man.agg(F.max("version")).first()[0]) + 1
-        _checkpoint_state(spark, self.state_dir, state, man, snapshot_ver)
+        new version, write its checkpoint manifest file, then drop
+        superseded version dirs and manifest files. Crash-safe in every
+        prefix: readers start from the newest checkpoint as soon as it
+        lands, and cleanup is redone by the next compact."""
+        snap = self._manifest()
+        state = _full_state(spark, self.state_dir, snap)
+        if state is not None:
+            self._snapshot = _checkpoint_state(spark, self.state_dir, state,
+                                               snap)
 
     def live(self, spark: SparkSession) -> DataFrame:
         """The replica's live view (tombstones filtered)."""
@@ -328,36 +465,38 @@ class ReplicaSink:
 
 
 def _checkpoint_state(spark: SparkSession, state_dir: str,
-                      new_state: DataFrame, man: DataFrame,
-                      snapshot_ver: int) -> None:
+                      new_state: DataFrame, snap: _Manifest) -> _Manifest:
     """Write ``new_state`` as a full snapshot version and supersede the
-    manifest log with it. Cleanup of old versions/log files is driver-side
-    but amortized (runs once per ``compact_every`` commits) and
-    best-effort — a crash mid-cleanup only leaves unreferenced garbage."""
-    mdir = _manifest_dir(state_dir)
-    old_log_files = [
-        p for p in glob.glob(os.path.join(mdir, "*"))
-        if os.path.isfile(p)
-    ]
-    vdir = os.path.join(_data_dir(state_dir), f"v={snapshot_ver}")
+    manifest with its checkpoint file; return the new snapshot. The
+    checkpoint lists the tables that still hold rows (a table vacuumed
+    empty leaves the manifest; readers ignore every version before a
+    checkpoint, so it cannot resurrect through an old one). Listing the
+    snapshot dir and the cleanup are driver-side but amortized (once
+    per ``compact_every`` commits) and best-effort — a crash mid-cleanup
+    only leaves unreferenced garbage."""
+    version = snap.newest + 1
+    vdir = _version_dir(state_dir, version)
     new_state.write.mode("overwrite").partitionBy("table_id").parquet(vdir)
-    # snapshot rows cover EVERY table the log knows (incl. now-empty ones,
-    # so a vacuumed-away table can't resurrect through an old version)
-    (man.select("table_id").distinct()
-     .withColumn("version", F.lit(snapshot_ver).cast("bigint"))
-     .coalesce(1)
-     .write.mode("append").parquet(mdir))
-    for p in old_log_files:
+    tables = sorted(int(d.split("=", 1)[1]) for d in os.listdir(vdir)
+                    if d.startswith("table_id="))
+    _write_manifest(state_dir, version, tables, new_state.schema,
+                    checkpoint=True)
+    mdir = os.path.join(state_dir, _MANIFEST)
+    old = sorted((int(m[1]), name) for name in os.listdir(mdir)
+                 if (m := _MANIFEST_NAME.match(name)) and int(m[1]) < version)
+    # ascending: while a snapshot's newest file survives, so does every
+    # later one (what _Manifest.stale relies on)
+    for _, name in old:
         try:
-            os.remove(p)
-            crc = os.path.join(os.path.dirname(p), "." + os.path.basename(p) + ".crc")
-            if os.path.exists(crc):
-                os.remove(crc)
+            os.remove(os.path.join(mdir, name))
         except OSError:
             pass
-    for d in glob.glob(os.path.join(_data_dir(state_dir), "v=*")):
-        if os.path.basename(d) != f"v={snapshot_ver}":
+    for d in glob.glob(os.path.join(state_dir, _DATA, "v=*")):
+        if os.path.basename(d) != f"v={version}":
             shutil.rmtree(d, ignore_errors=True)
+    out = _Manifest()
+    out.advance(version, tables, new_state.schema, checkpoint=True)
+    return out
 
 
 def read_replica(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -692,19 +831,20 @@ def vacuum_tombstones(spark: SparkSession, state_dir: str, below_ts: int) -> int
     Single pass: the removed-tombstone count rides the compaction write as
     an ``Observation`` metric — no separate pre-count scan. Implemented as
     a filtered manifest checkpoint (full snapshot version + manifest
-    supersede), so it doubles as a compact. Returns tombstones removed.
+    supersede), so it doubles as a compact; a live :class:`ReplicaSink`
+    on the same ``state_dir`` notices it and reloads its manifest.
+    Returns tombstones removed.
     """
     from pyspark.sql import Observation
 
-    man = _read_manifest(spark, state_dir)
-    if man is None:
+    snap = _Manifest.load(state_dir)
+    state = _full_state(spark, state_dir, snap)
+    if state is None:
         return 0
-    state = _resolve_state(spark, state_dir, man)
     dead = (F.col("op") == "D") & (F.col("commit_ts") < below_ts)
     obs = Observation()
     observed = state.observe(
         obs, F.sum(F.when(dead, 1).otherwise(0)).alias("n_dead")
     )
-    snapshot_ver = int(man.agg(F.max("version")).first()[0]) + 1
-    _checkpoint_state(spark, state_dir, observed.filter(~dead), man, snapshot_ver)
+    _checkpoint_state(spark, state_dir, observed.filter(~dead), snap)
     return int(obs.get["n_dead"] or 0)
