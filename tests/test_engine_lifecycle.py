@@ -93,6 +93,17 @@ def test_config_json_round_trip():
     d = changefeed_config_to_dict(cfg)
     cfg2 = changefeed_config_from_dict(json.loads(json.dumps(d)))
     assert cfg2 == cfg
+    # a body written for an older config still binds: the settings no
+    # code read were removed and are now unknown keys, ignored like any
+    old = dict(body, force_replicate=True, sink=dict(
+        body["sink"], safe_mode=True,
+        delete_only_output_handle_key_columns=True,
+        csv={"delimiter": "|", "output_old_value": True,
+             "output_handle_key": True}))
+    cfg3 = changefeed_config_from_dict(old)
+    assert cfg3.sink.csv.delimiter == "|"
+    cfg3.sink.csv = None
+    assert cfg3 == cfg
 
 
 def test_get_reports_checkpoint_and_update_requires_pause(spark, sf_dir, tmp_path):

@@ -388,6 +388,40 @@ def test_tidb_cdc_ddl_ts_upsert_and_drop(tmp_path):
     assert sp == [("1000", "5"), ("2000", "9")]
 
 
+def test_drop_table_barrier_drops_its_ddl_ts_row(spark, sf_dir, tmp_path):
+    """A DROP TABLE barrier through the changefeed removes the table's
+    ddl_ts_v1 row however the statement is spaced: the row follows the
+    action the lane's DDL translator recognized, not a prefix test of
+    the text. Another DDL upserts its table's row."""
+    import os
+
+    from tigate_spark.config import ChangefeedConfig
+    from tigate_spark.streaming.changefeed import Changefeed
+    from tigate_spark.streaming.ddl import DDLEvent
+
+    src = os.path.join(sf_dir, "events.parquet")
+    ts = sorted(r[0] for r in spark.read.parquet(src).selectExpr(
+        "unix_micros(cast(ts as timestamp))").collect())
+    mid = ts[len(ts) // 2]
+
+    def ddl(table_id, query):
+        return DDLEvent(commit_ts=mid + table_id, table_id=table_id,
+                        query=query, schema_tag=f"v{table_id}",
+                        schema_name="app", table_name=f"t{table_id}")
+
+    cf = Changefeed(
+        spark, ChangefeedConfig(changefeed_id="cf-drop", sink_uri="sqlite://"),
+        src, str(tmp_path), ddl_events=[
+            ddl(1, "ALTER TABLE `app`.`t1` ADD COLUMN `extra` INTEGER"),
+            ddl(2, "DROP\nTABLE `app`.`t2`"),
+            ddl(3, "DROP  TABLE IF EXISTS `app`.`t3`"),
+        ])
+    cf.run_to_completion()
+    rows = cf.sink.read_cdc(spark, "ddl_ts_v1").collect()
+    assert sorted((r["table_id"], r["ddl_ts"]) for r in rows) == [
+        (1, str(mid + 1))]
+
+
 def test_tidb_cdc_db_invisible_to_read_state(spark, tmp_path):
     """The bookkeeping db must never leak into the replica state read
     (it registers no tables in _tables)."""

@@ -410,6 +410,31 @@ def test_syncpoint_batch_inside_one_interval_records_no_ticks(spark,
     assert got == [(1, ts, 5100) for ts in (2000, 3000, 4000, 5000)]
 
 
+@pytest.mark.parametrize("sink_uri", ["noop://", "sqlite://"])
+def test_syncpoint_ticks_run_no_spark_job(spark, sf_dir, tmp_path, sink_uri):
+    """Syncpoint ticks are written from the driver, like the progress
+    rows: a micro-batch with sync point on runs exactly the Spark jobs
+    of the same batch with it off."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs = {}
+    for on in (False, True):
+        cfg = ChangefeedConfig(
+            changefeed_id=f"cf-sp-jobs-{on:d}", sink_uri=sink_uri,
+            enable_sync_point=on, sync_point_interval_s=3600)
+        cf = Changefeed(spark, cfg, os.path.join(sf_dir, "events.parquet"),
+                        str(tmp_path / f"w{on:d}"))
+
+        def counted(df, batch_id, inner=cf._foreach_batch, on=on):
+            j0 = dag.nextJobId()
+            inner(df, batch_id)
+            jobs[on] = dag.nextJobId() - j0
+
+        cf._foreach_batch = counted
+        assert cf.run_to_completion() == 1
+    assert spark.read.parquet(cf.bookkeeping.syncpoint_dir).count() > 0
+    assert jobs[True] == jobs[False], jobs
+
+
 def test_ddl_barrier_split(spark, sf_dir, tmp_path):
     """Two DDLs inside one batch: apply order is DML<ts1, DDL1, DML<ts2,
     DDL2, rest; single-table DDL only blocks its own table."""

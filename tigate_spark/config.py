@@ -68,17 +68,14 @@ class DispatchRule:
 class CSVConfig:
     """CSV codec config for the storage sink (``pkg/config/sink.go:
     250-268`` CSVConfig; validation mirror of ``validateAndAdjust``
-    :270-325). ``output_old_value``/``output_handle_key`` are carried
-    for config parity; the line layout here is the fixed storage-row
-    shape (op, schema, table, [commit_ts,] cols...)."""
+    :270-325). The line layout is the fixed storage-row shape (op,
+    schema, table, [commit_ts,] cols...)."""
 
     delimiter: str = ","
     quote: str = '"'
     null_string: str = "\\N"
     include_commit_ts: bool = True
     binary_encoding_method: str = "hex"  # hex | base64
-    output_old_value: bool = False
-    output_handle_key: bool = False
 
     def validate(self) -> None:
         cr, lf = "\r", "\n"
@@ -117,7 +114,6 @@ class SinkConfig:
     #: ``content-compatible=true``; common/config.go:65,262-265): full
     #: mysqlType descriptors + forces only_output_updated_columns
     content_compatible: bool = False
-    delete_only_output_handle_key_columns: bool = False
     large_message_handle: str | None = None  # None | handle-key-only | claim-check
     #: max-message-bytes twin — default matches the reference's
     #: DefaultMaxMessageBytes = 10 MiB (pkg/config/sink.go:35), so a
@@ -126,7 +122,6 @@ class SinkConfig:
     large_message_threshold: int = 10 * 1024 * 1024
     column_selectors: list[ColumnSelector] = field(default_factory=list)
     dispatch_rules: list[DispatchRule] = field(default_factory=list)
-    safe_mode: bool = False
     num_partitions: int = 16
     #: storage-sink dated-file retention (sink.go:694
     #: `file-expiration-days`): dt= partitions older than this many days
@@ -171,6 +166,48 @@ class SinkConfig:
     #: 'avro' (the embedded com.pingcap.simple.avro binary wire). Only
     #: meaningful for protocol='simple' — validated at create
     encoding_format: str = "json"
+
+    def validate(self, scheme: str) -> None:
+        """Create-time checks of the options every sink scheme shares
+        (pkg/config/sink.go AdjustAndValidate): an option a protocol
+        would silently ignore is rejected, like the reference's
+        per-protocol validation."""
+        if self.txn_atomicity not in ("", "none", "table"):
+            # AtomicityLevel.validate (pkg/config/sink.go:114-129)
+            raise ValueError(
+                f"{self.txn_atomicity} level atomicity is not "
+                f"supported by {scheme} scheme")
+        if (self.large_message_handle not in (None, "", "none")
+                and self.protocol not in
+                ("canal-json", "open-protocol", "simple")):
+            # large_message.go:61-77: '' / 'none' means disabled; an
+            # enabled handle is only defined for the open/simple/canal
+            # families — avro's Confluent framing has no `message`
+            # column for claim-check/handle-key-only to operate on
+            raise ValueError(
+                f"large message handle is set to "
+                f"{self.large_message_handle}, protocol is "
+                f"{self.protocol}, it's not supported")
+        if self.encoding_format not in ("", "json", "avro"):
+            # marshaller.go:50-56: the simple codec dispatches on
+            # EncodingFormat json|avro only
+            raise ValueError(
+                f"unknown encoding-format {self.encoding_format!r}, "
+                "only json and avro are supported")
+        if self.encoding_format == "avro" and self.protocol != "simple":
+            raise ValueError(
+                f"encoding-format avro is not supported by protocol "
+                f"{self.protocol}")
+        if self.compression not in ("", "none"):
+            # compression.Supported (large_message.go:57-59); only the
+            # open codec applies value compression (open/codec.go:85,120)
+            from tigate_spark.functions.compress import ensure_supported
+
+            ensure_supported(self.compression)
+            if self.protocol != "open-protocol":
+                raise ValueError(
+                    f"compression {self.compression} is not "
+                    f"supported by protocol {self.protocol}")
 
 
 @dataclass
@@ -236,7 +273,6 @@ class ChangefeedConfig:
     #: Bookkeeping). None keeps every tick — safe here because the
     #: ts-map is replayable parquet, not a shared downstream table
     sync_point_retention_s: int | None = None
-    force_replicate: bool = False
     #: source rate limit per micro-batch — the engine's backpressure knob
     #: (reference: MemoryQuota ``changefeed.go:21-38`` + dynstream pause/
     #: resume; Spark-native form is bounding batch size at the source)

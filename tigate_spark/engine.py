@@ -35,6 +35,7 @@ import shutil
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 from tigate_spark.config import ChangefeedConfig
 from tigate_spark.streaming.changefeed import Changefeed
@@ -143,7 +144,7 @@ class Engine:
 
         ``ddl_events`` configures first-class DDL barriers (T8): the
         feed splits micro-batches at each due barrier, records the
-        schema version, and executing sinks run the DDL live."""
+        schema version, and the sink applies the DDL downstream."""
         if not _ID_RE.match(cfg.changefeed_id):
             raise ValueError(f"invalid changefeed id: {cfg.changefeed_id!r}")
         if cfg.start_ts and self.gc_safepoint_ts \
@@ -280,10 +281,6 @@ class Engine:
         reference adds wall-clock lag thresholds because its upstream
         never drains — a file source does, so position equality IS the
         synced condition here."""
-        import os as _os
-
-        from pyspark.sql import functions as F
-
         feed = self._get(changefeed_id)
         cf = feed.changefeed
         # the frontier is what the FEED would replicate: read the source
@@ -301,7 +298,7 @@ class Engine:
         frontier = cf.transform(raw).agg(
             F.max("commit_ts")).first()[0] or 0
         checkpoint = 0
-        if _os.path.isdir(cf.bookkeeping.progress_dir):
+        if os.path.isdir(cf.bookkeeping.progress_dir):
             checkpoint = (
                 self.spark.read.parquet(cf.bookkeeping.progress_dir)
                 .agg(F.max("resolved_ts")).first()[0] or 0
@@ -326,18 +323,14 @@ class Engine:
 
     def state_dir(self, changefeed_id: str) -> str:
         """Filesystem location of the changefeed's materialized sink state
-        (the replica table for ``replica://``, the lane DBs for
-        ``sqlite://``, the output tree otherwise) — the public 'where is
-        my downstream' accessor, so callers never reach into internals for
-        the read-back path."""
-        sink = self._get(changefeed_id).changefeed.sink
-        for attr in ("state_dir", "out_dir", "db_dir"):
-            d = getattr(sink, attr, None)
-            if d:
-                return d
-        raise ValueError(
-            f"changefeed {changefeed_id}'s sink has no materialized state"
-        )
+        (the first dir its sink declares: the replica table, the lane DBs,
+        the output tree) — the public 'where is my downstream' accessor,
+        so callers never reach into internals for the read-back path."""
+        dirs = self._get(changefeed_id).changefeed.sink.dirs()
+        if not dirs:
+            raise ValueError(
+                f"changefeed {changefeed_id}'s sink has no materialized state")
+        return dirs[0]
 
     def get(self, changefeed_id: str) -> dict:
         """Changefeed detail incl. checkpoint progress — the reference's
@@ -347,8 +340,6 @@ class Engine:
         ckpt = None
         progress_dir = feed.changefeed.bookkeeping.progress_dir
         if os.path.exists(progress_dir):
-            from pyspark.sql import functions as F
-
             row = (
                 self.spark.read.parquet(progress_dir)
                 .agg(F.max("resolved_ts").alias("ts"))

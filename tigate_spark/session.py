@@ -101,7 +101,11 @@ def get_spark(app_name: str = "tigate_spark", cpus: int | None = None,
     """Build a local session sized like the bench/test environment.
     ``extra_confs`` overlays startup-only confs (e.g. the scale-probe
     tools enable ``spark.ui.enabled`` to read shuffle metrics off the
-    REST status API)."""
+    REST status API).
+
+    The Python workers get the checkout root on their path, so the
+    executor side of a Python sink or UDF imports this package wherever
+    the driver script was started from."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = (
@@ -110,6 +114,8 @@ def get_spark(app_name: str = "tigate_spark", cpus: int | None = None,
         .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.driver.memory", os.environ.get("TIGATE_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", os.path.dirname(
+            os.path.dirname(os.path.abspath(__file__))))
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

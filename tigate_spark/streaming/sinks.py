@@ -1,5 +1,15 @@
 """foreachBatch sinks K1–K6 (SURVEY §2.7) for the streaming changefeed.
 
+Every sink keeps one contract, :class:`Sink` (the reference's shared
+``Sink`` interface, ``downstreamadapter/sink/sink.go:41-56``): it is
+built from the feed's config and its own sink-URI params, declares the
+directories it owns and whether the changefeed must keep before/after
+images, ``prepare``s each batch (routing and encoding run there, below
+the changefeed's one persist), writes it in ``process_batch``, and runs
+a due DDL or mirrors syncpoint ticks downstream where it owns a
+database. The changefeed holds the scheme → class table and calls every
+sink the same way.
+
 Reference parity:
 - K1 MySQL/TiDB sink: txn-batched ordered apply, safe-mode REPLACE +
   delete-by-pk idempotent replay (``pkg/sink/mysql/mysql_writer.go:727-755``,
@@ -20,17 +30,20 @@ Reference parity:
   parquet changelog (Kafka stand-in; the container has no broker). Same
   at-least-once contract as the reference MQ sink.
 - K3 blackhole (``downstreamadapter/sink/blackhole.go``): :class:`NoopSink`.
-- K4 ddl-ts bookkeeping (``mysql_writer.go:280-330``) and
-  T5/T11 progress: the changefeed appends per-batch checkpoint rows
+- K7 cloud storage (``csv_storage_basic``): :class:`StorageSink`.
+- T5/T11 progress: the changefeed appends per-batch checkpoint rows
   (batch_id, table_id, resolved_ts, n_events) to a bookkeeping table
   through :class:`Bookkeeping`, once per micro-batch after the sink
   wrote it, from the batch's one driver-side per-table summary — the
   sinks only write, as the reference's sinks do while its dispatcher
-  tracks table progress (``table_progress.go:24-44``).
+  tracks table progress (``table_progress.go:24-44``). The K4 ddl-ts
+  table (``mysql_writer.go:280-330``) belongs to the SQLite sink's
+  ``apply_ddl``.
 - K5 syncpoint ts-map (``mysql_writer.go:154-200,525-545``): aligned ticks
   appended per batch when sync point is enabled (T7,
   ``downstreamadapter/syncpoint/syncpoint.go:15-22``), derived on the
-  driver from the batch's commit range.
+  driver from the batch's commit range and written from the driver with
+  no Spark job, like the progress rows.
 
 Deletes are kept as tombstones in the replica state so a late/replayed
 older change cannot resurrect a deleted key (the stale-drop guarantee T9,
@@ -66,6 +79,65 @@ _DATA = "data"
 _SCHEMA_KEY = b"tigate.state_schema"
 #: one manifest file per committed version; compactions write checkpoints
 _MANIFEST_NAME = re.compile(r"^(\d+)(\.checkpoint)?\.parquet$")
+
+#: payload columns the canonical change rows carry into sinks
+PAYLOAD_COLS = ["event_type", "value_cents", "user_id"]
+
+
+def uri_int(q: dict, name: str, default=None, cap: int | None = None):
+    """A positive integer sink-URI param, ``default`` when absent and at
+    most ``cap``; zero or less fails the create."""
+    raw = q.get(name, [None])[0]
+    if raw is None:
+        return default
+    if int(raw) <= 0:
+        raise ValueError(f"invalid {name}={raw!r} in sink-uri")
+    return int(raw) if cap is None else min(int(raw), cap)
+
+
+def uri_flag(q: dict, name: str, default: bool = False) -> bool:
+    """A boolean sink-URI param (``true``/``1``), ``default`` when absent."""
+    return q[name][0].lower() in ("true", "1") if name in q else default
+
+
+class Sink:
+    """The contract the changefeed calls every sink by. The defaults suit
+    most sinks: no URI params of their own, no owned dirs, the batch
+    unchanged, nothing to do for a DDL or a syncpoint tick."""
+
+    #: whether the changefeed's transform must keep before/after images
+    with_images = False
+
+    @classmethod
+    def read_params(cls, cfg, q: dict) -> None:
+        """Overlay this sink's own sink-URI params ``q`` onto ``cfg``."""
+
+    @classmethod
+    def from_config(cls, cfg, scheme: str, q: dict, work_dir: str) -> Sink:
+        """Build the sink of feed ``cfg`` under ``work_dir``; raise
+        ``ValueError`` for an option this sink cannot honour."""
+        raise NotImplementedError
+
+    def dirs(self) -> list[str]:
+        """The directories this sink owns, its downstream state first."""
+        return []
+
+    def prepare(self, batch: DataFrame) -> DataFrame:
+        """The rows ``process_batch`` writes, as a lazy plan over the
+        transformed batch; the changefeed persists it once per batch."""
+        return batch
+
+    def process_batch(self, batch_df: DataFrame, batch_id: int,
+                      fence: str | None = None) -> None:
+        """Write one prepared micro-batch; at a DDL barrier each sub-batch
+        brings its own ``fence`` for a sink that fences replays."""
+        raise NotImplementedError
+
+    def apply_ddl(self, ddl) -> None:
+        """Run a due DDL downstream, between the barrier's sub-batches."""
+
+    def mirror_syncpoint(self, ticks: list[int], secondary_ts: int) -> None:
+        """Copy a batch's syncpoint ticks into a downstream ts-map."""
 
 
 def _manifest_file(state_dir: str, version: int,
@@ -299,15 +371,18 @@ class Bookkeeping:
         """Append the batch's per-table progress rows and, with sync point
         on, its syncpoint ticks; return the ticks. ``summary`` is the
         batch's driver-side ``(table_id, min commit_ts, max commit_ts,
-        count)`` rows, which the changefeed collects once per batch; the
-        progress rows are written from it with no Spark job."""
+        count)`` rows, which the changefeed collects once per batch; both
+        tables are written from it on the driver (``spark`` runs no job)."""
+        def part(d: str) -> str:
+            return os.path.join(
+                d, f"part-{batch_id:05d}-{uuid.uuid4().hex}.parquet")
+
         _write_parquet_atomic(pa.table({
             "table_id": pa.array([r[0] for r in summary], pa.int64()),
             "resolved_ts": pa.array([r[2] for r in summary], pa.int64()),
             "n_events": pa.array([r[3] for r in summary], pa.int64()),
             "batch_id": pa.array([batch_id] * len(summary), pa.int32()),
-        }), os.path.join(self.progress_dir,
-                         f"part-{batch_id:05d}-{uuid.uuid4().hex}.parquet"))
+        }), part(self.progress_dir))
         if not self.sync_point_us:
             return []
         iv = self.sync_point_us
@@ -322,22 +397,33 @@ class Bookkeeping:
         # commit_ts.
         ticks = [] if hi is None else list(
             range((lo // iv + 1) * iv, (hi // iv) * iv + 1, iv))
-        rows = [(t, hi, batch_id) for t in ticks]
-        schema = "primary_ts bigint, secondary_ts bigint, batch_id int"
+
+        def rows(ts: list[int]) -> pa.Table:
+            return pa.table({
+                "primary_ts": pa.array(ts, pa.int64()),
+                "secondary_ts": pa.array([hi] * len(ts), pa.int64()),
+                "batch_id": pa.array([batch_id] * len(ts), pa.int32()),
+            })
+
         if self.sync_point_retention_us:
+            # one file per touched sp_epoch=<n> partition dir
             bucket = max(self.sync_point_retention_us // 4, 1)
-            (spark.createDataFrame([r + (r[0] // bucket,) for r in rows],
-                                   schema + ", sp_epoch bigint")
-             .write.partitionBy("sp_epoch")
-             .mode("append").parquet(self.syncpoint_dir))
+            by_bucket: dict[int, list[int]] = {}
+            for t in ticks:
+                by_bucket.setdefault(t // bucket, []).append(t)
+            os.makedirs(self.syncpoint_dir, exist_ok=True)
+            for b, ts in by_bucket.items():
+                _write_parquet_atomic(rows(ts), part(os.path.join(
+                    self.syncpoint_dir, f"sp_epoch={b}")))
             self._prune_syncpoint()
         else:
-            (spark.createDataFrame(rows, schema)
-             .write.mode("append").parquet(self.syncpoint_dir))
+            # a batch without ticks still leaves a schema-only file, so
+            # the ts-map reads as empty rather than missing
+            _write_parquet_atomic(rows(ticks), part(self.syncpoint_dir))
         return ticks
 
 
-class ReplicaSink:
+class ReplicaSink(Sink):
     """K1: merge each micro-batch into a materialized replica (parquet).
 
     State schema: (table_id, pk, op, commit_ts, start_ts, seq,
@@ -394,6 +480,22 @@ class ReplicaSink:
         self.compact_every = max(2, compact_every)
         self._snapshot: _Manifest | None = None
 
+    @classmethod
+    def from_config(cls, cfg, scheme, q, work_dir) -> ReplicaSink:
+        return cls(os.path.join(work_dir, "replica", cfg.changefeed_id),
+                   PAYLOAD_COLS + [n for n, _, _ in (cfg.wide_payload or ())])
+
+    def dirs(self) -> list[str]:
+        return [self.state_dir]
+
+    def prepare(self, batch: DataFrame) -> DataFrame:
+        # the merge keys on (table_id, pk): pre-clustering the cached
+        # batch on the same key gives the cache full-width parallelism (a
+        # 1-file micro-batch otherwise materializes on one task) and lets
+        # the merge agg reuse the partitioning instead of re-exchanging
+        # the incoming side
+        return batch.repartition(F.col("table_id"), F.col("pk"))
+
     def _manifest(self) -> _Manifest:
         """The driver snapshot, loaded on first use and reloaded when
         another writer has committed past it."""
@@ -401,8 +503,10 @@ class ReplicaSink:
             self._snapshot = _Manifest.load(self.state_dir)
         return self._snapshot
 
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """Merge one micro-batch into the versioned replica."""
+    def process_batch(self, batch_df: DataFrame, batch_id: int,
+                      fence: str | None = None) -> None:
+        """Merge one micro-batch into the versioned replica (idempotent
+        under replay, so no fence)."""
         spark = batch_df.sparkSession
         snap = self._manifest()
         cols = ["table_id", "pk", "op", "commit_ts", "start_ts", "seq",
@@ -459,10 +563,6 @@ class ReplicaSink:
             self._snapshot = _checkpoint_state(spark, self.state_dir, state,
                                                snap)
 
-    def live(self, spark: SparkSession) -> DataFrame:
-        """The replica's live view (tombstones filtered)."""
-        return read_replica(spark, self.state_dir)
-
 
 def _checkpoint_state(spark: SparkSession, state_dir: str,
                       new_state: DataFrame, snap: _Manifest) -> _Manifest:
@@ -506,31 +606,342 @@ def read_replica(spark: SparkSession, state_dir: str) -> DataFrame:
     return state.filter(F.col("op") != "D").drop("op")
 
 
-class ChangelogSink:
+def encode_canal(batch: DataFrame, out_col: str, content_compatible: bool,
+                 only_updated_old: bool) -> DataFrame:
+    """The canal-json wire of the changelog and the storage sink: the
+    adapter-compatibility form (canal/encoder.go:260,321) or the default
+    one, whose ``old`` image may keep only the changed columns."""
+    from tigate_spark.functions.encoders import (
+        encode_canal_json,
+        encode_canal_json_typed,
+    )
+
+    if content_compatible:
+        return encode_canal_json_typed(batch, out_col=out_col,
+                                       content_compatible=True)
+    return encode_canal_json(batch, out_col=out_col,
+                             only_updated_old=only_updated_old)
+
+
+#: raw kafka client params of the sink URI (options.go:104-128: client id,
+#: dial/read/write timeouts, SASL + TLS families, kafka-version)
+_CLIENT_PARAMS = (
+    "kafka-client-id", "kafka-version", "dial-timeout",
+    "read-timeout", "write-timeout", "sasl-user", "sasl-password",
+    "sasl-mechanism", "sasl-gssapi-auth-type",
+    "sasl-gssapi-keytab-path", "sasl-gssapi-kerberos-config-path",
+    "sasl-gssapi-service-name", "sasl-gssapi-user",
+    "sasl-gssapi-password", "sasl-gssapi-realm",
+    "sasl-gssapi-disable-pafxfast", "enable-tls", "ca", "cert",
+    "key", "insecure-skip-verify")
+
+
+class ChangelogSink(Sink):
     """K2: encoded + routed changelog appended to parquet (Kafka stand-in).
 
-    Expects the batch already carries ``topic``/``partition``/``message``
-    (or key/value) columns from the routing+encoding stages; partitions the
-    files by topic like Kafka partitions by topic.
+    :meth:`prepare` adds the ``topic``/``partition`` router columns and
+    the protocol encoding (``message``, or key/value) that ``sink_cfg``
+    names; :meth:`process_batch` partitions the files by topic like
+    Kafka partitions by topic.
 
-    ``producer`` is the Kafka transport seam (``streaming/kafka.py`` —
-    the DBAPI-seam pattern applied to the MQ side): None keeps the
-    default parquet write below; an injected producer instead routes
-    every message through ``produce_partition`` on the executors, with
-    admin topic-create/partition-count queries driver-side and
-    retriable produce errors resent (broker-side sequence dedup keeps
-    the resend duplicate-free — the idempotent-producer contract,
-    sarama_factory.go/admin.go)."""
+    ``producer`` is the Kafka transport seam (``streaming/kafka.py``),
+    picked by the URI's ``transport``: none keeps the parquet write
+    below; ``wire`` is the fake broker on ``broker-dir`` (the feed's own
+    dir when the URI names none), ``confluent`` a real client bound to
+    the URI authority. A producer gets every message through
+    ``produce_partition`` on the executors, with admin topic-create /
+    partition-count queries driver-side and retriable produce errors
+    resent (broker-side sequence dedup keeps the resend duplicate-free —
+    the idempotent-producer contract, sarama_factory.go/admin.go)."""
 
-    def __init__(self, out_dir: str, producer=None,
-                 num_partitions: int = 16):
+    with_images = True
+
+    def __init__(self, out_dir: str, sink_cfg, producer=None,
+                 default_topic: str | None = None,
+                 broker_dir: str | None = None):
         self.out_dir = out_dir
         #: K6: resolved-ts broadcast — one checkpoint message per topic per
         #: batch so consumers can advance without waiting for data
         #: (kafka_ddl_worker.go checkpoint loop; event_broker.go:579-606)
         self.checkpoint_dir = out_dir.rstrip("/") + "_checkpoint"
         self.producer = producer
-        self.num_partitions = num_partitions
+        self.cfg = sink_cfg
+        #: the sink-URI path: the topic of rows no dispatch rule claims
+        #: (eventrouter/event_router.go:36,72,89); None keeps the
+        #: {schema}_{table} convention
+        self.default_topic = default_topic
+        #: the fake broker's dir when the feed owns it
+        self.broker_dir = broker_dir
+
+    @classmethod
+    def read_params(cls, cfg, q: dict) -> None:
+        import warnings
+        from urllib.parse import urlparse
+
+        s = cfg.sink
+        if "encoding-format" in q:
+            # simple-protocol marshaller dispatch (marshaller.go:50-56)
+            s.encoding_format = q["encoding-format"][0]
+        # options.go:200-207 parity
+        s.num_partitions = uri_int(q, "partition-num", s.num_partitions)
+        # the frame limit claim-check/handle-key-only triggers on
+        # (large_message.go: a message is "large" past max-message-bytes)
+        s.large_message_threshold = uri_int(q, "max-message-bytes",
+                                            s.large_message_threshold)
+        if "large-message-handle" in q:
+            s.large_message_handle = q["large-message-handle"][0]
+        if "compression" in q and urlparse(cfg.sink_uri).scheme == "kafka":
+            # ENGINE DEVIATION, kept for catalog/back-compat: plain
+            # `compression=` selects the CODEC-level value compression
+            # here, whereas the reference's kafka URI `compression`
+            # param is PRODUCER transport compression (options.go:106) —
+            # warn so the trap is visible on a reference-written URI
+            warnings.warn(
+                "'compression=' on a kafka sink URI selects CODEC-level "
+                "(per-value) compression in this engine; the reference's "
+                "kafka 'compression' param is producer TRANSPORT "
+                "compression. Use 'kafka-compression=' for transport or "
+                "'large-message-handle-compression=' for codec-level.",
+                stacklevel=3)
+        if "kafka-compression" in q:
+            # producer TRANSPORT compression (the reference kafka URI's
+            # own `compression` param, renamed here to avoid colliding
+            # with the codec-level alias). sarama.go:79-94 semantics:
+            # known codecs apply; an unknown value WARNS and falls back
+            # to none instead of failing the changefeed
+            cc = q["kafka-compression"][0].strip().lower()
+            if cc not in ("none", "gzip", "snappy", "lz4", "zstd"):
+                warnings.warn(
+                    f"Unsupported compression algorithm {cc!r}; kafka "
+                    f"producer compression falls back to none "
+                    f"(sarama.go:91-93)", stacklevel=3)
+                cc = "none"
+            s.kafka_compression = cc
+        # options.go:108 (default true): false = never create, only
+        # query; a missing topic then errors at produce/admin time
+        s.auto_create_topic = uri_flag(q, "auto-create-topic",
+                                       s.auto_create_topic)
+        s.kafka_client_params.update(
+            {p: q[p][0] for p in _CLIENT_PARAMS if p in q})
+        if s.kafka_client_params:
+            # validate at create (malformed durations / unknown mechanisms
+            # fail the changefeed now, not at first produce)
+            from tigate_spark.streaming.kafka_clients import (
+                client_config_from_params,
+            )
+
+            client_config_from_params(s.kafka_client_params)
+        if "replication-factor" in q:
+            # options.go:103 (default 1, options.go:169) — applied at topic
+            # create by the admin client
+            rf = int(q["replication-factor"][0])
+            if rf < 1:
+                raise ValueError(
+                    f"invalid replication-factor {rf}, must be >= 1")
+            s.replication_factor = rf
+        if "required-acks" in q:
+            # options.go:88-98 requireAcksFromString: only -1/0/1 exist;
+            # anything else is ErrKafkaInvalidRequiredAcks (create-time)
+            raw = q["required-acks"][0]
+            if raw not in ("-1", "0", "1"):
+                raise ValueError(
+                    f"invalid required acks {raw}"
+                    f" (expected -1 WaitForAll, 1 WaitForLocal,"
+                    f" 0 NoResponse)")
+            s.required_acks = int(raw)
+
+    @classmethod
+    def from_config(cls, cfg, scheme, q, work_dir) -> ChangelogSink:
+        from urllib.parse import urlparse
+
+        s = cfg.sink
+        if s.txn_atomicity == "table":
+            # MQ sinks only support noneTxnAtomicity (sink.go:118-123):
+            # messages fan out across topic partitions, so a downstream
+            # txn boundary doesn't exist to preserve
+            raise ValueError(
+                f"table level atomicity is not supported by "
+                f"{scheme} scheme")
+        transport = (q.get("transport", [None])[0] or "").lower()
+        producer = broker_dir = None
+        if transport == "wire":
+            from tigate_spark.streaming.kafka import FakeWireProducer
+
+            if s.kafka_compression not in ("", "none"):
+                # the fake broker EXECUTES the codec locally (a real
+                # broker-side decompress twin), so it needs the seam
+                # codec present — create-time, like every misconfig
+                from tigate_spark.functions.compress import ensure_supported
+
+                ensure_supported(s.kafka_compression)
+            if "broker-dir" not in q:
+                broker_dir = os.path.join(work_dir, "broker",
+                                          cfg.changefeed_id)
+            producer = FakeWireProducer(
+                broker_dir or q["broker-dir"][0],
+                compression=s.kafka_compression,
+                auto_create=s.auto_create_topic)
+        elif transport == "confluent":
+            try:
+                import confluent_kafka  # type: ignore # noqa: F401
+            except ImportError:
+                # create-time validation, like every other sink
+                # misconfiguration — not a mid-stream surprise
+                raise ValueError(
+                    "transport=confluent requires the "
+                    "confluent-kafka client library; install it or "
+                    "use transport=wire for the fake broker")
+            from tigate_spark.streaming.kafka_clients import (
+                ConfluentKafkaProducer,
+                client_config_from_params,
+            )
+
+            conf = {}
+            if s.kafka_compression not in ("", "none"):
+                # producer transport compression rides the client config
+                # (librdkafka compression.type = the sarama
+                # Producer.Compression twin); the real client executes
+                # the codec itself, no local seam needed
+                conf["compression.type"] = s.kafka_compression
+            if s.required_acks != -1:
+                # sarama RequiredAcks twin; librdkafka spells them
+                # "0"/"1"/"all", and idempotence REQUIRES acks=all, so a
+                # weaker setting turns it off (the app-level failed-only
+                # retry in produce_partition remains)
+                conf["acks"] = str(s.required_acks)
+                conf["enable.idempotence"] = False
+            if s.kafka_client_params:
+                conf.update(client_config_from_params(s.kafka_client_params))
+            producer = ConfluentKafkaProducer(
+                urlparse(cfg.sink_uri).netloc or "localhost:9092",
+                config=conf or None,
+                replication_factor=s.replication_factor,
+                auto_create=s.auto_create_topic)
+        elif transport:
+            raise ValueError(
+                f"unsupported kafka transport {transport!r} "
+                f"(expected wire or confluent)")
+        return cls(os.path.join(work_dir, "changelog", cfg.changefeed_id),
+                   sink_cfg=s, producer=producer,
+                   default_topic=urlparse(cfg.sink_uri).path.strip("/")
+                   or None,
+                   broker_dir=broker_dir)
+
+    def dirs(self) -> list[str]:
+        return [self.out_dir, self.checkpoint_dir,
+                *([self.broker_dir] if self.broker_dir else [])]
+
+    def prepare(self, batch: DataFrame) -> DataFrame:
+        """Route, reduce and encode: ``topic``/``partition`` from the
+        dispatch rules, handle-key-only (P3), the protocol encode, then
+        claim-check (E5) or the ErrMessageTooLarge guard."""
+        from tigate_spark.functions.encoders import encode_open_protocol
+        from tigate_spark.operators.routing import (
+            partition_by_index_value,
+            route,
+            topic_expr,
+        )
+
+        s = self.cfg
+        if s.dispatch_rules:
+            batch = route(batch, s.dispatch_rules, s.num_partitions,
+                          default_topic=self.default_topic)
+        else:
+            batch = batch.withColumn(
+                "topic", topic_expr(self.default_topic or "{schema}_{table}")
+            ).withColumn(
+                "partition",
+                partition_by_index_value(s.num_partitions).cast("bigint"),
+            )
+        if s.large_message_handle == "handle-key-only":
+            # P3: oversized payload images reduced to the handle key
+            # before encoding (open/codec.go:43-48)
+            from tigate_spark.operators.projections import handle_key_only
+
+            batch = handle_key_only(
+                batch, s.large_message_threshold, payload_col="after")
+        # Shuffle BEFORE the encode: a 1-file micro-batch arrives on one
+        # source-read task, and everything below the exchange — including
+        # the per-row protocol encode and the changefeed's cache
+        # materialization — would run there single-threaded. Clustering
+        # by (topic, partition) also bounds output files per batch to the
+        # lane count.
+        batch = batch.repartition(F.col("topic"), F.col("partition"))
+        compressed = s.compression not in ("", "none")
+        simple_avro = (s.protocol == "simple"
+                       and s.encoding_format == "avro")
+        if s.protocol == "open-protocol":
+            batch = encode_open_protocol(batch)
+            if compressed:
+                # VALUE compressed before framing/size checks
+                # (open/codec.go:85: the wire length counts compressed
+                # bytes); rides as hex like the avro Confluent framing —
+                # key stays plain JSON
+                from tigate_spark.functions.compress import compress_col
+
+                batch = batch.withColumn(
+                    "value",
+                    F.hex(compress_col(F.encode(F.col("value"), "UTF-8"),
+                                       s.compression)))
+        elif s.protocol == "avro":
+            # Confluent wire framing (magic + schema id + Avro binary)
+            # as hex key/value — byte-exact vs the batch encoder entry
+            from tigate_spark.functions.avro_wire import (
+                encode_avro_confluent,
+            )
+
+            batch = (encode_avro_confluent(batch)
+                     .withColumn("key", F.col("key_hex"))
+                     .withColumn("value", F.col("value_hex")))
+        elif simple_avro:
+            # simple protocol, Avro encoding format (marshaller.go:50-56
+            # dispatch): the com.pingcap.simple.avro binary wire rides as
+            # a hex VALUE (simple messages are value-only — no key),
+            # byte-exact vs the batch encoder entry; pure column
+            # expressions, zero Python
+            from tigate_spark.functions.simple_avro import encode_simple_avro
+
+            batch = encode_simple_avro(batch, out_col="value")
+        elif s.protocol == "simple":  # JSON encoding format
+            from tigate_spark.functions.encoders import encode_simple_protocol
+
+            batch = encode_simple_protocol(batch)
+        else:
+            batch = encode_canal(batch, "message", s.content_compatible,
+                                 s.only_output_updated_columns)
+        # the wire size of the message column: the avro wires and a
+        # compressed open-protocol value ride as hex, 2 chars per byte
+        # (open/codec.go:85 sizes the COMPRESSED wire)
+        msg = "message" if "message" in batch.columns else "value"
+        is_hex = msg == "value" and (s.protocol == "avro" or simple_avro
+                                     or compressed)
+        if s.large_message_handle == "claim-check":
+            # E5: oversized encoded messages become object-store pointers
+            from tigate_spark.functions.encoders import claim_check
+
+            return claim_check(
+                batch, s.large_message_threshold, msg_col=msg,
+                value_is_hex=is_hex).withColumn(msg, F.col("wire_value"))
+        # ErrMessageTooLarge (open/encoder.go:43-52, canal equivalent): a
+        # single encoded message over max-message-bytes with no
+        # claim-check offload cannot be produced — fail the feed
+        # (deterministic, so the engine classifies it unretryable).
+        # handle-key-only already reduced the payload; if the reduced
+        # form STILL exceeds, the reference errors too
+        # (encoder.go:70-76). Zero extra jobs: the check is a per-row
+        # conditional inside the existing encode projection.
+        limit = s.large_message_threshold
+        size = F.octet_length(F.col(msg))
+        if is_hex:
+            size = size / 2
+        return batch.withColumn(msg, F.when(
+            size > limit,
+            F.raise_error(F.format_string(
+                "ErrMessageTooLarge: single message of %s bytes is larger "
+                f"than max-message-bytes={limit}, unsupported without "
+                "large-message-handle",
+                size.cast("bigint").cast("string"),
+            ))).otherwise(F.col(msg)))
 
     def _produce_batch(self, df: DataFrame, batch_id: int) -> None:
         from tigate_spark.streaming.kafka import produce_with_retry
@@ -540,7 +951,7 @@ class ChangelogSink:
         # ClusterAdminClient): create-or-get each topic and route by the
         # ACTUAL partition count (admin.go GetTopicPartitionNum)
         topics = [r["topic"] for r in df.select("topic").distinct().collect()]
-        counts = {t: producer.ensure_topic(t, self.num_partitions)
+        counts = {t: producer.ensure_topic(t, self.cfg.num_partitions)
                   for t in topics}
         msg_col = "message" if "message" in df.columns else "value"
         key_col = "key" if "key" in df.columns else None
@@ -562,15 +973,16 @@ class ChangelogSink:
           .foreachPartition(run_partition)
         producer.flush()
 
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        # No repartition here: the changefeed places the (topic, partition)
-        # shuffle BELOW the protocol encode (changefeed._prepare_for_sink),
-        # so the expensive per-row encode runs on all cores instead of on
-        # the micro-batch's few source-read tasks — with the shuffle here,
-        # a 1-file micro-batch encoded single-threaded. File count per
-        # batch stays bounded by the shuffle's (topic, partition) grouping.
-        # The checkpoint agg only touches (topic, commit_ts) — Catalyst
-        # prunes the encode out of that scan.
+    def process_batch(self, batch_df: DataFrame, batch_id: int,
+                      fence: str | None = None) -> None:
+        # No repartition here: prepare places the (topic, partition)
+        # shuffle BELOW the protocol encode, so the expensive per-row
+        # encode runs on all cores instead of on the micro-batch's few
+        # source-read tasks. File count per batch stays bounded by the
+        # shuffle's (topic, partition) grouping. The checkpoint agg only
+        # touches (topic, commit_ts) — Catalyst prunes the encode out of
+        # that scan. A replayed batch appends again: the MQ sink's
+        # at-least-once contract, so the fence goes unused.
         out_cols = [c for c in ("topic", "partition", "key", "value",
                                 "message", "seq", "commit_ts",
                                 "table_id", "pk")
@@ -610,7 +1022,7 @@ _DATE_SEPARATOR_FMT = {
 }
 
 
-class StorageSink:
+class StorageSink(Sink):
     """K7: cloud-storage sink — dated-path file layout (csv / canal-json).
 
     The reference ships this sink family through its storage integration
@@ -674,39 +1086,52 @@ class StorageSink:
         #: 262-265) — the storage tree honors them like the MQ path
         self.only_updated_old = only_updated_old
         self.content_compatible = content_compatible
+        self.with_images = protocol == "canal-json"
         if csv_config is not None:
             if protocol != "csv":
                 raise ValueError("csv config requires protocol=csv")
             csv_config.validate()
 
+    @classmethod
+    def read_params(cls, cfg, q: dict) -> None:
+        # an unknown date-separator fails in __init__, at create
+        if "date-separator" in q:
+            cfg.sink.date_separator = q["date-separator"][0]
+        cfg.sink.file_expiration_days = uri_int(
+            q, "file-expiration-days", cfg.sink.file_expiration_days)
+
+    @classmethod
+    def from_config(cls, cfg, scheme, q, work_dir) -> StorageSink:
+        # an unsupported protocol raises in __init__: a silent csv
+        # fallback would mask the misconfiguration
+        s = cfg.sink
+        return cls(os.path.join(work_dir, "storage", cfg.changefeed_id),
+                   protocol=s.protocol, date_separator=s.date_separator,
+                   timezone=cfg.timezone,
+                   file_expiration_days=s.file_expiration_days,
+                   csv_config=s.csv,
+                   only_updated_old=s.only_output_updated_columns,
+                   content_compatible=s.content_compatible)
+
+    def dirs(self) -> list[str]:
+        return [self.out_dir]
+
     def _encode(self, batch_df: DataFrame) -> DataFrame:
         from tigate_spark.functions.encoders import (
-            encode_canal_json,
+            encode_csv_configured,
             encode_csv_rows,
         )
 
-        if self.protocol == "csv":
-            if self.csv_config is not None:
-                from tigate_spark.functions.encoders import (
-                    encode_csv_configured,
-                )
+        if self.protocol == "canal-json":
+            return encode_canal(batch_df, "line", self.content_compatible,
+                                self.only_updated_old)
+        if self.csv_config is not None:
+            return encode_csv_configured(
+                batch_df, self.csv_config, out_col="line")
+        return encode_csv_rows(batch_df, out_col="line")
 
-                return encode_csv_configured(
-                    batch_df, self.csv_config, out_col="line")
-            return encode_csv_rows(batch_df, out_col="line")
-        if self.content_compatible:
-            # adapter-compatibility wire on the storage tree
-            # (canal_json_storage_* scenarios compose with the flag)
-            from tigate_spark.functions.encoders import (
-                encode_canal_json_typed,
-            )
-
-            return encode_canal_json_typed(
-                batch_df, out_col="line", content_compatible=True)
-        return encode_canal_json(batch_df, out_col="line",
-                                 only_updated_old=self.only_updated_old)
-
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    def process_batch(self, batch_df: DataFrame, batch_id: int,
+                      fence: str | None = None) -> None:
         parts = ["schema_name", "table_name"]
         pre = batch_df
         fmt = _DATE_SEPARATOR_FMT[self.date_separator]
@@ -741,8 +1166,6 @@ class StorageSink:
             meta_path = os.path.join(self.out_dir, "metadata")
             ckpt = int(row["ts"])
             if os.path.exists(meta_path):
-                import json
-
                 with open(meta_path) as f:
                     try:
                         ckpt = max(ckpt, int(json.load(f)["checkpoint-ts"]))
@@ -801,18 +1224,25 @@ def read_storage(spark: SparkSession, out_dir: str) -> DataFrame:
     )
 
 
-class NoopSink:
+class NoopSink(Sink):
     """K3: blackhole (throughput measurement)."""
 
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    @classmethod
+    def from_config(cls, cfg, scheme, q, work_dir) -> NoopSink:
+        return cls()
+
+    def process_batch(self, batch_df: DataFrame, batch_id: int,
+                      fence: str | None = None) -> None:
         batch_df.write.format("noop").mode("overwrite").save()
 
 
 __all__ = [
+    "PAYLOAD_COLS",
     "Bookkeeping",
     "ChangelogSink",
     "NoopSink",
     "ReplicaSink",
+    "Sink",
     "StorageSink",
     "read_replica",
     "read_state",

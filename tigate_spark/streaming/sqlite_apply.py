@@ -40,7 +40,9 @@ socket is the reference's MySQL sink shape
   skips. A sequential full replay (crash before the marker committed)
   still converges by safe-mode idempotence; ``tests/test_sqlite_apply.py``
   drives both paths.
-- **DDL execution** (r9, ``mysql_writer.go:600-668`` execDDL): DDL runs
+- **DDL execution** (r9, ``mysql_writer.go:600-668`` execDDL): the
+  changefeed hands each due DDL barrier to :meth:`SqliteApplySink.
+  apply_ddl`, which also keeps the ``ddl_ts_v1`` row; the DDL runs
   in its OWN transaction on the owning lane, with the reference's
   ignorable-error class (``pkg/apperror/util.go:36-55`` — duplicate
   column / existing table / existing index = an already-applied replay,
@@ -71,6 +73,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tigate_spark.streaming import dbapi
+from tigate_spark.streaming.sinks import Sink, uri_flag, uri_int
 
 #: default worker-lane count (mirrors operators.txn.FLUSH_LANES spirit)
 DEFAULT_LANES = 4
@@ -1008,9 +1011,11 @@ def exec_ddl_on_lane(db_path: str, query: str, schema: str, table: str,
         return outcome
 
 
-class SqliteApplySink:
+class SqliteApplySink(Sink):
     """foreachBatch sink executing the rendered statement stream on
-    per-lane SQLite files via foreachPartition."""
+    per-lane SQLite files via foreachPartition — the one sink owning a
+    downstream database, so the one that runs DDL and mirrors syncpoint
+    ticks there."""
 
     def __init__(self, db_dir: str, n_lanes: int = DEFAULT_LANES,
                  txn_rows: int = 256, max_packet: int = 64 * 1024,
@@ -1079,6 +1084,36 @@ class SqliteApplySink:
         else:
             with open(marker, "w") as f:
                 f.write(str(n_lanes))
+
+    @classmethod
+    def from_config(cls, cfg, scheme, q, work_dir) -> SqliteApplySink:
+        """sqlite:// on per-lane SQLite files; mysql://tidb:// through a
+        registered MySQL DBAPI driver. Tuning rides on the sink URI like
+        the reference's MySQL sink (pkg/sink/mysql/config.go:37-55, the
+        same caps); lanes default to 4, not 16 — a single-host SQLite
+        file set saturates earlier than a MySQL server, and dispatch is
+        table-granular (mysql_sink.go:147), so parallelism is
+        min(worker-count, distinct tables)."""
+        return cls(
+            os.path.join(work_dir, "sqlite", cfg.changefeed_id),
+            n_lanes=uri_int(q, "worker-count", 4, 1024),
+            txn_rows=uri_int(q, "max-txn-row", 256, 2048),
+            max_packet=uri_int(q, "max-packet", 64 * 1024, 1 << 30),
+            write_source=cfg.source_id,
+            driver=dbapi.get_driver(scheme, cfg.sink_uri),
+            split_txn=cfg.sink.txn_atomicity != "table",
+            changefeed=cfg.changefeed_id,
+            # batch-dml-enable (mysql/config.go:70, default true)
+            batch_dml=uri_flag(q, "batch-dml-enable", True),
+            # batch-dml-multirow: the multi-row VALUES form (the MySQL
+            # driver's rewriteBatchedStatements shape) instead of the
+            # executemany coalescing twin
+            multirow_dml=uri_flag(q, "batch-dml-multirow"),
+            wide_cols=tuple((n, decl)
+                            for n, _, decl in (cfg.wide_payload or ())))
+
+    def dirs(self) -> list[str]:
+        return [self.db_dir]
 
     def process_batch(self, changes: DataFrame, batch_id: int,
                       fence: str | None = None,
@@ -1233,6 +1268,24 @@ class SqliteApplySink:
             con.commit()
         finally:
             con.close()
+
+    def apply_ddl(self, ddl) -> None:
+        """Execute a due DDL on its owning lane and keep its ddl_ts_v1
+        row (mysql_writer.go:280-340): the table the translator saw
+        dropped loses its row, any other DDL upserts it. An all-scope DDL
+        (no table named) only versions the schema."""
+        if not (ddl.schema_name and ddl.table_name
+                and ddl.table_id is not None):
+            return
+        self.exec_ddl(ddl.query, ddl.schema_name, ddl.table_name,
+                      ddl.table_id)
+        action = translate_ddl_for_sqlite(
+            ddl.query, ddl.schema_name, ddl.table_name)[0]
+        if action == "drop-table":
+            self.record_ddl_ts(ddl.commit_ts, [],
+                               drop_table_ids=[ddl.table_id])
+        else:
+            self.record_ddl_ts(ddl.commit_ts, [ddl.table_id])
 
     def record_syncpoint(self, primary_ts: int, secondary_ts: int) -> None:
         """SendSyncPointEvent twin: insert-ignore one ts-map row
