@@ -399,10 +399,10 @@ def test_syncpoint_batch_inside_one_interval_records_no_ticks(spark,
     # per-table (table_id, min commit_ts, max commit_ts, count) summaries
     # of the changes (1, 1100), (2, 1500), (1, 1900) ...
     inside = [(1, 1100, 1900, 2), (2, 1500, 1500, 1)]
-    assert bk.record(spark, inside, 0) == []
+    assert bk.record(inside, 0) == []
     # ... and of (1, 1950), (2, 3300), (1, 5100)
     crossing = [(1, 1950, 5100, 2), (2, 3300, 3300, 1)]
-    assert bk.record(spark, crossing, 1) == [
+    assert bk.record(crossing, 1) == [
         2000, 3000, 4000, 5000]
     ticks = spark.read.parquet(bk.syncpoint_dir)
     got = sorted((r["batch_id"], r["primary_ts"], r["secondary_ts"])

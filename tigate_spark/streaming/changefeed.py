@@ -14,11 +14,12 @@ and raise on timeout); it reports the batches each run committed.
 Pipeline per micro-batch (the hot loop, §3.2):
   raw events → :func:`normalize_events` (S3) → table/event/expr/start-ts
   filters (F1-F4) → column selector (P1) → start_ts/target_ts range (T2)
-  → ``sink.prepare`` (routing/encoding) → ``sink.process_batch``
-  (K1/K2/K3/K7); then the changefeed, not the sink, appends the
-  progress + syncpoint bookkeeping (T5/T7/T11) — the reference's
-  dispatcher tracks table progress (``table_progress.go:24-44``) and its
-  sinks only write. :meth:`Changefeed._foreach_batch` owns the order.
+  → ``sink.prepare`` (routing/encoding) → the per-table summary →
+  ``sink.process_batch`` (K1/K2/K3/K7); then the changefeed, not the
+  sink, appends the progress + syncpoint bookkeeping (T5/T7/T11) — the
+  reference's dispatcher tracks table progress
+  (``table_progress.go:24-44``) and its sinks only write.
+  :meth:`Changefeed._foreach_batch` owns the order.
 
 The changefeed knows no sink type. :data:`SINKS` maps each URI scheme to
 a :class:`~tigate_spark.streaming.sinks.Sink` class, which reads its own
@@ -351,26 +352,26 @@ class Changefeed:
 
     def _foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """The one per-micro-batch path. It owns every side effect of the
-        batch, in this order: redo WAL, sink write (split at due DDL
-        barriers), bookkeeping, redo checkpoint. The sinks only write.
+        batch, in this order: per-table summary, redo WAL, sink write
+        (split at due DDL barriers), bookkeeping, redo checkpoint. The
+        sinks only write.
 
-        One cache serves every action: the per-table summary, the WAL,
-        the barrier sub-batch filters and the sink's own actions. The
-        summary — one ``groupBy(table_id)`` of min/max commit_ts and count,
-        collected to the driver — is the batch's only bookkeeping
-        aggregate: the commit range (redo, the DDL due-check, syncpoint
-        ticks) and the progress rows are derived from it on the driver.
-        It runs before the sink only when the redo log or a pending DDL
-        needs the range there; otherwise after it, so the sink's first
-        action, not an extra job, fills the cache."""
+        One cache serves every action: the summary, the WAL, the barrier
+        sub-batch filters and the sink's own actions. The summary — one
+        ``groupBy(table_id)`` of min/max commit_ts and count, collected to
+        the driver — always runs first, so it is the action that fills
+        the cache, and it is the batch's only driver-side aggregate: the
+        commit range (redo, the DDL due-check, syncpoint ticks), the
+        progress rows and what a sink reads from ``summary=`` (the
+        replica's touched tables, the storage sink's checkpoint-ts) all
+        come from it. A barrier sub-batch may touch fewer tables than the
+        whole batch, so it gets no summary and its sink works out its own."""
         pending = [d for d in self.ddl_events
                    if d.commit_ts not in self._ddl_applied]
         prepared = self.sink.prepare(batch_df).persist()
         try:
-            summary = None
-            if self.redo is not None or pending:
-                summary = _summarize(prepared)
-            lo, hi = commit_range(summary or [])
+            summary = _summarize(prepared)
+            lo, hi = commit_range(summary)
             # a configured DDL is due in the first micro-batch whose
             # commit range reaches its ts
             due = sorted((d for d in pending
@@ -390,13 +391,15 @@ class Changefeed:
                 self.redo.log_batch(prepared.select(*batch_df.columns),
                                     batch_id, hi=hi, lo=lo)
             if not due:
-                self.sink.process_batch(prepared, batch_id)
+                self.sink.process_batch(prepared, batch_id, summary=summary)
             else:
                 # first-class DDL barrier (T8): the batch splits at each
                 # due barrier, the schema registry records the version
                 # between sub-batches, and the sink applies the DDL
                 # downstream. Each sub-batch carries its own fence, so a
-                # sink that fences replays converges per sub-batch.
+                # sink that fences replays converges per sub-batch, and
+                # no summary: the whole batch's would name tables the
+                # sub-batch does not touch.
                 # Exactly-once across restart: the in-memory applied-set
                 # is lost, but a replayed barrier converges — the
                 # registry append is idempotent and an executing sink
@@ -414,13 +417,9 @@ class Changefeed:
 
                 # prepared is persisted here, so the split owns no cache
                 split_batch_at_ddl(prepared, due, apply_dml, apply_ddl)
-            if summary is None:
-                summary = _summarize(prepared)
-                lo, hi = commit_range(summary)
             # K4 progress + K5 syncpoint ticks: once per micro-batch,
             # after the sink committed, however the barriers split it
-            ticks = self.bookkeeping.record(prepared.sparkSession, summary,
-                                            batch_id)
+            ticks = self.bookkeeping.record(summary, batch_id)
             if ticks:
                 # the downstream ts-map rows a MySQL-sink consumer reads
                 self.sink.mirror_syncpoint(ticks, hi)

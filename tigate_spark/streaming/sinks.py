@@ -128,9 +128,18 @@ class Sink:
         return batch
 
     def process_batch(self, batch_df: DataFrame, batch_id: int,
-                      fence: str | None = None) -> None:
+                      fence: str | None = None,
+                      summary: list | None = None) -> None:
         """Write one prepared micro-batch; at a DDL barrier each sub-batch
-        brings its own ``fence`` for a sink that fences replays."""
+        brings its own ``fence`` for a sink that fences replays.
+
+        ``summary`` is the batch's per-table ``(table_id, min commit_ts,
+        max commit_ts, count)`` rows, which the changefeed has already
+        collected on the driver; a sink may read its touched tables or
+        its commit range there instead of running a job. It is None for
+        a barrier sub-batch (it may touch fewer tables than the batch)
+        and for a direct caller, and the sink then works out what it
+        needs itself."""
         raise NotImplementedError
 
     def apply_ddl(self, ddl) -> None:
@@ -366,13 +375,12 @@ class Bookkeeping:
                     ignore_errors=True,
                 )
 
-    def record(self, spark: SparkSession, summary: list,
-               batch_id: int) -> list[int]:
+    def record(self, summary: list, batch_id: int) -> list[int]:
         """Append the batch's per-table progress rows and, with sync point
         on, its syncpoint ticks; return the ticks. ``summary`` is the
         batch's driver-side ``(table_id, min commit_ts, max commit_ts,
         count)`` rows, which the changefeed collects once per batch; both
-        tables are written from it on the driver (``spark`` runs no job)."""
+        tables are written from it on the driver, with no Spark job."""
         def part(d: str) -> str:
             return os.path.join(
                 d, f"part-{batch_id:05d}-{uuid.uuid4().hex}.parquet")
@@ -447,16 +455,19 @@ class ReplicaSink(Sink):
     table's current version, the newest version, the live version count
     and each version's state schema. It is loaded from disk once per sink
     instance (so a restart reloads it) and advanced only after a manifest
-    file has landed. A batch therefore collects its touched table ids,
-    reads just those tables' current ``table_id=`` dirs with the schema
-    from the manifest (no manifest scan or aggregate, no footer-merged
-    schema, no listing of the data tree), merges with one ``max_by``
-    shuffle and commits: 4 Spark jobs. At most three existence checks
+    file has landed. A batch therefore takes its touched table ids from
+    the changefeed's per-table summary (and collects them only when it
+    comes without one: a barrier sub-batch, a direct caller), reads just
+    those tables' current ``table_id=`` dirs with the schema from the
+    manifest (no manifest scan or aggregate, no footer-merged schema, no
+    listing of the data tree), merges with one ``max_by`` shuffle and
+    commits. The batch reaches the sink unclustered, so the merge's
+    exchange is the only shuffle of its rows. At most three existence checks
     per batch detect another writer (a second sink,
     :func:`vacuum_tombstones`) and reload the manifest, so no committed
     version number is reused.
 
-    The collect is O(touched), not O(tables): at the reference's
+    The touched ids are O(touched), not O(tables): at the reference's
     >1M-table design point (``README.md:5``) a micro-batch touches the
     tables its changes name, bounded by its rows, and the driver holds
     only their ids — the same bound as the manifest rows it writes. The
@@ -488,14 +499,6 @@ class ReplicaSink(Sink):
     def dirs(self) -> list[str]:
         return [self.state_dir]
 
-    def prepare(self, batch: DataFrame) -> DataFrame:
-        # the merge keys on (table_id, pk): pre-clustering the cached
-        # batch on the same key gives the cache full-width parallelism (a
-        # 1-file micro-batch otherwise materializes on one task) and lets
-        # the merge agg reuse the partitioning instead of re-exchanging
-        # the incoming side
-        return batch.repartition(F.col("table_id"), F.col("pk"))
-
     def _manifest(self) -> _Manifest:
         """The driver snapshot, loaded on first use and reloaded when
         another writer has committed past it."""
@@ -504,16 +507,20 @@ class ReplicaSink(Sink):
         return self._snapshot
 
     def process_batch(self, batch_df: DataFrame, batch_id: int,
-                      fence: str | None = None) -> None:
+                      fence: str | None = None,
+                      summary: list | None = None) -> None:
         """Merge one micro-batch into the versioned replica (idempotent
-        under replay, so no fence)."""
+        under replay, so no fence). The touched tables are the
+        ``summary``'s, or collected from the batch without one."""
         spark = batch_df.sparkSession
         snap = self._manifest()
+        have = set(batch_df.columns)
         cols = ["table_id", "pk", "op", "commit_ts", "start_ts", "seq",
-                *[c for c in self.payload_cols if c in batch_df.columns]]
+                *[c for c in self.payload_cols if c in have]]
         incoming = batch_df.select(*cols)
-        touched = [r[0] for r in
-                   incoming.select("table_id").distinct().collect()]
+        rows = summary if summary is not None else \
+            incoming.select("table_id").distinct().collect()
+        touched = [r[0] for r in rows]
         if not touched:
             return
         prev = _scan(spark, self.state_dir, snap, touched)
@@ -533,21 +540,18 @@ class ReplicaSink(Sink):
             F.col("commit_ts"), F.col("start_ts"), op_rank_col(), F.col("seq")
         )
         payload = F.struct(*[F.col(c) for c in cols if c not in ("table_id", "pk")])
-        agg = merged_src.groupBy("table_id", "pk").agg(
+        new_state = merged_src.groupBy("table_id", "pk").agg(
             F.max_by(payload, order_key).alias("w")
-        )
-        new_state = agg.select(
-            "table_id", "pk",
-            *[F.col(f"w.{c}").alias(c) for c in cols if c not in ("table_id", "pk")],
-        )
+        ).select("table_id", "pk", "w.*")
+        schema = new_state.schema
         # data first, manifest second: rows are visible only once their
         # manifest file lands (the commit point); the snapshot advances
         # only after that
         version = snap.newest + 1
         new_state.write.mode("overwrite").partitionBy("table_id").parquet(
             _version_dir(self.state_dir, version))
-        _write_manifest(self.state_dir, version, touched, new_state.schema)
-        snap.advance(version, touched, new_state.schema)
+        _write_manifest(self.state_dir, version, touched, schema)
+        snap.advance(version, touched, schema)
         if snap.n_versions > self.compact_every:
             self.compact(spark)
 
@@ -974,7 +978,8 @@ class ChangelogSink(Sink):
         producer.flush()
 
     def process_batch(self, batch_df: DataFrame, batch_id: int,
-                      fence: str | None = None) -> None:
+                      fence: str | None = None,
+                      summary: list | None = None) -> None:
         # No repartition here: prepare places the (topic, partition)
         # shuffle BELOW the protocol encode, so the expensive per-row
         # encode runs on all cores instead of on the micro-batch's few
@@ -1131,7 +1136,8 @@ class StorageSink(Sink):
         return encode_csv_rows(batch_df, out_col="line")
 
     def process_batch(self, batch_df: DataFrame, batch_id: int,
-                      fence: str | None = None) -> None:
+                      fence: str | None = None,
+                      summary: list | None = None) -> None:
         parts = ["schema_name", "table_name"]
         pre = batch_df
         fmt = _DATE_SEPARATOR_FMT[self.date_separator]
@@ -1159,12 +1165,14 @@ class StorageSink(Sink):
         # metadata checkpoint file at sink root (TiCDC cloudstorage
         # metadata contract: {"checkpoint-ts": N}); 1-row driver-side write.
         # Monotonic: a replayed / out-of-order micro-batch must never move
-        # checkpoint-ts backwards, so max with the previous value.
-        row = batch_df.agg(F.max("commit_ts").alias("ts")).collect()[0]
-        if row["ts"] is not None:
+        # checkpoint-ts backwards, so max with the previous value. The
+        # batch's max commit_ts comes from the summary when there is one.
+        hi = commit_range(summary)[1] if summary is not None else \
+            batch_df.agg(F.max("commit_ts")).collect()[0][0]
+        if hi is not None:
             os.makedirs(self.out_dir, exist_ok=True)
             meta_path = os.path.join(self.out_dir, "metadata")
-            ckpt = int(row["ts"])
+            ckpt = int(hi)
             if os.path.exists(meta_path):
                 with open(meta_path) as f:
                     try:
@@ -1175,14 +1183,14 @@ class StorageSink(Sink):
             with open(tmp, "w") as f:
                 f.write('{"checkpoint-ts":%d}' % ckpt)
             os.replace(tmp, meta_path)
-        if self.file_expiration_days is not None and row["ts"] is not None:
-            self._prune_expired(batch_max_ts=int(row["ts"]))
+        if self.file_expiration_days is not None and hi is not None:
+            self._prune_expired(batch_max_ts=int(hi))
 
     def _prune_expired(self, batch_max_ts: int) -> None:
         """Drop dt= partitions older than file_expiration_days behind
         the newest date (sink.go:694; storage_cleanup test). The batch's
-        own max date — derived from the checkpoint ts the caller already
-        collected, zero extra jobs — gates the scan: the tree glob
+        own max date — the checkpoint ts the caller already has, zero
+        extra jobs — gates the scan: the tree glob
         (O(tables x dates) driver-side at the >1M-table design point)
         runs only on the batch that ADVANCES the date, so steady state
         within a day costs nothing per batch."""
@@ -1232,7 +1240,8 @@ class NoopSink(Sink):
         return cls()
 
     def process_batch(self, batch_df: DataFrame, batch_id: int,
-                      fence: str | None = None) -> None:
+                      fence: str | None = None,
+                      summary: list | None = None) -> None:
         batch_df.write.format("noop").mode("overwrite").save()
 
 

@@ -1118,11 +1118,13 @@ class SqliteApplySink(Sink):
     def process_batch(self, changes: DataFrame, batch_id: int,
                       fence: str | None = None,
                       extra_tables: frozenset[int] | set[int]
-                      = frozenset()) -> None:
+                      = frozenset(),
+                      summary: list | None = None) -> None:
         """Apply one micro-batch (or one DDL-barrier sub-batch — pass a
         distinct ``fence`` per sub-batch then). The default fence is the
         micro-batch id, so a full replay after a crash between sink
-        commit and checkpoint commit short-circuits on the marker."""
+        commit and checkpoint commit short-circuits on the marker. The
+        lanes come from the rows themselves, so ``summary`` goes unused."""
         if extra_tables and self.wide_cols:
             # fail fast at the sink's DDL-accept point, before anything
             # of this batch renders or applies: a full-width sink

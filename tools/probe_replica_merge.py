@@ -4,9 +4,10 @@
 Seeds a :class:`ReplicaSink` with a small state (``--keys`` rows over 4
 tables, 800 by default, the state size of perfbench's ``replica_steady``),
 then merges ``--merges`` batches of ``--rows`` changes each (5 x 5k by
-default) drawn from the same keys. Each batch is a parquet file read and
-clustered by ``(table_id, pk)`` and cached before the timer starts, the
-shape ``Changefeed`` hands the sink, so only ``process_batch`` is timed.
+default) drawn from the same keys. Each batch is a parquet file read,
+passed through ``sink.prepare``, cached and summarized per table before
+the timer starts, the shape ``Changefeed`` hands the sink, so only
+``process_batch`` (given the ``summary=``) is timed.
 Per merge it prints the number of Spark jobs (``nextJobId`` before and
 after), the seconds, and each job's call site; then the final state's
 row count, which must equal ``--keys``.
@@ -77,6 +78,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from tigate_spark.session import get_spark
+    from tigate_spark.streaming.changefeed import _summarize
     from tigate_spark.streaming.sinks import ReplicaSink, read_state
 
     spark = get_spark("probe-replica-merge", cpus=args.cpus)
@@ -94,12 +96,11 @@ def main() -> None:
         sink = ReplicaSink(os.path.join(work, "state"),
                            ["event_type", "value_cents", "user_id"])
         for i, f in enumerate(files):
-            batch = spark.read.parquet(f).repartition("table_id", "pk")
-            batch = batch.persist()
-            batch.count()
+            batch = sink.prepare(spark.read.parquet(f)).persist()
+            summary = _summarize(batch)  # fills the cache, as in the feed
             j0 = jvm_sc.dagScheduler().nextJobId()
             t0 = time.perf_counter()
-            sink.process_batch(batch, i)
+            sink.process_batch(batch, i, summary=summary)
             dt = time.perf_counter() - t0
             j1 = jvm_sc.dagScheduler().nextJobId()
             batch.unpersist()
