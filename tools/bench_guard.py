@@ -1,12 +1,15 @@
 #!/usr/bin/env python
 """Bench regression guard: run bench.py best-of-N and compare per-query
-against a reference BENCH JSON (default BENCH_r02.json, the round-2 mark).
+against a reference BENCH JSON (default BENCH_local4.json, a same-host
+mark: ``SPARK_GRAFT_CPUS=4 python bench.py`` at sf0.1 on a 4-CPU host; run
+the guard with the same ``SPARK_GRAFT_CPUS``).
 
 Host timing noise on this machine is ±30% run-to-run, so the guard takes
 the per-query MINIMUM across N runs before applying the 1.2x tolerance;
 known, documented semantic slowdowns can be waived via WAIVERS.
 
-Usage: python tools/bench_guard.py [--runs 3] [--ref BENCH_r02.json]
+Usage: SPARK_GRAFT_CPUS=4 python tools/bench_guard.py [--runs 3]
+           [--ref BENCH_local4.json]
 Exit nonzero if any unwaived query exceeds tolerance.
 """
 
@@ -22,21 +25,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 TOLERANCE = 1.2
 #: documented semantic changes (query -> reason), exempt from the gate.
-#: (the long-standing dedup_ngram_jaccard waiver was retired in r06: the
-#: single-pass posting rewrite put it at ~0.3x of its mark — and
-#: re-instated in r18, see below.)
-WAIVERS: dict[str, str] = {
-    # r18: the ~0.2 s readings since r06 were CACHE READS — the posting
-    # aggregate was persist()-ed and every warm bench pass after the
-    # first read it (0.182 s at 10x the corpus, scale-independent). The
-    # persist was removed as cross-run result caching; the honest
-    # pipeline reads ~0.83-1.1 s at sf0.1, 1.1-1.5x the r02 mark that
-    # was never an honest-compute mark for this shape. Identical
-    # results; OPTIMIZATION_r18.md §9 has the full record.
-    "dedup_ngram_jaccard": "r18 measurement-honesty fix: pre-r18 "
-                           "readings were persisted-aggregate cache "
-                           "reads, not compute",
-}
+WAIVERS: dict[str, str] = {}
 
 
 def run_bench() -> dict:
@@ -53,7 +42,7 @@ def main() -> None:
     # + loadavg in the artifact), so one guard run already carries the
     # noise robustness the old min-of-3 wrapper provided
     ap.add_argument("--runs", type=int, default=1)
-    ap.add_argument("--ref", default=os.path.join(REPO, "BENCH_r02.json"))
+    ap.add_argument("--ref", default=os.path.join(REPO, "BENCH_local4.json"))
     args = ap.parse_args()
 
     with open(args.ref) as f:

@@ -1,11 +1,12 @@
 #!/usr/bin/env python
-"""Changefeed probe: Spark jobs and wall seconds per micro-batch.
+"""Changefeed probe: Spark jobs, codegen compiles and seconds per micro-batch.
 
 Splits the ``events`` table of a star-schema data dir into 4 parquet files
 ordered by ``event_id`` (the fixed 4-file feed of the streaming tests, one
 file per micro-batch), runs one :class:`Changefeed` on ``--sink`` over it
 to completion, and prints, per micro-batch, the Spark jobs it ran
-(``nextJobId`` before and after ``_foreach_batch``) and its seconds.
+(``nextJobId`` before and after ``_foreach_batch``), the generated
+classes it compiled (``session.codegen_compiles``) and its seconds.
 ``--redo`` turns the redo log on (``consistent.level=eventual``). The
 first batch carries the cold start (codegen, first reads), so compare
 the later ones.
@@ -59,7 +60,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from tigate_spark.config import ChangefeedConfig
-    from tigate_spark.session import get_spark
+    from tigate_spark.session import codegen_compiles, get_spark
     from tigate_spark.streaming.changefeed import Changefeed
 
     spark = get_spark("probe-feed-jobs", cpus=args.cpus)
@@ -76,18 +77,20 @@ def main() -> None:
         rows = []
 
         def counted(batch_df, batch_id):
-            j0 = dag.nextJobId()
+            j0, c0 = dag.nextJobId(), codegen_compiles(spark)
             t0 = time.perf_counter()
             inner(batch_df, batch_id)
             rows.append((batch_id, dag.nextJobId() - j0,
+                         codegen_compiles(spark) - c0,
                          time.perf_counter() - t0))
 
         cf._foreach_batch = counted
         cf.run_to_completion()
         print(f"sink {args.sink}{' + redo' if args.redo else ''}, "
               f"local[{args.cpus}]")
-        for batch_id, jobs, dt in rows:
-            print(f"batch {batch_id}: {jobs} jobs, {dt:.2f} s")
+        for batch_id, jobs, compiles, dt in rows:
+            print(f"batch {batch_id}: {jobs} jobs, {compiles} compiles, "
+                  f"{dt:.2f} s")
     spark.stop()
 
 

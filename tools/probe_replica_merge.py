@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Replica merge probe: Spark jobs and wall seconds per micro-batch merge.
+"""Replica merge probe: Spark jobs, codegen compiles and seconds per merge.
 
 Seeds a :class:`ReplicaSink` with a small state (``--keys`` rows over 4
 tables, 800 by default, the state size of perfbench's ``replica_steady``),
@@ -9,8 +9,9 @@ passed through ``sink.prepare``, cached and summarized per table before
 the timer starts, the shape ``Changefeed`` hands the sink, so only
 ``process_batch`` (given the ``summary=``) is timed.
 Per merge it prints the number of Spark jobs (``nextJobId`` before and
-after), the seconds, and each job's call site; then the final state's
-row count, which must equal ``--keys``.
+after), the generated classes it compiled (``session.codegen_compiles``)
+and the seconds; then the final state's row count, which must equal
+``--keys``.
 
     python tools/probe_replica_merge.py [--cpus 4] [--merges 5]
         [--rows 5000] [--keys 800] [--seed 1]
@@ -57,17 +58,6 @@ def changes(rng, first_seq: int, n: int, keys: int, ts0: int,
     })
 
 
-def job_names(sc, lo: int, hi: int) -> list[str]:
-    store = sc._jsc.sc().statusStore()
-    out = []
-    for j in range(lo, hi):
-        try:
-            out.append(store.job(j).name())
-        except Exception:  # evicted from the status store
-            out.append("?")
-    return out
-
-
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--cpus", type=int, default=4)
@@ -77,13 +67,12 @@ def main() -> None:
     ap.add_argument("--seed", type=int, default=1)
     args = ap.parse_args()
 
-    from tigate_spark.session import get_spark
+    from tigate_spark.session import codegen_compiles, get_spark
     from tigate_spark.streaming.changefeed import _summarize
     from tigate_spark.streaming.sinks import ReplicaSink, read_state
 
     spark = get_spark("probe-replica-merge", cpus=args.cpus)
-    sc = spark.sparkContext
-    jvm_sc = sc._jsc.sc()
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
     rng = np.random.default_rng(args.seed)
     with tempfile.TemporaryDirectory(prefix="probe-replica-") as work:
         files = [os.path.join(work, f"b{i}.parquet")
@@ -98,17 +87,15 @@ def main() -> None:
         for i, f in enumerate(files):
             batch = sink.prepare(spark.read.parquet(f)).persist()
             summary = _summarize(batch)  # fills the cache, as in the feed
-            j0 = jvm_sc.dagScheduler().nextJobId()
+            j0, c0 = dag.nextJobId(), codegen_compiles(spark)
             t0 = time.perf_counter()
             sink.process_batch(batch, i, summary=summary)
             dt = time.perf_counter() - t0
-            j1 = jvm_sc.dagScheduler().nextJobId()
+            jobs = dag.nextJobId() - j0
+            compiles = codegen_compiles(spark) - c0
             batch.unpersist()
             label = "seed" if i == 0 else f"merge {i}"
-            print(f"{label}: {j1 - j0} jobs, {dt:.2f} s")
-            if i:
-                for name in job_names(sc, j0, j1):
-                    print(f"    {name}")
+            print(f"{label}: {jobs} jobs, {compiles} compiles, {dt:.2f} s")
         n = read_state(spark, sink.state_dir).count()
         print(f"final state rows: {n} (keys: {args.keys})")
     spark.stop()
